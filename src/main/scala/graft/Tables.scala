@@ -95,7 +95,7 @@ object Tables {
     * REJECTED: -DminPartitionSize=1k won exactly the two CPU-dense
     * rows (q72b −0.96 s, s20 −0.50 s) and taxed every other row
     * +0.3–1.2 s in 32-task launches over tiny shuffles. */
-  private[graft] def spreadCpu(df: DataFrame, keys: Seq[String]): DataFrame = {
+  private[graft] def spreadCpu(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
     val cores = sc.defaultParallelism
     // Guard on the LEAF scans' size estimate, not the frame's own:
@@ -114,8 +114,7 @@ object Tables {
     // measured on q72b, the plan came out unchanged. Round-robin is
     // never elided, an explicit count is never coalesced, and the
     // default sort-before-repartition keeps it retry-deterministic
-    // (guide §2.5). `keys` is kept in the signature as documentation
-    // of the frame's identity only.
+    // (guide §2.5).
     else df.repartition(cores)
   }
 

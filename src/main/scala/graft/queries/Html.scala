@@ -295,7 +295,7 @@ object Q72bWarcExtract extends GraftQuery {
         expr(s"doc_id div $ArchiveChunk").as("chunk"))
       .agg(concat_ws("", expr(
         "transform(array_sort(collect_list(struct(doc_id, rec))), " +
-          "x_ -> x_.rec)")).as("warc")), Seq("source", "chunk"))
+          "x_ -> x_.rec)")).as("warc")))
     val records = parseArchives(archives)
       .withColumn("doc_id",
         expr("cast(regexp_extract(uri, 'doc/([0-9]+)', 1) as bigint)"))

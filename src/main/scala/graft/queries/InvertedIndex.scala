@@ -58,23 +58,6 @@ object InvertedIndex extends GraftQuery {
       .withColumn("doc_ids", array_join(col("doc_ids"), " "))
       .orderBy(col("df").desc, col("word").asc)
 
-  /** Reference sink (R15): one text part per first letter, lines
-    * `word:[i1 i2 ...]`, ordered df desc / word asc within a letter
-    * (main.cpp:148-183). Partitioned write ≡ the 26-letter work list.
-    * NOTE: partitionBy drops letters with no words; the byte-exact
-    * 26-file contract (empty files included) is
-    * [[graft.sources.TextCorpus.writeLetterFiles]], golden-tested
-    * against the compiled reference binary.
-    */
-  def writeTextIndex(docs: DataFrame, outDir: String): Unit =
-    index(docs)
-      .repartition(col("letter"))
-      .sortWithinPartitions(col("letter"), col("df").desc, col("word").asc)
-      .select(col("letter"), concat(
-        col("word"), lit(":["),
-        array_join(col("doc_ids"), " "), lit("]")).as("value"))
-      .write.mode("overwrite").partitionBy("letter").text(outDir)
-
   val oracle = Some("""
     WITH toks AS (
       SELECT DISTINCT

@@ -85,9 +85,14 @@ object NorthStar {
 
   /** Whitespace tokens, empties dropped (reference tokenizer, R4/R6). */
   private[graft] val toksExpr = "filter(split(text, '\\\\s+'), t -> t != '')"
-  /** Distinct word 3-shingles of `t`; requires size(t) >= 3. */
+  /** Distinct word 3-shingles of `t`; empty when size(t) < 3. The
+    * guard sits inside the expression because a `size(t) >= 3` filter
+    * does not stop Catalyst from evaluating the projection on shorter
+    * rows, where `sequence(1, size(t)-2)` counts down through index 0
+    * and `element_at(t, 0)` throws. */
   private[graft] val shinglesExpr =
-    "array_distinct(transform(sequence(1, size(t)-2), " +
+    "array_distinct(transform(" +
+      "IF(size(t) < 3, array(), sequence(1, size(t)-2)), " +
       "i -> concat_ws(' ', element_at(t,i), element_at(t,i+1), element_at(t,i+2))))"
   /** Non-empty trimmed lines of `text` (q47's intra-doc and q49's
     * cross-doc repetition signals share one definition of "line"). */

@@ -26,16 +26,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *   // => DataFrame(doc_id BIGINT, text STRING), one row per line
   * }}}
   *
-  * Why a connector and not the join in [[TextCorpus.documents]]: the
-  * join version reads through Spark's generic text source and then
-  * must repair `input_file_name()`'s URI encoding to recover ids; the
-  * connector plans ONE InputPartition PER MANIFEST FILE, so the
-  * path→id mapping is carried by the partition itself — no join, no
-  * URI round-trip — and Spark's scheduler distributes the files
-  * exactly like the reference's dynamic work queue distributes them
-  * to mappers (main.cpp:216-226, R2). Column pruning is pushed into
-  * the scan ([[SupportsPushDownRequiredColumns]]): a `count(*)` or
-  * doc_id-only query never materializes line text.
+  * This is the only read path of [[TextCorpus.documents]]. Every
+  * planned chunk carries its manifest file's id, so the path→id
+  * mapping travels with the partition itself — no join against file
+  * names, no URI round-trip that would need percent-decoding — and
+  * Spark's scheduler distributes the chunks exactly like the
+  * reference's dynamic work queue distributes files to mappers
+  * (main.cpp:216-226, R2). Column pruning is pushed into the scan
+  * ([[SupportsPushDownRequiredColumns]]): a `count(*)` or doc_id-only
+  * query never materializes line text.
   *
   * Scale posture (round 9): partition granularity follows Spark's own
   * file-source policy, not the manifest's — one 100 GB corpus file
@@ -45,9 +44,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * and a million tiny files bin-pack into
   * `totalBytes / defaultParallelism`-sized partitions so the
   * scheduler sees thousands of tasks, not millions. The split size
-  * honors `spark.sql.files.maxPartitionBytes` /
-  * `spark.sql.files.openCostInBytes` (overridable per-read via
-  * `.option("maxsplitbytes", …)` / `.option("opencostbytes", …)`).
+  * follows the session's `spark.sql.files.maxPartitionBytes` and
+  * `spark.sql.files.openCostInBytes`.
   * Files are opened through the Hadoop FileSystem API, so any scheme
   * the cluster's Hadoop conf resolves (file://, hdfs://, s3a://)
   * works unchanged.
@@ -59,11 +57,8 @@ class GraftCorpusSource extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    def longOpt(k: String): Option[Long] =
-      Option(opts.get(k)).map(_.trim.toLong)
     new GraftCorpusTable(opts.get("manifest"),
-      longOpt("maxsplitbytes"), longOpt("opencostbytes"),
-      longOpt("maxfilespertrigger").map(_.toInt))
+      Option(opts.get("maxfilespertrigger")).map(_.trim.toInt))
   }
 }
 
@@ -75,7 +70,6 @@ object GraftCorpusTable {
 }
 
 class GraftCorpusTable(manifest: String,
-    maxSplit: Option[Long] = None, openCost: Option[Long] = None,
     maxFilesPerTrigger: Option[Int] = None)
     extends Table with SupportsRead {
   require(manifest != null,
@@ -86,11 +80,10 @@ class GraftCorpusTable(manifest: String,
     util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftCorpusScanBuilder(manifest, maxSplit, openCost, maxFilesPerTrigger)
+    new GraftCorpusScanBuilder(manifest, maxFilesPerTrigger)
 }
 
 class GraftCorpusScanBuilder(manifest: String,
-    maxSplit: Option[Long], openCost: Option[Long],
     maxFilesPerTrigger: Option[Int] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
@@ -111,8 +104,7 @@ class GraftCorpusScanBuilder(manifest: String,
   }
   override def pushedFilters(): Array[Filter] = pushed
   override def build(): Scan =
-    new GraftCorpusScan(manifest, required, pushed, maxSplit, openCost,
-      maxFilesPerTrigger)
+    new GraftCorpusScan(manifest, required, pushed, maxFilesPerTrigger)
 }
 
 object GraftCorpusScan {
@@ -151,8 +143,9 @@ object GraftCorpusScan {
     * corpora still fan out to every core instead of one packed task. */
   private[sources] def maxSplitBytes(totalCost: Long, parallelism: Int,
       maxPartitionBytes: Long, openCost: Long): Long =
-    // floor of 1: openCost=0 (a supported option) with a tiny corpus
-    // on a wide cluster yields split=0, and `0L until len by 0` throws
+    // floor of 1: openCost=0 (a valid session setting) with a tiny
+    // corpus on a wide cluster yields split=0, and `0L until len by 0`
+    // throws
     math.max(1L, math.min(maxPartitionBytes,
       math.max(openCost, totalCost / math.max(1, parallelism))))
 
@@ -189,13 +182,12 @@ object GraftCorpusScan {
     parts.result()
   }
 
-  /** Resolve split/open-cost knobs: per-read option, else the
-    * session's spark.sql.files.* values. */
-  private[sources] def sizing(maxSplit: Option[Long],
-      openCost: Option[Long]): (Long, Long, Int) = {
+  /** The session's spark.sql.files.* split and open-cost sizes and
+    * its default parallelism. */
+  private[sources] def sizing(): (Long, Long, Int) = {
     val sess = org.apache.spark.sql.SparkSession.active
-    (maxSplit.getOrElse(sess.sessionState.conf.filesMaxPartitionBytes),
-      openCost.getOrElse(sess.sessionState.conf.filesOpenCostInBytes),
+    (sess.sessionState.conf.filesMaxPartitionBytes,
+      sess.sessionState.conf.filesOpenCostInBytes,
       sess.sparkContext.defaultParallelism)
   }
 
@@ -243,8 +235,7 @@ object GraftCorpusScan {
 }
 
 class GraftCorpusScan(manifest: String, required: StructType,
-    pushed: Array[Filter], maxSplit: Option[Long] = None,
-    openCost: Option[Long] = None,
+    pushed: Array[Filter],
     maxFilesPerTrigger: Option[Int] = None) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -258,7 +249,7 @@ class GraftCorpusScan(manifest: String, required: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     val survivors = TextCorpus.manifestEntries(manifest)
       .filter { case (_, id) => pushed.forall(GraftCorpusScan.keeps(id, _)) }
-    val (mpb, oc, par) = GraftCorpusScan.sizing(maxSplit, openCost)
+    val (mpb, oc, par) = GraftCorpusScan.sizing()
     GraftCorpusScan.planChunks(
       GraftCorpusScan.withLengths(survivors,
         org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()),
@@ -273,7 +264,7 @@ class GraftCorpusScan(manifest: String, required: StructType,
         org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new GraftCorpusMicroBatchStream(manifest, createReaderFactory(),
-      maxSplit, openCost, maxFilesPerTrigger)
+      maxFilesPerTrigger)
 }
 
 /** Offset = how many manifest entries have been processed. The
@@ -303,8 +294,7 @@ case class GraftManifestOffset(n: Long) extends Offset {
   * manifest entries, the rest drain over subsequent triggers (exactly
   * the FileStreamSource pattern). */
 class GraftCorpusMicroBatchStream(manifest: String,
-    factory: PartitionReaderFactory, maxSplit: Option[Long] = None,
-    openCost: Option[Long] = None, maxFilesPerTrigger: Option[Int] = None)
+    factory: PartitionReaderFactory, maxFilesPerTrigger: Option[Int] = None)
     extends MicroBatchStream with SupportsAdmissionControl {
   /** Last successfully-observed manifest size. latestOffset() runs on
     * every trigger against a file a producer may be rewriting in
@@ -377,7 +367,7 @@ class GraftCorpusMicroBatchStream(manifest: String,
     // Same split/bin-pack policy as the batch scan: a batch of a
     // million tiny appended files packs into bounded partitions, one
     // huge appended file splits across the cluster.
-    val (mpb, oc, par) = GraftCorpusScan.sizing(maxSplit, openCost)
+    val (mpb, oc, par) = GraftCorpusScan.sizing()
     GraftCorpusScan.planChunks(
       GraftCorpusScan.withLengths(batch,
         org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()),

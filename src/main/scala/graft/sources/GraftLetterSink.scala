@@ -24,17 +24,16 @@ import org.apache.spark.util.SerializableConfiguration
   *   // => outDir/a.txt … z.txt, empty files for absent letters
   * }}}
   *
-  * Why a connector and not the driver-side rename in
-  * [[TextCorpus.writeLetterFilesFromIndex]]: the rename path finalizes
-  * through the driver's local filesystem view — O(26) but not
-  * task-atomic, and on an object store a failed/speculated task's
-  * half-written part file is observable. Here the output commits
-  * through Spark's V2 committer protocol: each task stages its letter
-  * files under a job-scoped staging dir and reports them in its
-  * commit MESSAGE; only the driver-side `commit(messages)` publishes
-  * staged files to their final names (one rename per letter through
-  * the Hadoop FS API), and `abort` removes the staging dir — failed
-  * or speculatively-duplicated task attempts can never surface.
+  * This is the only writer behind
+  * [[TextCorpus.writeLetterFilesFromIndex]], and it is task-atomic:
+  * the output commits through Spark's V2 committer protocol. Each
+  * task stages its letter files under a job-scoped staging dir and
+  * reports them in its commit MESSAGE; only the driver-side
+  * `commit(messages)` publishes staged files to their final names (one
+  * rename per letter through the Hadoop FS API), and `abort` removes
+  * the staging dir — a failed or speculatively-duplicated task
+  * attempt's half-written file can never surface, on an object store
+  * included.
   *
   * Spark-first detail: the sink itself declares
   * [[RequiresDistributionAndOrdering]] — clustered by `letter`,

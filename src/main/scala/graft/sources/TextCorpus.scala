@@ -1,10 +1,9 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.queries.InvertedIndex
 
@@ -16,17 +15,14 @@ import graft.queries.InvertedIndex
   * a letter with no words still yielding an empty file
   * (main.cpp:148-183).
   *
-  * Spark-first shape: the manifest (tiny, driver-side) becomes a
-  * broadcast path→id map; the corpus itself is read by the
-  * distributed text source — one task per split, which replaces the
-  * reference's mutex-guarded work queue (main.cpp:216-226). Relative
-  * manifest entries resolve against the manifest's directory.
+  * Spark-first shape: the manifest (tiny, driver-side) is planned by
+  * the graft-corpus connector into newline-aligned byte-range splits
+  * that carry their file's id — one task per split, which replaces the
+  * reference's mutex-guarded work queue (main.cpp:216-226). The letter
+  * files are committed by the graft-letters sink. Relative manifest
+  * entries resolve against the manifest's directory.
   */
 object TextCorpus {
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("text", StringType, nullable = true)))
-
   /** Parse a manifest into (path, 1-based id), resolving relative
     * paths against the manifest's parent directory. */
   def manifestEntries(manifestPath: String): Seq[(String, Long)] =
@@ -43,9 +39,9 @@ object TextCorpus {
     * manifest state and the next trigger sees the rest. */
   def manifestEntries(manifestPath: String,
       strict: Boolean): Seq[(String, Long)] = {
-    // Absolute + normalized: the path→id map is joined against
-    // input_file_name(), which always reports absolute paths — a
-    // relative entry would silently match nothing.
+    // Absolute + normalized: a bare `manifest.txt` has no parent to
+    // resolve relative entries against, and every planned path must be
+    // absolute so an executor never resolves it against its own CWD.
     val p = Paths.get(manifestPath).toAbsolutePath.normalize
     val lines = Files.readAllLines(p)
     if (lines.isEmpty) return Seq.empty
@@ -66,107 +62,30 @@ object TextCorpus {
 
   /** `documents`-shaped DataFrame (doc_id, text) from a manifest: one
     * row per LINE of each corpus file (the reference streams lines,
-    * main.cpp:232-238; Q1's tokenizer splits them further).
-    *
-    * input_file_name() reports the Hadoop Path URI, which
-    * percent-encodes spaces and non-ASCII characters — joining the
-    * raw URI against plain manifest paths would silently drop those
-    * files. url_decode restores the literal path; the '+'→"%2B"
-    * pre-pass protects literal pluses (url_decode is form-decoding,
-    * which would otherwise turn them into spaces). Parity is pinned
-    * by GoldenSpec's space/non-ASCII corpus. */
-  def documents(spark: SparkSession, manifestPath: String): DataFrame = {
-    // Flagged alternate path: the DSv2 connector plans one partition
-    // per manifest file and carries the id in the partition — no
-    // path join, no input_file_name() URI repair. Same (doc_id, text)
-    // contract; GoldenSpec runs the full golden suite through it.
-    if (spark.conf.getOption("spark.graft.corpus.dsv2").exists(_.toBoolean))
-      return spark.read.format("graft-corpus")
-        .option("manifest",
-          Paths.get(manifestPath).toAbsolutePath.normalize.toString)
-        .load()
-    val entries = manifestEntries(manifestPath)
-    if (entries.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], docSchema)
-    val ids = spark.createDataFrame(entries).toDF("path", "doc_id")
-    spark.read.text(entries.map(_._1): _*)
-      .withColumn("path", url_decode(
-        regexp_replace(
-          regexp_replace(input_file_name(), "^file:/+", "/"), "\\+", "%2B")))
-      .join(broadcast(ids), "path")
-      .select(col("doc_id"), col("value").as("text"))
-  }
+    * main.cpp:232-238; Q1's tokenizer splits them further). Read by
+    * the graft-corpus connector ([[GraftCorpusSource]]): each split
+    * carries its file's id, so file names are never round-tripped
+    * through a URI and spaces or pluses in them need no repair. */
+  def documents(spark: SparkSession, manifestPath: String): DataFrame =
+    spark.read.format("graft-corpus").option("manifest", manifestPath).load()
 
-  /** Reference-exact sink: 26 files `<letter>.txt` in outDir. The
-    * distributed write is a partitioned text write sorted within
-    * partitions; the driver only renames the per-letter part file and
-    * touches empty files for absent letters (O(26) finalization). */
+  /** Reference-exact sink: 26 files `<letter>.txt` in outDir. */
   def writeLetterFiles(docs: DataFrame, outDir: String): Unit =
     writeLetterFilesFromIndex(InvertedIndex.index(docs), outDir)
 
   /** Same sink over a prebuilt index DF (word, letter, df, doc_ids) —
-    * also the foreachBatch target for the streaming S6 pipeline. */
-  def writeLetterFilesFromIndex(index: DataFrame, outDir: String): Unit = {
-    val spark = index.sparkSession
-    // DEFAULT path (VERDICT r14 next #7): the DSv2 graft-letters sink
-    // commits the 26 files through Spark's V2 committer (task-staged
-    // files published only at driver commit — atomic on object
-    // stores, the 100 TB posture) and declares its own cluster-by-
-    // letter distribution + (df desc, word) ordering, so no explicit
-    // repartition/sort is needed here. GoldenSpec byte-matches the
-    // golden suite through BOTH paths; set
-    // spark.graft.letters.dsv2=false for the classic driver-rename
-    // writer (local-filesystem fallback).
-    if (spark.conf.getOption("spark.graft.letters.dsv2").forall(_.toBoolean)) {
-      index.select(col("letter"), col("word"), col("df").cast("long").as("df"),
-        concat(col("word"), lit(":["),
-          array_join(col("doc_ids"), " "), lit("]")).as("line"))
-        .write.format("graft-letters").option("path", outDir)
-        .mode("overwrite").save()
-      return
-    }
-    val tmp = s"$outDir/_parts"
-    index
-      .repartition(col("letter"))
-      .sortWithinPartitions(col("letter"), col("df").desc, col("word").asc)
-      .select(col("letter"), concat(
-        col("word"), lit(":["),
-        array_join(col("doc_ids"), " "), lit("]")).as("value"))
-      .write.mode("overwrite").partitionBy("letter").text(tmp)
-    val out = Paths.get(outDir)
-    Files.createDirectories(out)
-    ('a' to 'z').foreach { letter =>
-      val target = out.resolve(s"$letter.txt")
-      val partDir = Paths.get(tmp, s"letter=$letter")
-      if (Files.isDirectory(partDir)) {
-        // repartition(letter) routes each letter to exactly one task →
-        // at most one part file per letter dir. Assert rather than
-        // silently keep whichever part happened to move last: two
-        // parts would mean the partitioning contract broke and the
-        // within-letter global order is no longer guaranteed.
-        import scala.jdk.CollectionConverters._
-        val parts = Files.list(partDir).iterator().asScala
-          .filter(_.getFileName.toString.startsWith("part-")).toSeq
-        if (parts.size > 1)
-          throw new IllegalStateException(
-            s"letter '$letter': expected one part file, found ${parts.size} " +
-              s"(${parts.map(_.getFileName).mkString(", ")}) — " +
-              "repartition-by-letter invariant broken")
-        parts.headOption match {
-          case Some(f) => Files.move(f, target, StandardCopyOption.REPLACE_EXISTING)
-          case None    => Files.write(target, Array.emptyByteArray)
-        }
-      } else {
-        Files.write(target, Array.emptyByteArray) // empty letter → empty file
-      }
-    }
-    // clean the staging dir
-    import scala.jdk.CollectionConverters._
-    Files.walk(Paths.get(tmp)).iterator().asScala.toSeq.reverse
-      .foreach(Files.deleteIfExists(_))
-    val _ = spark
-  }
+    * also the foreachBatch target for the streaming S6 pipeline. The
+    * graft-letters sink ([[GraftLetterSink]]) commits the 26 files
+    * through Spark's V2 committer (task-staged files published only at
+    * driver commit) and declares its own cluster-by-letter distribution
+    * and (df desc, word) ordering, so no repartition or sort is needed
+    * here. */
+  def writeLetterFilesFromIndex(index: DataFrame, outDir: String): Unit =
+    index.select(col("letter"), col("word"), col("df").cast("long").as("df"),
+      concat(col("word"), lit(":["),
+        array_join(col("doc_ids"), " "), lit("]")).as("line"))
+      .write.format("graft-letters").option("path", outDir)
+      .mode("overwrite").save()
 
   /** End-to-end reference CLI equivalent: manifest in, a.txt…z.txt out. */
   def buildIndex(spark: SparkSession, manifestPath: String, outDir: String): Unit =

@@ -26,36 +26,6 @@ class GoldenSpec extends SparkSpec {
     assertMatchesExpected(caseDir, outDir, c)
   }
 
-  test("all golden cases byte-match through the DSv2 graft-corpus source") {
-    // Same five corpora, routed through the connector instead of the
-    // text-source + path-join read: one partition per manifest file,
-    // ids carried by the partitions. Byte-equality against the same
-    // reference outputs proves the two read paths are interchangeable.
-    withConfs("spark.graft.corpus.dsv2" -> "true") {
-      for (c <- cases) {
-        val caseDir = root.resolve(c)
-        val outDir = Files.createTempDirectory(s"golden_dsv2_$c").toString
-        TextCorpus.buildIndex(spark, caseDir.resolve("manifest.txt").toString, outDir)
-        assertMatchesExpected(caseDir, outDir, s"$c-via-dsv2")
-      }
-    }
-  }
-
-  test("all golden cases byte-match through the classic driver-rename writer") {
-    // The DSv2 V2-committer sink is the DEFAULT write path (round 15);
-    // the classic partitioned-text + driver-rename writer stays as the
-    // flagged fallback. Byte equality against the same reference
-    // outputs proves the two write paths remain interchangeable.
-    withConfs("spark.graft.letters.dsv2" -> "false") {
-      for (c <- cases) {
-        val caseDir = root.resolve(c)
-        val outDir = Files.createTempDirectory(s"golden_sink_$c").toString
-        TextCorpus.buildIndex(spark, caseDir.resolve("manifest.txt").toString, outDir)
-        assertMatchesExpected(caseDir, outDir, s"$c-via-classic-writer")
-      }
-    }
-  }
-
   test("growing manifest streamed through the connector converges to the golden files") {
     // End-to-end marriage of the two extension rungs: the DSv2
     // connector's micro-batch stream feeds the incremental inverted
@@ -106,13 +76,10 @@ class GoldenSpec extends SparkSpec {
   }
 
   test("manifest join survives spaces and pluses in file names") {
-    // input_file_name() reports percent-encoded URIs; without the
-    // url_decode in TextCorpus.documents these files silently vanish
-    // from the join (no error, just missing doc_ids). A literal '+'
-    // additionally probes the form-decoding hazard ('+' → ' '). The
-    // container JVM's file.encoding is ASCII, so non-ASCII names are
-    // untestable here; percent-escapes are byte-wise, covered by the
-    // same decode path.
+    // A read that recovers ids from file URIs would see these names
+    // percent-encoded (and a form decoder would turn '+' into ' '),
+    // silently dropping the files. The connector carries each file's
+    // id in its partition, so both names must read back unchanged.
     val dir = Files.createTempDirectory("golden_enc")
     Files.write(dir.resolve("with space.txt"), "alpha bravo".getBytes("UTF-8"))
     Files.write(dir.resolve("a+b.txt"), "charlie delta".getBytes("UTF-8"))
@@ -121,6 +88,34 @@ class GoldenSpec extends SparkSpec {
     val docs = TextCorpus.documents(spark, dir.resolve("manifest.txt").toString)
     val rows = docs.collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(rows === Set((1L, "alpha bravo"), (2L, "charlie delta")))
+  }
+
+  test("CR-only line endings give the same letter files as LF endings") {
+    // The connector splits lines only on '\n', so a CR-only file reads
+    // as one long line; the tokenizer treats a lone '\r' as whitespace,
+    // so the index (per file, not per line) must not change.
+    val lfCase = root.resolve("skew")
+    val crCase = Files.createTempDirectory("golden_cr")
+    Files.copy(lfCase.resolve("manifest.txt"), crCase.resolve("manifest.txt"))
+    for ((path, _) <- TextCorpus.manifestEntries(
+        lfCase.resolve("manifest.txt").toString)) {
+      val rel = lfCase.toAbsolutePath.normalize.relativize(Paths.get(path))
+      val bytes = Files.readAllBytes(Paths.get(path))
+      assert(bytes.contains('\n'.toByte), s"$rel has no LF to convert")
+      Files.createDirectories(crCase.resolve(rel).getParent)
+      Files.write(crCase.resolve(rel),
+        bytes.map(b => if (b == '\n'.toByte) '\r'.toByte else b))
+    }
+    val lfOut = Files.createTempDirectory("golden_lf_out").toString
+    val crOut = Files.createTempDirectory("golden_cr_out").toString
+    TextCorpus.buildIndex(spark, lfCase.resolve("manifest.txt").toString, lfOut)
+    TextCorpus.buildIndex(spark, crCase.resolve("manifest.txt").toString, crOut)
+    for (letter <- 'a' to 'z') {
+      val lf = Files.readAllBytes(Paths.get(lfOut, s"$letter.txt"))
+      val cr = Files.readAllBytes(Paths.get(crOut, s"$letter.txt"))
+      assert(java.util.Arrays.equals(lf, cr), s"letter $letter differs")
+    }
+    assertMatchesExpected(lfCase, crOut, "skew-with-cr-endings")
   }
 
   private def assertMatchesExpected(caseDir: java.nio.file.Path,

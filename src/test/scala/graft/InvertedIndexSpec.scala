@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.InvertedIndex
+import graft.sources.TextCorpus
 import org.apache.spark.sql.Row
 
 /** SURVEY §1.4 fine print — the reference's correctness contract. */
@@ -53,11 +54,12 @@ class InvertedIndexSpec extends SparkSpec {
 
   test("reference text sink format word:[i1 i2 ...]") {
     val df = Seq((1L, "apple"), (2L, "apple banana")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("ii_sink").toString
-    InvertedIndex.writeTextIndex(df, tmp)
-    val aLines = spark.read.text(s"$tmp/letter=a").as[String].collect()
-    assert(aLines.toSeq === Seq("apple:[1 2]"))
-    val bLines = spark.read.text(s"$tmp/letter=b").as[String].collect()
-    assert(bLines.toSeq === Seq("banana:[2]"))
+    val tmp = java.nio.file.Files.createTempDirectory("ii_sink")
+    TextCorpus.writeLetterFiles(df, tmp.toString)
+    def letter(c: Char) = new String(
+      java.nio.file.Files.readAllBytes(tmp.resolve(s"$c.txt")), "UTF-8")
+    assert(letter('a') === "apple:[1 2]\n")
+    assert(letter('b') === "banana:[2]\n")
+    for (c <- 'c' to 'z') assert(letter(c) === "", s"$c.txt not empty")
   }
 }

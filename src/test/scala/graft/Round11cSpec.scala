@@ -23,51 +23,49 @@ class Round11cSpec extends SparkSpec {
     }.toMap
 
   test("corpus-source task killed mid-read on attempt 0: retried read keeps golden output byte-identical") {
-    withConfs("spark.graft.corpus.dsv2" -> "true") {
-      val caseDir = root.resolve("skew")
-      val manifest = caseDir.resolve("manifest.txt").toString
+    val caseDir = root.resolve("skew")
+    val manifest = caseDir.resolve("manifest.txt").toString
 
-      val clean = Files.createTempDirectory("ginj_clean").toString
-      TextCorpus.buildIndex(spark, manifest, clean)
+    val clean = Files.createTempDirectory("ginj_clean").toString
+    TextCorpus.buildIndex(spark, manifest, clean)
 
-      val faulted = Files.createTempDirectory("ginj_fault").toString
-      // Accumulator updates from FAILED tasks are discarded by Spark,
-      // so the kill count lives in a JVM-static counter instead
-      // (local mode: executor threads share this JVM). The retry
-      // count can use a normal accumulator — retries succeed.
-      Round11cSpec.kills.set(0)
-      val retries = spark.sparkContext.longAccumulator("observed_retries")
-      import spark.implicits._
-      val docs = TextCorpus.documents(spark, manifest)
-      val flaky = docs.as[(Long, String)].mapPartitions { it =>
-        val tc = org.apache.spark.TaskContext.get()
-        if (tc != null && tc.attemptNumber() == 0) {
-          // First attempt: serve one row, then die mid-read — the
-          // reader is already open and has already emitted data, the
-          // worst point to lose a task.
-          new Iterator[(Long, String)] {
-            private var served = 0
-            def hasNext: Boolean = {
-              if (served >= 1 && it.hasNext) {
-                Round11cSpec.kills.incrementAndGet()
-                throw new RuntimeException("injected mid-read task death (attempt 0)")
-              }
-              it.hasNext
+    val faulted = Files.createTempDirectory("ginj_fault").toString
+    // Accumulator updates from FAILED tasks are discarded by Spark,
+    // so the kill count lives in a JVM-static counter instead
+    // (local mode: executor threads share this JVM). The retry
+    // count can use a normal accumulator — retries succeed.
+    Round11cSpec.kills.set(0)
+    val retries = spark.sparkContext.longAccumulator("observed_retries")
+    import spark.implicits._
+    val docs = TextCorpus.documents(spark, manifest)
+    val flaky = docs.as[(Long, String)].mapPartitions { it =>
+      val tc = org.apache.spark.TaskContext.get()
+      if (tc != null && tc.attemptNumber() == 0) {
+        // First attempt: serve one row, then die mid-read — the
+        // reader is already open and has already emitted data, the
+        // worst point to lose a task.
+        new Iterator[(Long, String)] {
+          private var served = 0
+          def hasNext: Boolean = {
+            if (served >= 1 && it.hasNext) {
+              Round11cSpec.kills.incrementAndGet()
+              throw new RuntimeException("injected mid-read task death (attempt 0)")
             }
-            def next(): (Long, String) = { served += 1; it.next() }
+            it.hasNext
           }
-        } else {
-          if (tc != null && tc.attemptNumber() > 0) retries.add(1)
-          it
+          def next(): (Long, String) = { served += 1; it.next() }
         }
-      }.toDF("doc_id", "text")
-      TextCorpus.writeLetterFiles(flaky, faulted)
+      } else {
+        if (tc != null && tc.attemptNumber() > 0) retries.add(1)
+        it
+      }
+    }.toDF("doc_id", "text")
+    TextCorpus.writeLetterFiles(flaky, faulted)
 
-      assert(Round11cSpec.kills.get() > 0, "the mid-read failure never fired")
-      assert(retries.value > 0, "no task retry was observed — master must be local[n, 2]")
-      assert(letterBytes(faulted) == letterBytes(clean),
-        "golden letter files diverged after a mid-read task retry")
-    }
+    assert(Round11cSpec.kills.get() > 0, "the mid-read failure never fired")
+    assert(retries.value > 0, "no task retry was observed — master must be local[n, 2]")
+    assert(letterBytes(faulted) == letterBytes(clean),
+      "golden letter files diverged after a mid-read task retry")
   }
 
   test("speculative duplicate attempt: two readers over the same partition produce identical rows") {
@@ -76,12 +74,10 @@ class Round11cSpec extends SparkSpec {
     // read path has no attempt-scoped state: reading the same scan
     // twice (fresh readers over the same InputPartitions) must give
     // identical (doc_id, text) multisets.
-    withConfs("spark.graft.corpus.dsv2" -> "true") {
-      val manifest = root.resolve("dupes").resolve("manifest.txt").toString
-      def snapshot() = TextCorpus.documents(spark, manifest)
-        .orderBy("doc_id", "text").collect().toSeq.map(_.toSeq)
-      assert(snapshot() == snapshot())
-    }
+    val manifest = root.resolve("dupes").resolve("manifest.txt").toString
+    def snapshot() = TextCorpus.documents(spark, manifest)
+      .orderBy("doc_id", "text").collect().toSeq.map(_.toSeq)
+    assert(snapshot() == snapshot())
   }
 }
 

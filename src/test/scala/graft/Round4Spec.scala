@@ -37,6 +37,25 @@ class Round4Spec extends SparkSpec {
     }
   }
 
+  test("q18b: documents with fewer than 3 tokens add no rows and no error") {
+    def docsDir(rows: Seq[(Long, String)]): String = {
+      val dir = java.nio.file.Files.createTempDirectory("q18b_short").toString
+      rows.map { case (id, text) => (id, text, "en", "s", text.length.toLong) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      dir
+    }
+    val copy = (1 to 20).map(i => s"word$i").mkString(" ")
+    val long = Seq(1L -> copy, 2L -> copy,
+      3L -> (1 to 20).map(i => s"other$i").mkString(" "))
+    val short = Seq(4L -> "two tokens", 5L -> "one", 6L -> "")
+    def pairs(dir: String) =
+      Q18bDedupMinHash.run(spark, dir).collect().map(_.toSeq).toSeq
+    val expected = pairs(docsDir(long))
+    assert(expected.map(r => (r(0), r(1))) === Seq((1L, 2L)))
+    assert(pairs(docsDir(long ++ short)) === expected)
+  }
+
   test("q30b approx flags hold and exact columns agree with q30") {
     val approx = Q30bApproxPercentiles.run(spark, sf01).collect()
     assert(approx.length === 3) // one row per return flag

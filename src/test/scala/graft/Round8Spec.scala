@@ -157,44 +157,44 @@ class Round8Spec extends SparkSpec {
       .get("src/test/resources/golden/tiny/manifest.txt")
       .toAbsolutePath.normalize.toString
     val nFiles = graft.sources.TextCorpus.manifestEntries(manifest).size
-    // opencostbytes ≥ maxsplitbytes forces one partition per file
+    // an open cost ≥ the split size forces one partition per file
     // regardless of the context's core count — without the pin, the
     // round-9 bin-packer's split size depends on defaultParallelism,
     // which is whatever master the FIRST suite to touch the shared
     // context used (local[2] if ExtensionsSpec won the race)
-    val df = spark.read.format("graft-corpus")
-      .option("manifest", manifest)
-      .option("maxsplitbytes", s"${128 * 1024 * 1024}")
-      .option("opencostbytes", s"${128 * 1024 * 1024}")
-      .load()
-    // schema contract and per-file partition planning
-    assert(df.schema.fieldNames.toSeq === Seq("doc_id", "text"))
-    assert(df.rdd.getNumPartitions === nFiles && nFiles > 1)
-    // rows identical to the classic text-source + path-join read
-    val classic = graft.sources.TextCorpus.documents(spark, manifest)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val viaDsv2 = df.collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(viaDsv2 === classic && viaDsv2.nonEmpty)
-    // column pruning reaches the scan: a doc_id-only query must plan
-    // a scan whose ReadSchema has no text column
-    val pruned = df.select(col("doc_id"))
-    val scans = pruned.queryExecution.executedPlan.collect {
-      case b: BatchScanExec => b.scan
+    val pin = s"${128 * 1024 * 1024}"
+    withConfs("spark.sql.files.maxPartitionBytes" -> pin,
+        "spark.sql.files.openCostInBytes" -> pin) {
+      val df = spark.read.format("graft-corpus")
+        .option("manifest", manifest).load()
+      // schema contract and per-file partition planning
+      assert(df.schema.fieldNames.toSeq === Seq("doc_id", "text"))
+      assert(df.rdd.getNumPartitions === nFiles && nFiles > 1)
+      // rows identical to an independent java.nio line split
+      val expected = ManifestLines(manifest).toSet
+      val viaDsv2 = df.collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(viaDsv2 === expected && viaDsv2.nonEmpty)
+      // column pruning reaches the scan: a doc_id-only query must plan
+      // a scan whose ReadSchema has no text column
+      val pruned = df.select(col("doc_id"))
+      val scans = pruned.queryExecution.executedPlan.collect {
+        case b: BatchScanExec => b.scan
+      }
+      assert(scans.nonEmpty)
+      assert(scans.head.readSchema().fieldNames.toSeq === Seq("doc_id"))
+      // filter pushdown becomes file pruning: a doc_id equality must
+      // plan exactly ONE partition (one file opened), and ranges prune
+      // to the matching id set — while the filter is still re-applied
+      // above the scan, so results stay exact
+      val one = df.filter(col("doc_id") === 2)
+      assert(one.rdd.getNumPartitions === 1)
+      assert(one.collect().map(_.getLong(0)).distinct.toSeq === Seq(2L))
+      val range = df.filter(col("doc_id") > 1 && col("doc_id") <= nFiles)
+      assert(range.rdd.getNumPartitions === nFiles - 1)
+      assert(range.select(countDistinct(col("doc_id"))).head.getLong(0)
+        === (nFiles - 1).toLong)
     }
-    assert(scans.nonEmpty)
-    assert(scans.head.readSchema().fieldNames.toSeq === Seq("doc_id"))
-    // filter pushdown becomes file pruning: a doc_id equality must
-    // plan exactly ONE partition (one file opened), and ranges prune
-    // to the matching id set — while the filter is still re-applied
-    // above the scan, so results stay exact
-    val one = df.filter(col("doc_id") === 2)
-    assert(one.rdd.getNumPartitions === 1)
-    assert(one.collect().map(_.getLong(0)).distinct.toSeq === Seq(2L))
-    val range = df.filter(col("doc_id") > 1 && col("doc_id") <= nFiles)
-    assert(range.rdd.getNumPartitions === nFiles - 1)
-    assert(range.select(countDistinct(col("doc_id"))).head.getLong(0)
-      === (nFiles - 1).toLong)
   }
 
   test("q46/q47/q48 physical plans hold the at-scale shape") {

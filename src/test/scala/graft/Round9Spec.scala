@@ -163,22 +163,22 @@ class Round9Spec extends SparkSpec {
       "notrail.txt" -> "x y\nlast line no newline",
       "crlf.txt" -> "one\r\ntwo\r\n"))
     val manifest = dir.resolve("manifest.txt").toString
-    val df = spark.read.format("graft-corpus")
-      .option("manifest", manifest)
-      .option("maxsplitbytes", "50").option("opencostbytes", "10")
-      .load()
-    // the dominant file (3500 B) must break into many ranges: far more
-    // partitions than the 5 manifest files
-    assert(df.rdd.getNumPartitions > 20,
-      s"expected byte-range splits, got ${df.rdd.getNumPartitions}")
-    val viaSplits = df.collect().map(r => (r.getLong(0), r.getString(1)))
-    val classic = graft.sources.TextCorpus.documents(spark, manifest)
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    // multiset equality: a lost boundary line or a double-read one
-    // both break this
-    assert(viaSplits.groupBy(identity).view.mapValues(_.length).toMap ===
-      classic.groupBy(identity).view.mapValues(_.length).toMap)
-    assert(viaSplits.length === 500 + 100 + 0 + 2 + 2)
+    withConfs("spark.sql.files.maxPartitionBytes" -> "50",
+        "spark.sql.files.openCostInBytes" -> "10") {
+      val df = spark.read.format("graft-corpus")
+        .option("manifest", manifest).load()
+      // the dominant file (3500 B) must break into many ranges: far
+      // more partitions than the 5 manifest files
+      assert(df.rdd.getNumPartitions > 20,
+        s"expected byte-range splits, got ${df.rdd.getNumPartitions}")
+      val viaSplits = df.collect().map(r => (r.getLong(0), r.getString(1)))
+      val expected = ManifestLines(manifest)
+      // multiset equality: a lost boundary line or a double-read one
+      // both break this
+      assert(viaSplits.groupBy(identity).view.mapValues(_.length).toMap ===
+        expected.groupBy(identity).view.mapValues(_.length).toMap)
+      assert(viaSplits.length === 500 + 100 + 0 + 2 + 2)
+    }
   }
 
   test("graft-corpus bin-packs many tiny files into few partitions") {
@@ -187,13 +187,15 @@ class Round9Spec extends SparkSpec {
     val manifest = dir.resolve("manifest.txt").toString
     // zero open cost + large cap → split size becomes totalBytes/cores
     // and the 40 files pack into about one bin per core
-    val packed = spark.read.format("graft-corpus")
-      .option("manifest", manifest)
-      .option("maxsplitbytes", s"${10 * 1024 * 1024}")
-      .option("opencostbytes", "0")
-      .load()
-    assert(packed.rdd.getNumPartitions <= 10,
-      s"expected bin-packing, got ${packed.rdd.getNumPartitions}")
+    val packed = withConfs(
+        "spark.sql.files.maxPartitionBytes" -> s"${10 * 1024 * 1024}",
+        "spark.sql.files.openCostInBytes" -> "0") {
+      val df = spark.read.format("graft-corpus")
+        .option("manifest", manifest).load()
+      assert(df.rdd.getNumPartitions <= 10,
+        s"expected bin-packing, got ${df.rdd.getNumPartitions}")
+      df.collect()
+    }
     // default sizing: the 4 MB open cost dominates tiny files, and
     // totalCost/cores caps the bin at ~5 files → one bin per core,
     // never 40 single-file tasks (Spark's own file-source policy)
@@ -202,15 +204,15 @@ class Round9Spec extends SparkSpec {
     assert(spread.rdd.getNumPartitions ===
       spark.sparkContext.defaultParallelism)
     // packing changes scheduling only, never rows
-    assert(packed.collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
+    assert(packed.map(r => (r.getLong(0), r.getString(1))).toSet ===
       (0 until 40).map(i => ((i + 1).toLong, s"tiny file $i")).toSet)
   }
 
   test("golden letter files byte-match through the split-forced connector read") {
     // the full R1→R15 pipeline (index + 26-file sink) over a corpus
     // with one dominant file, read through byte-range splits: output
-    // must byte-match the same pipeline over the classic text-source
-    // read (which GoldenSpec pins to the reference binary)
+    // must byte-match the same index + sink over an independent
+    // java.nio line split of the same files
     val words = Seq("apple", "banana", "cherry", "date", "elderberry",
       "fig", "grape", "honeydew", "kiwi", "lemon")
     val rnd = new scala.util.Random(11)
@@ -222,20 +224,22 @@ class Round9Spec extends SparkSpec {
       "big.txt" -> dominant, "s1.txt" -> "quince apple\nmango",
       "s2.txt" -> "banana quince"))
     val manifest = dir.resolve("manifest.txt").toString
-    val viaSplits = spark.read.format("graft-corpus")
-      .option("manifest", manifest)
-      .option("maxsplitbytes", "256").option("opencostbytes", "16")
-      .load()
-    assert(viaSplits.rdd.getNumPartitions > 10)
     val outSplit = java.nio.file.Files.createTempDirectory("r9split").toString
-    graft.sources.TextCorpus.writeLetterFiles(viaSplits, outSplit)
-    val outClassic = java.nio.file.Files.createTempDirectory("r9classic").toString
-    graft.sources.TextCorpus.buildIndex(spark, manifest, outClassic)
+    withConfs("spark.sql.files.maxPartitionBytes" -> "256",
+        "spark.sql.files.openCostInBytes" -> "16") {
+      val viaSplits = spark.read.format("graft-corpus")
+        .option("manifest", manifest).load()
+      assert(viaSplits.rdd.getNumPartitions > 10)
+      graft.sources.TextCorpus.writeLetterFiles(viaSplits, outSplit)
+    }
+    val outRef = java.nio.file.Files.createTempDirectory("r9ref").toString
+    graft.sources.TextCorpus.writeLetterFiles(
+      ManifestLines(manifest).toDF("doc_id", "text"), outRef)
     for (l <- 'a' to 'z') {
       val a = java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(outSplit, s"$l.txt"))
       val b = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(outClassic, s"$l.txt"))
+        java.nio.file.Paths.get(outRef, s"$l.txt"))
       assert(java.util.Arrays.equals(a, b), s"letter $l differs")
     }
   }
