@@ -26,9 +26,17 @@ import org.apache.spark.sql.functions._
   */
 object Bucketing {
 
-  /** Write `df` as a bucketed, sorted managed table (idempotent —
-    * drops any previous incarnation so a stale managed location from
-    * an interrupted run cannot block the create). */
+  /** Write `df` as a bucketed, sorted managed table with ONE file per
+    * bucket (idempotent — drops any previous incarnation so a stale
+    * managed location from an interrupted run cannot block the
+    * create). `repartition(buckets, key)` uses the same murmur3-pmod
+    * hash as the bucket spec, so each write task holds exactly one
+    * bucket's rows and writes one file; a bare `bucketBy` write would
+    * fan out to (input partitions × buckets) files. A bucketed serve
+    * reads one task per bucket, so the bucket count is the store's
+    * unit of parallelism either way. Over a same-spec bucketed table
+    * the planner elides the repartition; that keeps one file per
+    * bucket only under a FORCED bucketed scan (see [[compact]]). */
   def writeBucketed(df: DataFrame, table: String, key: String,
                     buckets: Int): Unit = {
     val spark = df.sparkSession
@@ -39,7 +47,7 @@ object Bucketing {
     val wh = java.net.URI.create(
       spark.conf.get("spark.sql.warehouse.dir")).getPath
     Stores.deleteTree(java.nio.file.Paths.get(wh, table))
-    df.write.mode(SaveMode.Overwrite)
+    df.repartition(buckets, col(key)).write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(table)
   }
@@ -57,17 +65,17 @@ object Bucketing {
     * (e.g. the signature store's per-ingest `admit`) adds at least
     * one new file per touched bucket, so a long-lived store
     * accumulates files linearly in INGESTS while its data grows only
-    * with the CORPUS. Left alone, that is the classic small-file
-    * spiral: the zero-exchange bucketed join stays zero-exchange but
-    * pays ingest-count×(open+footer) per bucket instead of one
-    * sequential read.
+    * with the CORPUS. A build through [[writeBucketed]] starts the
+    * store at AT MOST `buckets` files; left alone, every append adds
+    * to that — the classic small-file spiral: the zero-exchange
+    * bucketed join stays zero-exchange but pays
+    * ingest-count×(open+footer) per bucket instead of one sequential
+    * read.
     *
-    * Shape: read the current table, force exactly one task per bucket
-    * — `repartition(buckets, key)` uses the same murmur3-pmod hash as
-    * the bucket spec, so each task holds precisely one bucket's rows
-    * — write to a staging table through the same `bucketBy`, then
-    * swap via catalog renames (retire old → publish new → drop
-    * retired). Half-compacted data is never published, and no swap
+    * Shape: read the current table as one task per bucket, rewrite it
+    * to a staging table through [[writeBucketed]] (one file per
+    * bucket), then swap via catalog renames (retire old → publish new
+    * → drop retired). Half-compacted data is never published, and no swap
     * step destroys the only copy: a crash mid-swap leaves both the
     * retired and staging tables intact on disk, and RE-RUNNING
     * compact recovers — a recovery preamble republishes the surviving
@@ -90,20 +98,18 @@ object Bucketing {
               buckets: Int): Unit = {
     val staging = table + "__compacting"
     recoverCompact(spark, table, key, buckets)
-    // Shuffle-FREE compaction: force the bucketed scan (auto bucketed
-    // scan would otherwise read one partition per small FILE, since a
-    // bare write "needs" no distribution — measured: 63 output files
-    // instead of 8), so the source arrives as one partition per
-    // bucket and the matching repartition is optimized away — each
-    // task streams one bucket's small files into one new file. The
-    // repartition stays as the correctness net for a bucket-count
-    // CHANGE, where it becomes a real (and then necessary) shuffle.
+    // Shuffle-FREE compaction: force the bucketed scan, so the source
+    // arrives as one partition per bucket and writeBucketed's
+    // repartition is elided — each task streams one bucket's small
+    // files into one new file. The auto bucketed scan elides the
+    // repartition too, then drops the bucketing it relied on and reads
+    // one partition per small FILE (measured: 64 output files instead
+    // of 8 from a 199-file table). For a bucket-count CHANGE the
+    // repartition stays a real shuffle.
     val k = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val saved = spark.conf.get(k)
     spark.conf.set(k, "false")
-    try writeBucketed(
-      spark.table(table).repartition(buckets, col(key)),
-      staging, key, buckets)
+    try writeBucketed(spark.table(table), staging, key, buckets)
     finally spark.conf.set(k, saved)
     val retired = table + "__retired"
     Stores.dropManaged(spark, retired) // incl. a dead JVM's orphan dir

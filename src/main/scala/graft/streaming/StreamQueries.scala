@@ -1637,13 +1637,7 @@ object S23bStreamBm25Compact extends GraftQuery {
   private[graft] def compactTo(spark: SparkSession, postT: String): String = {
     val compactT = s"graft_s23b_compact_${s23bRun.incrementAndGet()}"
     graft.plans.Stores.dropManaged(spark, compactT)
-    // repartition by the bucket key so each task owns one bucket and
-    // writes ONE file — without it bucketBy fans out to (input
-    // partitions × buckets) files and the "compaction" fragments
-    // (the Bucketing.compact rule).
-    graft.plans.Bucketing.writeBucketed(
-      epochless(spark.table(postT))
-        .repartition(graft.queries.Q74bBm25Store.PostingsBuckets, col("word")),
+    graft.plans.Bucketing.writeBucketed(epochless(spark.table(postT)),
       compactT, "word", graft.queries.Q74bBm25Store.PostingsBuckets)
     compactT
   }

@@ -88,6 +88,27 @@ class Round10Spec extends SparkSpec {
     }
   }
 
+  test("q57b: a fresh store build writes at most one file per bucket") {
+    import graft.queries.Q57bDeltaDedupStore
+    import graft.plans.{Bucketing, Stores}
+    val dir = java.nio.file.Files.createTempDirectory("r10-buildfiles")
+    var tables = Seq.empty[String]
+    try {
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$sf01/documents.parquet"),
+        dir.resolve("documents.parquet"))
+      val (bandsT, exactT) = Q57bDeltaDedupStore.ensureStore(spark, dir.toString)
+      tables = Seq(bandsT, exactT)
+      for (t <- tables) {
+        val files = Bucketing.dataFileCount(spark, t)
+        assert(files > 0 && files <= 16, s"$t: $files data files for 16 buckets")
+      }
+    } finally {
+      tables.foreach(Stores.dropManaged(spark, _))
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
   test("q46/q46b: one corpus scan total — gram frame is checkpointed, not recomputed per branch") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}

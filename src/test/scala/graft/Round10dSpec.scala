@@ -283,14 +283,13 @@ class Round10dSpec extends SparkSpec {
     assert(!plan.exists(_.nodeName.toLowerCase.contains("join")),
       "SCD2 build must not plan a join")
     // The events loader's scale-adaptive scan spread (Tables.spread,
-    // r20 — REPARTITION_BY_NUM) is load balancing over the fixture's
-    // single-split file, not part of the SCD2 chain; count only the
-    // exchanges the OPERATOR requires.
+    // r20) is load balancing over the fixture's single-split file, not
+    // part of the SCD2 chain; count only the exchanges the OPERATOR
+    // requires.
     val hashShuffles = plan.collect {
       case s: ShuffleExchangeExec
         if s.outputPartitioning.isInstanceOf[HashPartitioning] &&
-          s.shuffleOrigin != org.apache.spark.sql.execution.exchange
-            .REPARTITION_BY_NUM => s
+          !isScanSpread(s) => s
     }
     assert(hashShuffles.size === 1,
       s"expected exactly one hash shuffle, got ${hashShuffles.size}:\n" +

@@ -342,14 +342,13 @@ class Round12Spec extends SparkSpec {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     // exactly the one range-partitioning exchange the global ORDER BY
     // needs; no aggregation/join exchange anywhere. The scale-adaptive
-    // scan spread (Tables.spread, REPARTITION_BY_NUM origin) is
-    // excluded: it is load balancing over the fixture's single-split
-    // file, not an operator shuffle, and whether it fires depends on
-    // the fixture's file size (the Aug-19 r20 regeneration shrank
-    // documents.parquet below one split, arming it here).
+    // scan spread (Tables.spread) is excluded: it is load balancing
+    // over the fixture's single-split file, not an operator shuffle,
+    // and whether it fires depends on the fixture's file size (the
+    // Aug-19 r20 regeneration shrank documents.parquet below one
+    // split, arming it here).
     val shuffles = flattenPlan(plan).collect { case s: ShuffleExchangeExec
-      if s.shuffleOrigin != org.apache.spark.sql.execution.exchange
-        .REPARTITION_BY_NUM => s }
+      if !isScanSpread(s) => s }
     assert(shuffles.size <= 1)
   }
 }

@@ -73,6 +73,51 @@ class Round18Spec extends SparkSpec {
     } finally Stores.deleteTree(dir)
   }
 
+  test("read-repair: the listing walks nested partitions and never enters hidden names") {
+    val root = Files.createTempDirectory("repairtree")
+    val quar = Files.createTempDirectory("repairtree-q")
+    val lonely = Files.createTempDirectory("repairtree-staged")
+    def hp(p: Path) = new org.apache.hadoop.fs.Path(p.toUri)
+    try {
+      spark.range(10).select(col("id")).repartition(1)
+        .write.mode("overwrite").parquet(root.toString)
+      val good = {
+        import scala.jdk.CollectionConverters._
+        val s = Files.list(root)
+        try s.iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".parquet")).toVector.head
+        finally s.close()
+      }
+      val bytes = Files.readAllBytes(good)
+      val torn = java.util.Arrays.copyOfRange(bytes, 0, bytes.length / 2)
+      def put(rel: String, b: Array[Byte]): Path = {
+        val f = root.resolve(rel)
+        Files.createDirectories(f.getParent)
+        Files.write(f, b)
+      }
+      val nested = put("p=1/part-00001-torn.snappy.parquet", torn)
+      val hidden = Seq(
+        put("_temporary/0/part-00002-torn.snappy.parquet", torn),
+        put(".staging/part-00003-torn.snappy.parquet", torn),
+        put("_x.parquet", torn))
+
+      val moved = ReadRepair.repairLocation(spark, hp(root), Some(hp(quar)))
+      assert(moved == Seq(nested.getFileName.toString),
+        s"expected only the nested torn part quarantined, got $moved")
+      assert(!Files.exists(nested) &&
+        Files.exists(quar.resolve(nested.getFileName)))
+      hidden.foreach(h => assert(Files.exists(h), s"repair entered hidden $h"))
+      assert(Files.exists(good), "repair touched a complete part")
+      assert(ReadRepair.hasReadablePart(spark, hp(root)))
+
+      // a complete part that sits only under staging is not readable
+      val staged = lonely.resolve("_temporary/0/part-00000.snappy.parquet")
+      Files.createDirectories(staged.getParent)
+      Files.write(staged, bytes)
+      assert(!ReadRepair.hasReadablePart(spark, hp(lonely)))
+    } finally Seq(root, quar, lonely).foreach(Stores.deleteTree)
+  }
+
   // ------------------------------------------------------------------
   // Snapshot bridges: dir-keyed, not last-run-wins (VERDICT r17 #5)
   // ------------------------------------------------------------------

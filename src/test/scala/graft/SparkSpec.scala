@@ -1,9 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, FilterExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide session; `lazy val`
@@ -25,6 +25,30 @@ trait SparkSpec extends AnyFunSuite {
       case other                    => other.children
     }
     p +: kids.flatMap(flattenPlan)
+  }
+
+  /** True only for the scale-adaptive scan spread's exchange
+    * ([[Tables.spread]]): an explicit-count repartition whose child is
+    * a file scan — reached through the row conversion, codegen
+    * wrappers and the pruning Project/Filter the optimizer pushes
+    * below it, never through another exchange, aggregate or join.
+    * Plan-shape gates exempt exactly this shape, not every
+    * REPARTITION_BY_NUM exchange. */
+  def isScanSpread(p: SparkPlan): Boolean = {
+    def onScan(c: SparkPlan): Boolean = c match {
+      case _: FileSourceScanExec    => true
+      case w: WholeStageCodegenExec => onScan(w.child)
+      case i: InputAdapter          => onScan(i.child)
+      case r: ColumnarToRowExec     => onScan(r.child)
+      case pr: ProjectExec          => onScan(pr.child)
+      case f: FilterExec            => onScan(f.child)
+      case _                        => false
+    }
+    p match {
+      case s: ShuffleExchangeExec =>
+        s.shuffleOrigin == REPARTITION_BY_NUM && onScan(s.child)
+      case _ => false
+    }
   }
 
   /** Scope session confs to a block, restoring (or unsetting) after —
