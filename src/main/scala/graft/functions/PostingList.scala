@@ -2,18 +2,18 @@ package graft.functions
 
 import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udf
 
 /** The engine's user-extension surface (SURVEY §2.B end): a typed
   * `Aggregator` for the reference's posting-list merge (R11,
   * main.cpp:119-128 — concat + sort, dedup guaranteed upstream by the
-  * per-file distinct R7), registrable as a `udaf`, plus the scalar
-  * normalizer (R5) as a `udf`.
+  * per-file distinct R7), registrable as a `udaf` (q1b). There is no
+  * scalar normalizer udf: every query normalizes words with the codegen
+  * [[NormalizeWord]] expression.
   *
-  * These are deliberately the ONLY extension points that drop out of
+  * This is deliberately the ONLY extension point that drops out of
   * whole-stage codegen: the hot Q1 path stays on built-in Catalyst
   * expressions (`sort_array(collect_set)` — see InvertedIndex), and
-  * InvertedIndexUdafSpec pins the two paths to identical results.
+  * RelationalSpec pins the two paths to identical results.
   * The buffer is a kryo-encoded mutable HashSet (see PostingListAgg's
   * own doc) — partial aggregates on the shuffle wire carry distinct
   * ids only, the same map-side-combine shape the reference hand-codes
@@ -41,20 +41,10 @@ object PostingList {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
   }
 
-  /** R5 as a scalar udf: delete non-[A-Za-z] (ASCII only, like the
-    * reference's filterWord, main.cpp:191-208), lowercase.
-    * Locale.ROOT: the default-locale toLowerCase would diverge from
-    * the ASCII contract on e.g. a Turkish-locale JVM ('I' → 'ı'). */
-  val normalizeWord: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((w: String) => if (w == null) "" else
-      w.filter(c => (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z'))
-        .toLowerCase(java.util.Locale.ROOT))
-
-  /** Register the surface on a session: `graft_posting_list` (udaf)
-    * and `graft_normalize` (udf), usable from spark.sql(...). */
+  /** Register `graft_posting_list` (udaf) on a session, usable from
+    * spark.sql(...). */
   def register(spark: SparkSession): Unit = {
     spark.udf.register("graft_posting_list",
       org.apache.spark.sql.functions.udaf(PostingListAgg))
-    spark.udf.register("graft_normalize", normalizeWord)
   }
 }

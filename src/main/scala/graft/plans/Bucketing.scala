@@ -34,9 +34,16 @@ object Bucketing {
     * bucket's rows and writes one file; a bare `bucketBy` write would
     * fan out to (input partitions × buckets) files. A bucketed serve
     * reads one task per bucket, so the bucket count is the store's
-    * unit of parallelism either way. Over a same-spec bucketed table
-    * the planner elides the repartition; that keeps one file per
-    * bucket only under a FORCED bucketed scan (see [[compact]]). */
+    * unit of parallelism either way.
+    *
+    * The write runs with the bucketed scan FORCED. Over a same-spec
+    * bucketed source the planner elides the repartition (the scan
+    * already satisfies it); the auto bucketed scan would then drop the
+    * bucketing it relied on and read one partition per small FILE
+    * (measured: 64 output files instead of 8 from a 199-file, 8-bucket
+    * table). Forced, each task streams one bucket's files into one new
+    * file with no shuffle; for any other source the repartition stays
+    * a real shuffle. */
   def writeBucketed(df: DataFrame, table: String, key: String,
                     buckets: Int): Unit = {
     val spark = df.sparkSession
@@ -47,9 +54,13 @@ object Bucketing {
     val wh = java.net.URI.create(
       spark.conf.get("spark.sql.warehouse.dir")).getPath
     Stores.deleteTree(java.nio.file.Paths.get(wh, table))
-    df.repartition(buckets, col(key)).write.mode(SaveMode.Overwrite)
+    val k = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    val saved = spark.conf.get(k)
+    spark.conf.set(k, "false")
+    try df.repartition(buckets, col(key)).write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(table)
+    finally spark.conf.set(k, saved)
   }
 
   /** Join two bucketed tables on their bucket key. When both sides
@@ -98,19 +109,8 @@ object Bucketing {
               buckets: Int): Unit = {
     val staging = table + "__compacting"
     recoverCompact(spark, table, key, buckets)
-    // Shuffle-FREE compaction: force the bucketed scan, so the source
-    // arrives as one partition per bucket and writeBucketed's
-    // repartition is elided — each task streams one bucket's small
-    // files into one new file. The auto bucketed scan elides the
-    // repartition too, then drops the bucketing it relied on and reads
-    // one partition per small FILE (measured: 64 output files instead
-    // of 8 from a 199-file table). For a bucket-count CHANGE the
-    // repartition stays a real shuffle.
-    val k = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val saved = spark.conf.get(k)
-    spark.conf.set(k, "false")
-    try writeBucketed(spark.table(table), staging, key, buckets)
-    finally spark.conf.set(k, saved)
+    // Shuffle-free: writeBucketed reads the table one task per bucket.
+    writeBucketed(spark.table(table), staging, key, buckets)
     val retired = table + "__retired"
     Stores.dropManaged(spark, retired) // incl. a dead JVM's orphan dir
     import org.apache.spark.sql.catalyst.TableIdentifier

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
 
 /** Optimizer rule — the (c)-tier rung of the extension ladder
-  * (SURVEY §7.3: compose built-ins > custom `Expression` (q1c) >
+  * (SURVEY §7.3: compose built-ins > custom `Expression` (NormalizeWord) >
   * custom rule/plan): rewrite UNTHRESHOLDED Levenshtein comparisons
   * into Spark's banded threshold form, which abandons a row as soon
   * as the running edit distance exceeds the bound (O(k·n) band

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.NormalizeWord
 
 /** Q64 — BPE merge-rule learning: the tokenizer-TRAINING step of an
   * LLM data pipeline (Sennrich et al. 2016). q62 measures vocabulary
@@ -79,10 +80,7 @@ object Bpe {
   /** Same reduction over an arbitrary documents frame (q64f trains
     * on the train split only). */
   private[graft] def wordFreqOf(docs: DataFrame): DataFrame =
-    docs
-      .select(explode(expr(NorthStar.toksExpr)).as("tok"))
-      .select(lower(regexp_replace(col("tok"), "[^a-zA-Z]", "")).as("word"))
-      .filter(length(col("word")) > 0)
+    InvertedIndex.words(docs)
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
 }
 
@@ -252,11 +250,7 @@ object Q64bBpeEncode extends GraftQuery {
     * final merge ([[finishFertility]]), never averaged per side. */
   private[graft] def encodePartials(docs: DataFrame,
       dict: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), col("lang"), explode(expr(NorthStar.toksExpr)).as("tok"))
-      .select(col("doc_id"), col("lang"),
-        lower(regexp_replace(col("tok"), "[^a-zA-Z]", "")).as("word"))
-      .filter(length(col("word")) > 0)
+    InvertedIndex.words(docs, "doc_id", "lang")
       .join(dict, "word")
       .groupBy(col("lang"))
       .agg(
@@ -561,11 +555,7 @@ object Q64fVocabDrift extends GraftQuery {
     val ntok = Q64cBpeMergesLocal.learnInMemory(freq, Q64BpeMerges.Merges)._2
     val dict = broadcast(ntok.toSeq.map { case (w, n) => (w, n.toLong) }
       .toDF("word", "ntok"))
-    def words(d: DataFrame) = d
-      .select(col("lang"), explode(expr(NorthStar.toksExpr)).as("tok"))
-      .select(col("lang"),
-        lower(regexp_replace(col("tok"), "[^a-zA-Z]", "")).as("word"))
-      .filter(length(col("word")) > 0)
+    def words(d: DataFrame) = InvertedIndex.words(d, "lang")
     // Train side: the dictionary was learned from these words, so the
     // inner join is lossless and count(*) is the full word count.
     val trainStats = words(train).join(dict, "word")
@@ -1096,7 +1086,7 @@ object Q64iUnigramEncode extends GraftQuery {
     // Words that normalize to '' become NULL (kept, counted 0) so a
     // doc whose every token is non-alphabetic still surfaces with
     // zero counts — the oracle's LEFT JOIN shape.
-    val norm = lower(regexp_replace(col("col"), "[^a-zA-Z]", ""))
+    val norm = NormalizeWord.of(col("col"))
     val docWords = Tables.documents(spark, dir)
       .select(col("doc_id"), posexplode_outer(expr(NorthStar.toksExpr)))
       .select(col("doc_id"), col("pos"),
@@ -1417,7 +1407,7 @@ object Q64kUnigramEncodeStore extends GraftQuery {
 
   def run(spark: SparkSession, dir: String): DataFrame = {
     val dict = encodeDict(spark, dir, ensureScores(spark, dir))
-    val norm = lower(regexp_replace(col("col"), "[^a-zA-Z]", ""))
+    val norm = NormalizeWord.of(col("col"))
     val docWords = Tables.documents(spark, dir)
       .select(col("doc_id"), posexplode_outer(expr(NorthStar.toksExpr)))
       .select(col("doc_id"), col("pos"),
@@ -1474,12 +1464,8 @@ object Q64lWordpieceDrift extends GraftQuery {
 
   /** (lang, split, word) — the shared tokenize for both drift tiers. */
   private[queries] def splitWords(docs: DataFrame): DataFrame =
-    docs.withColumn("split", Q40TrainTestSplit.splitCol)
-      .select(col("lang"), col("split"),
-        explode(expr(NorthStar.toksExpr)).as("tok"))
-      .select(col("lang"), col("split"),
-        lower(regexp_replace(col("tok"), "[^a-zA-Z]", "")).as("word"))
-      .filter(length(col("word")) > 0)
+    InvertedIndex.words(
+      docs.withColumn("split", Q40TrainTestSplit.splitCol), "lang", "split")
 
   def run(spark: SparkSession, dir: String): DataFrame = {
     val toks = splitWords(Tables.documents(spark, dir))
@@ -1763,11 +1749,7 @@ object Q64nBpeDriftGatedStore extends GraftQuery {
     * accumulates them per epoch and gates the rollup. */
   private[graft] def measured(spark: SparkSession, docs: DataFrame,
       dict: DataFrame): DataFrame =
-    docs
-      .select(col("lang"), explode(expr(NorthStar.toksExpr)).as("tok"))
-      .select(col("lang"),
-        lower(regexp_replace(col("tok"), "[^a-zA-Z]", "")).as("word"))
-      .filter(length(col("word")) > 0)
+    InvertedIndex.words(docs, "lang")
       .join(dict, Seq("word"), "left")
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_words"),
@@ -1931,11 +1913,7 @@ object Q64oWordpieceDriftGatedStore extends GraftQuery {
     * length reads identically on both engines (ADVICE r16). */
   private[graft] def measured(spark: SparkSession, docs: DataFrame,
       piecesT: String): DataFrame = {
-    val words = docs
-      .select(col("lang"), explode(expr(NorthStar.toksExpr)).as("tok"))
-      .select(col("lang"),
-        lower(regexp_replace(col("tok"), "[^a-zA-Z]", "")).as("word"))
-      .filter(length(col("word")) > 0)
+    val words = InvertedIndex.words(docs, "lang")
     val dw = words.select(col("word").as("w")).distinct()
     val dict = Q64jWordpieceEncodeStore.encodeDictOf(spark, dw, piecesT)
       .select(col("w").as("word"), (col("enc") === "[UNK]").as("unk"),
@@ -2305,11 +2283,7 @@ object Q64pUnigramDriftGatedStore extends GraftQuery {
     val charsLit = chars.map(c => s"'$c'").mkString("array(", ", ", ")")
     val covered = s"size(filter(sequence(1, length(w)), i_ -> " +
       s"NOT array_contains($charsLit, substring(w, i_, 1)))) = 0"
-    val words = docs
-      .select(col("lang"), explode(expr(NorthStar.toksExpr)).as("tok"))
-      .select(col("lang"),
-        lower(regexp_replace(col("tok"), "[^a-zA-Z]", "")).as("word"))
-      .filter(length(col("word")) > 0)
+    val words = InvertedIndex.words(docs, "lang")
     // The FLATTENED store DP ([[Q64kUnigramEncodeStore.encodeDictOf]],
     // round 17): complete for every covered word ≤
     // [[Bpe.MaxMeasuredWordLen]], over-length words never reach

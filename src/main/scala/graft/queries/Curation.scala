@@ -186,11 +186,7 @@ object Q52MixInterleave extends GraftQuery {
 object Q53TokenEntropy extends GraftQuery {
   val name = "q53_token_entropy"
   def run(spark: SparkSession, dir: String): DataFrame = {
-    val byWord = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("tok"))
-      .select(col("doc_id"),
-        lower(regexp_replace(col("tok"), "[^a-zA-Z]", "")).as("word"))
-      .filter(col("word") =!= "")
+    val byWord = InvertedIndex.words(Tables.documents(spark, dir), "doc_id")
       .groupBy(col("doc_id"), col("word"))
       .agg(count(lit(1)).as("c"))
     byWord
@@ -449,7 +445,8 @@ object Q61bGopherRepetition extends GraftQuery {
   /** Word n-grams of the bound token array `t_`, joined with ' ' so
     * length(gram) − (n−1) is exactly the sum of its token lengths. */
   private def gramsExpr(n: Int) =
-    s"transform(sequence(1, size(t_) - ${n - 1}), gi_ -> " +
+    s"transform(IF(size(t_) < $n, array(), " +
+      s"sequence(1, size(t_) - ${n - 1})), gi_ -> " +
       s"array_join(slice(t_, gi_, $n), ' '))"
 
   /** Sum of character lengths over all elements of `arr`. */

@@ -45,7 +45,7 @@ object Q77DsirSelection extends GraftQuery {
     s"pmod(cast(conv(substring(md5($x), 1, 15), 16, 10) as bigint), $Buckets)"
 
   private val arrExpr = "filter(transform(split(text, '\\\\s+'), " +
-    "x_ -> lower(regexp_replace(x_, '[^a-zA-Z]', ''))), w_ -> w_ <> '')"
+    "x_ -> graft_normalize_fast(x_)), w_ -> w_ <> '')"
   private val bigramsExpr = NorthStar.let("tk", arrExpr,
     "zip_with(slice(tk, 1, size(tk) - 1), slice(tk, 2, size(tk) - 1), " +
       "(a_, b_) -> concat(a_, ' ', b_))")

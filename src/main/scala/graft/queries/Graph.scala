@@ -172,6 +172,13 @@ object Q59GraphPagerank extends GraftQuery {
 object Q60RepeatedSpans extends GraftQuery {
   val name = "q60_repeated_spans"
   val Width = 8
+  /** Window starts of the token array `t`; empty when size(t) < Width.
+    * The guard sits inside the expression (as in
+    * [[NorthStar.shinglesExpr]]): a `size(t) >= Width` filter does not
+    * keep Catalyst from projecting shorter rows, where the sequence
+    * counts down through index 0 and `slice` throws. */
+  private[graft] val startsExpr =
+    s"IF(size(t) < $Width, array(), sequence(1, size(t) - ${Width - 1}))"
 
   def run(spark: SparkSession, dir: String): DataFrame =
     sharedSpans(Tables.documents(spark, dir))
@@ -195,7 +202,7 @@ object Q60RepeatedSpans extends GraftQuery {
       .select(col("doc_id"), expr(NorthStar.toksExpr).as("t"))
       .filter(size(col("t")) >= w)
       .select(col("doc_id"), explode(expr(
-        s"array_distinct(transform(sequence(1, size(t) - ${w - 1}), " +
+        s"array_distinct(transform($startsExpr, " +
           s"i -> md5(concat_ws(' ', slice(t, i, $w)))))")).as("span_h"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -263,7 +270,7 @@ object Q60RepeatedSpans extends GraftQuery {
   * no driver materialization. */
 object Q60bLongestSharedSpans extends GraftQuery {
   val name = "q60b_longest_shared_spans"
-  import Q60RepeatedSpans.Width
+  import Q60RepeatedSpans.{Width, startsExpr}
 
   def run(spark: SparkSession, dir: String): DataFrame =
     longestSpans(Tables.documents(spark, dir))
@@ -279,7 +286,7 @@ object Q60bLongestSharedSpans extends GraftQuery {
     try {
       val pos = toks
         .select(col("doc_id"), col("t"),
-          explode(expr(s"sequence(1, size(t) - ${w - 1})")).as("i"))
+          explode(expr(startsExpr)).as("i"))
         .select(col("doc_id"), col("i"),
           expr(s"md5(concat_ws(' ', slice(t, i, $w)))").as("span_h"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -361,10 +368,7 @@ object Q62VocabCoverage extends GraftQuery {
 
   def run(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val counts = Tables.documents(spark, dir)
-      .select(explode(split(col("text"), "\\s+")).as("tok"))
-      .select(lower(regexp_replace(col("tok"), "[^a-zA-Z]", "")).as("word"))
-      .filter(col("word") =!= "")
+    val counts = InvertedIndex.words(Tables.documents(spark, dir))
       .groupBy(col("word")).agg(count(lit(1)).as("c"))
     val parted = counts
       .repartitionByRange(col("c").desc, col("word"))
@@ -639,7 +643,7 @@ object Q69ScoreDeciles extends GraftQuery {
   */
 object Q60cExciseDuplicates extends GraftQuery {
   val name = "q60c_excise_duplicates"
-  import Q60RepeatedSpans.Width
+  import Q60RepeatedSpans.{Width, startsExpr}
 
   def run(spark: SparkSession, dir: String): DataFrame =
     excise(Tables.documents(spark, dir))
@@ -725,7 +729,7 @@ object Q60cExciseDuplicates extends GraftQuery {
     toks
       .filter(size(col("t")) >= w)
       .select(col("doc_id"),
-        explode(expr(s"sequence(1, size(t) - ${w - 1})")).as("i"),
+        explode(expr(startsExpr)).as("i"),
         col("t"))
       .select(col("doc_id"), col("i"),
         expr(s"md5(concat_ws(' ', slice(t, i, $w)))").as("span_h"))

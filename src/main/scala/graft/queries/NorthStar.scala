@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.NormalizeWord
 
 /** Q18–Q24 — the LLM-training-data pipeline surface (north star):
   * deduplication (exact, MinHash+LSH, SimHash, n-gram Jaccard with
@@ -1640,11 +1641,7 @@ object Q19fAnnRebalance extends GraftQuery {
 object Q26TfIdf extends GraftQuery {
   val name = "q26_tfidf_top_terms"
   def run(spark: SparkSession, dir: String): DataFrame = {
-    val words = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("tok"))
-      .select(col("doc_id"),
-        lower(regexp_replace(col("tok"), "[^a-zA-Z]", "")).as("word"))
-      .filter(col("word") =!= "")
+    val words = InvertedIndex.words(Tables.documents(spark, dir), "doc_id")
     val tf = words.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
     val df = words.select(col("doc_id"), col("word")).distinct()
       .groupBy(col("word")).agg(count(lit(1)).as("df"))
@@ -1726,7 +1723,7 @@ object Q74Bm25 extends GraftQuery {
     docs
       .select(col("doc_id"), posexplode(filter(
         transform(split(col("text"), "\\s+"),
-          t => lower(regexp_replace(t, "[^a-zA-Z]", ""))),
+          t => NormalizeWord.of(t)),
         w => w =!= "")))
       .select(col("doc_id"), (col("pos") + 1).cast("int").as("pos"),
         col("col").as("word"))
@@ -2766,10 +2763,7 @@ object Q76cTripletsBackfilled extends GraftQuery {
 object Q20TopTermsPerLang extends GraftQuery {
   val name = "q20_top_terms_per_lang"
   def run(spark: SparkSession, dir: String): DataFrame = {
-    val tf = Tables.documents(spark, dir)
-      .select(col("lang"), explode(split(col("text"), "\\s+")).as("tok"))
-      .select(col("lang"), lower(regexp_replace(col("tok"), "[^a-zA-Z]", "")).as("word"))
-      .filter(col("word") =!= "")
+    val tf = InvertedIndex.words(Tables.documents(spark, dir), "lang")
       .groupBy(col("lang"), col("word"))
       .agg(count(lit(1)).as("tf"))
     val w = Window.partitionBy(col("lang")).orderBy(col("tf").desc, col("word").asc)
@@ -3088,7 +3082,7 @@ object Q46Decontaminate extends GraftQuery {
   /** Distinct word 5-shingles of token array `t` (needs size(t) ≥ 5);
     * the 3-gram analogue of [[NorthStar.shinglesExpr]]. */
   private val fiveGramExpr =
-    "array_distinct(transform(sequence(1, size(t)-4), " +
+    "array_distinct(transform(IF(size(t) < 5, array(), sequence(1, size(t)-4)), " +
       "i -> concat_ws(' ', element_at(t,i), element_at(t,i+1), " +
       "element_at(t,i+2), element_at(t,i+3), element_at(t,i+4))))"
   /** One pass over the corpus → (doc_id, split, gh) gram-hash rows;

@@ -24,7 +24,7 @@ object Scoring {
     * lowercased, empties dropped. */
   private[queries] val normToks =
     "filter(transform(split(text, '\\\\s+'), " +
-      "t_ -> lower(regexp_replace(t_, '[^a-zA-Z]', ''))), x_ -> x_ != '')"
+      "t_ -> graft_normalize_fast(t_)), x_ -> x_ != '')"
   private[queries] val duckNormToks =
     raw"list_filter(list_transform(string_split_regex(text, '\s+'), " +
       raw"t_ -> lower(regexp_replace(t_, '[^a-zA-Z]', '', 'g'))), x_ -> x_ <> '')"

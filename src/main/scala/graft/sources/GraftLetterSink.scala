@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, FilterFileSystem, Path}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
@@ -42,7 +42,15 @@ import org.apache.spark.util.SerializableConfiguration
   * produce mis-ordered files by forgetting to repartition. A letter
   * lives entirely in one task, so each final file is one task's
   * sorted stream (several letters may share a task; the ordering
-  * keeps them contiguous). */
+  * keeps them contiguous).
+  *
+  * Cost: staged letter files and the empty-letter files are created
+  * through the raw FS under Hadoop's checksum wrapper. Through a local
+  * `ChecksumFileSystem` each create is two (the file and its
+  * `.x.txt.crc`), and without libhadoop each forks a `chmod` shell,
+  * serially in the sink's one task (26 letters: 280–410 ms vs 100–200
+  * ms raw, 4-core VM). The target `delete` stays checksum-aware, so a
+  * stale sidecar of an older write cannot fail a read of the new file. */
 class GraftLetterSink extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-letters"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -59,6 +67,17 @@ object GraftLetterSink {
     StructField("word", StringType, nullable = false),
     StructField("df", LongType, nullable = false),
     StructField("line", StringType, nullable = false)))
+
+  /** The raw FS under a `ChecksumFileSystem`, looking through
+    * `FilterFileSystem` wrappers (on `file:`, Hive's
+    * `ProxyLocalFileSystem` wraps `LocalFileSystem`); else `fs`. */
+  private[sources] def unchecksummed(fs: FileSystem): FileSystem =
+    Iterator.iterate(fs) {
+      case f: FilterFileSystem => f.getRawFileSystem
+      case _ => null
+    }.takeWhile(_ != null)
+      .collectFirst { case c: ChecksumFileSystem => c.getRawFileSystem }
+      .getOrElse(fs)
 }
 
 class GraftLetterTable(path: String) extends Table with SupportsWrite {
@@ -112,6 +131,7 @@ class GraftLetterBatchWrite(path: String, queryId: String,
     val conf = hadoopConf
     val out = new Path(path)
     val fs = out.getFileSystem(conf)
+    val raw = GraftLetterSink.unchecksummed(fs)
     fs.mkdirs(out)
     val staged = messages.collect {
       case LetterTaskCommit(s) => s
@@ -130,10 +150,10 @@ class GraftLetterBatchWrite(path: String, queryId: String,
       fs.delete(target, false)
       byLetter.get(letter.toString).map(_.head._2) match {
         case Some(stagedPath) =>
-          if (!fs.rename(new Path(stagedPath), target))
+          if (!raw.rename(new Path(stagedPath), target))
             throw new IllegalStateException(s"rename failed for $letter.txt")
         case None =>
-          fs.create(target, true).close() // empty letter → empty file
+          raw.create(target, true).close() // empty letter → empty file
       }
     }
     fs.delete(new Path(stagingDir), true)
@@ -160,7 +180,8 @@ class GraftLetterWriter(stagingDir: String, letterIdx: Int, lineIdx: Int,
     partitionId: Int, taskId: Long,
     conf: org.apache.hadoop.conf.Configuration)
     extends DataWriter[InternalRow] {
-  private val fs = new Path(stagingDir).getFileSystem(conf)
+  private val fs = GraftLetterSink.unchecksummed(
+    new Path(stagingDir).getFileSystem(conf))
   private var staged = Vector.empty[(String, String)]
   private var current: String = null
   private var out: java.io.OutputStream = null

@@ -72,15 +72,11 @@ object Streams {
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("event_id")
 
-  /** S6 — the reference's inverted index (Q1), incrementalized: same
-    * tokenize→normalize→distinct→group pipeline in update mode. The
-    * posting list uses collect_set exactly like batch Q1 (R10/R11). */
+  /** S6 — the reference's inverted index (Q1), incrementalized: Q1's
+    * own (doc_id, word) pairs, grouped in update mode. The posting list
+    * uses collect_set exactly like batch Q1 (R10/R11). */
   def incrementalInvertedIndex(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("tok"))
-      .select(col("doc_id"),
-        lower(regexp_replace(col("tok"), "[^a-zA-Z]", "")).as("word"))
-      .filter(col("word") =!= "")
+    graft.queries.InvertedIndex.words(docs, "doc_id")
       .groupBy(col("word"))
       .agg(sort_array(collect_set(col("doc_id"))).as("doc_ids"))
 

@@ -72,6 +72,36 @@ class ConnectorHardeningSpec extends SparkSpec {
       s"aborted write must publish nothing, found: ${leftovers.mkString(",")}")
   }
 
+  test("letters sink leaves exactly a.txt..z.txt: no checksum sidecars") {
+    import spark.implicits._
+    val dir = tmp()
+    Seq(("a", "aw", 1L, "aw:[1]"), ("q", "qw", 2L, "qw:[1 2]"))
+      .toDF("letter", "word", "df", "line")
+      .write.format("graft-letters").mode("overwrite").save(dir)
+    val names = new java.io.File(dir).list().toSeq.sorted
+    assert(names === ('a' to 'z').map(l => s"$l.txt"))
+  }
+
+  test("letters sink over an older checksum-FS write reads back the new content") {
+    import spark.implicits._
+    val dir = tmp()
+    // an older write through Hadoop's checksum FS leaves a .x.txt.crc
+    // sidecar beside every letter file
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sessionState.newHadoopConf())
+    for (l <- 'a' to 'z') {
+      val out = local.create(new org.apache.hadoop.fs.Path(dir, s"$l.txt"), true)
+      out.write(s"old$l:[9]\n".getBytes("UTF-8")); out.close()
+    }
+    assert(new java.io.File(dir, ".a.txt.crc").exists(), "no sidecar — test vacuous")
+    Seq(("a", "apple", 1L, "apple:[1]"), ("b", "bee", 1L, "bee:[2]"))
+      .toDF("letter", "word", "df", "line")
+      .write.format("graft-letters").mode("overwrite").save(dir)
+    assert(spark.read.text(dir).as[String].collect().sorted.toSeq ===
+      Seq("apple:[1]", "bee:[2]"))
+    assert(!new java.io.File(dir).list().exists(_.endsWith(".crc")))
+  }
+
   test("streaming against a nonexistent manifest fails fast, not a silent stall") {
     val q = spark.readStream.format("graft-corpus")
       .option("manifest", "/nonexistent/graft/manifest.txt")

@@ -56,6 +56,37 @@ class Round4Spec extends SparkSpec {
     assert(pairs(docsDir(long ++ short)) === expected)
   }
 
+  test("window and gram sites: 0-4-token documents raise no error under ANSI and add no rows") {
+    // q60/q60b/q60c/q60d reach the span-window starts, q46/q46b/q46c
+    // the 5-gram starts, q61b the Gopher n-gram starts
+    val qs = Seq(Q60RepeatedSpans, Q60bLongestSharedSpans,
+      Q60cExciseDuplicates, Q60dExciseStore, Q46Decontaminate,
+      Q46bDecontaminateDfCap, Q46cDecontaminateBloom, Q61bGopherRepetition)
+    val docs = Tables.documents(spark, sf)
+      .select("doc_id", "text", "lang", "source", "n_chars")
+    // ids far above the fixture's and above any count in these outputs
+    val shortIds = (9000001L to 9000005L)
+    val short = shortIds.zip(Seq("", "one", "two tokens", "a b c",
+      "w x y z")).map { case (id, text) =>
+        (id, text, "en", "src0", text.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    def docsDir(df: org.apache.spark.sql.DataFrame): String = {
+      val dir = java.nio.file.Files.createTempDirectory("short_docs").toString
+      df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      dir
+    }
+    val (plain, withShort) = (docsDir(docs), docsDir(docs.unionByName(short)))
+    def mentionsShort(r: org.apache.spark.sql.Row) =
+      r.toSeq.exists { case v: Long => shortIds.contains(v); case _ => false }
+    withConfs("spark.sql.ansi.enabled" -> "true") {
+      for (q <- qs) {
+        def rows(dir: String) = q.run(spark, dir).collect()
+          .filterNot(mentionsShort).map(_.toSeq.toString).sorted.toSeq
+        assert(rows(withShort) === rows(plain), q.name)
+      }
+    }
+  }
+
   test("q30b approx flags hold and exact columns agree with q30") {
     val approx = Q30bApproxPercentiles.run(spark, sf01).collect()
     assert(approx.length === 3) // one row per return flag
