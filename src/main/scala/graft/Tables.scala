@@ -60,12 +60,11 @@ object Tables {
     * inflated measured task time ~5× (GC + SMT contention; q42b wall
     * 4.2→2.8 s at width 8 vs 32). A query whose cost is ONE dominant
     * map stage has no such tax and wants every core — those opt in
-    * via `wide` (q64g: 0.97 s at 32 vs 2.0 s at 8). The sweep lives
-    * in DiagSpreadWidth; override for experiments: -Dgraft.spread.n. */
+    * via `wide` (q64g: 0.97 s at 32 vs 2.0 s at 8). The width sweep
+    * is recorded in OPTIMIZATION_r19.md. */
   private def spreadN(df: DataFrame, wide: Boolean): Int = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    sys.props.get("graft.spread.n").map(_.toInt)
-      .getOrElse(if (wide) cores else math.max(4, cores / 4))
+    if (wide) cores else math.max(4, cores / 4)
   }
 
   private[graft] def spread(df: DataFrame, key: String,
@@ -91,13 +90,14 @@ object Tables {
     * would starve it (< cores × the 1 MB coalesce floor × a 16×
     * safety factor) — at corpus scale the estimate is far larger, the
     * guard never fires, and no extra exchange of heavy payloads is
-    * added. A global AQE-floor change was measured instead and
-    * REJECTED: -DminPartitionSize=1k won exactly the two CPU-dense
-    * rows (q72b −0.96 s, s20 −0.50 s) and taxed every other row
-    * +0.3–1.2 s in 32-task launches over tiny shuffles. */
+    * added. The guard is capped at [[SpreadCpuMaxBytes]] so that it
+    * does not grow with the host: uncapped, a 128-core host would
+    * re-shuffle a 2 GB frame. A global AQE-floor change was measured
+    * instead and REJECTED: -DminPartitionSize=1k won exactly the two
+    * CPU-dense rows (q72b −0.96 s, s20 −0.50 s) and taxed every other
+    * row +0.3–1.2 s in 32-task launches over tiny shuffles. */
   private[graft] def spreadCpu(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val cores = sc.defaultParallelism
+    val cores = df.sparkSession.sparkContext.defaultParallelism
     // Guard on the LEAF scans' size estimate, not the frame's own:
     // aggregate/codegen width estimates inflate multiplicatively and
     // would mask a KB-scale frame (measured: q72b's archive agg
@@ -106,7 +106,7 @@ object Tables {
     // cannot emit more bytes than it read (modulo small constants).
     val est = df.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum
-    if (est > BigInt(cores.toLong << 24)) df
+    if (est > spreadCpuLimit(cores)) df
     // Round-robin with an EXPLICIT count, not keyed: a keyed
     // repartition matching the upstream groupBy's keys is elided by
     // EnsureRequirements (the agg output already satisfies it) and the
@@ -117,6 +117,17 @@ object Tables {
     // (guide §2.5).
     else df.repartition(cores)
   }
+
+  /** Absolute ceiling of the [[spreadCpu]] guard: 64 MB, the guard's
+    * value on 4 cores, so hosts up to 4 cores keep the rule unchanged.
+    * The frames the rule exists for are KB–MB scale (q72b's archives:
+    * a few hundred KB). */
+  private[graft] val SpreadCpuMaxBytes: Long = 64L << 20
+
+  /** Leaf-size estimate above which [[spreadCpu]] leaves a frame
+    * alone: cores × 16 MB, capped at [[SpreadCpuMaxBytes]]. */
+  private[graft] def spreadCpuLimit(cores: Int): BigInt =
+    BigInt(math.min(cores.toLong << 24, SpreadCpuMaxBytes))
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")

@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
   * aliases Catalyst inlines when it pushes the candidate filter into
   * the SortMergeJoin condition — measured at 100×: the inlined
   * ~500-node condition fell out of whole-stage codegen and cost
-  * ~80 µs per joined row, 10 s of a 14 s store serve (DiagAudio3
-  * carries the plan). As a single native node the pushdown is
+  * ~80 µs per joined row, 10 s of a 14 s store serve (HISTORY.md
+  * round 19, item 1b). As a single native node the pushdown is
   * HARMLESS: wherever the optimizer moves it, it stays one ~30-op
   * branch-free-ish Java method.
   *

@@ -175,7 +175,7 @@ private[graft] final class BandedHashStore(
     * (`x_hi`/`x_lo`, carried in the output for [[verdictFrame]])
     * instead of per-pair hex parsing + substring compares — the
     * measured ~100 µs/pair CPU term that made every store serve
-    * ~13 s flat (DiagAudio, BASELINE round 19). */
+    * ~13 s flat (HISTORY.md round 19, item 1). */
   private[graft] def candidates(deltaFeats: DataFrame,
       store: DataFrame): DataFrame = {
     import Q25dImageNearDup.{hexHiExpr, hexLoExpr}
@@ -194,7 +194,7 @@ private[graft] final class BandedHashStore(
     // optimizer pushes it into the SortMergeJoin condition the
     // aliases inline ~15× into a ~500-node condition that falls out
     // of whole-stage codegen — measured ~80 µs per joined row, 10 s
-    // of a 14 s serve at 100× (DiagAudio3 carries the plan). As a
+    // of a 14 s serve at 100× (HISTORY.md round 19, item 1b). As a
     // single expression node the pushdown is harmless: wherever it
     // lands, it is one ~30-op static Java call per candidate.
     d.join(s, Seq("bkey"))

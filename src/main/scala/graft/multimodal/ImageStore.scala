@@ -57,7 +57,7 @@ object Q25fImageDedupStore extends GraftQuery {
     * corpus shape: image corpora are full of exact re-uploads, and
     * without the collapse every one lands in every band bucket its
     * hash touches — the measured 100×-scale serve explosion
-    * (ScaleBench: 167k images with 13k distinct hashes drove bucket
+    * (HISTORY.md round 11: 167k images with 13k distinct hashes drove bucket
     * occupancy to 8k rows and the banded join to 111 s; collapsed,
     * the join is distinct-hash sized). */
   private[graft] def collapse(feats: DataFrame): DataFrame =

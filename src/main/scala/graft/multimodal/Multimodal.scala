@@ -43,11 +43,11 @@ object Multimodal {
     * `write(..., stream)` to a DISK-backed stream cache — one temp
     * file created and deleted in `java.io.tmpdir` per call. Per-item
     * that cost is invisible at small scale but it is the fourth
-    * decade's measured superlinear term (ScaleBench 1000×: the PNG
+    * decade's measured superlinear term (at 1000×: the PNG
     * pass degraded from 86 to 189 µs/image — ~2 temp-file churns per
     * image × 3.3M calls × 32 threads contending on one tmp dir; with
     * the cache off the pass is in-memory and returned to linear —
-    * decomposition in DiagDecade4 / BASELINE round-12). JVM-global
+    * decomposition in HISTORY.md's round-12 fourth decade). JVM-global
     * and idempotent, so calling once per partition is free; lives
     * here (not driver-side session setup) because on a real cluster
     * the flag must be set in EXECUTOR JVMs. */
@@ -735,7 +735,7 @@ object Q25kJpegLossy extends GraftQuery {
   * verification is a map-side exact popcount on the joined pair, and
   * the top-k is TakeOrderedAndProject (per-partition heaps, never a
   * global sort) — the q18b candidate/verify split exactly. KNOWN
-  * HAZARD (measured at 100× in ScaleBench): bucket occupancy is only
+  * HAZARD (measured at 100×, HISTORY.md round 11): bucket occupancy is only
   * as good as the corpus's hash entropy — exact re-uploads (identical
   * hashes) make within-bucket pairs grow with occupancy². For the
   * PAIR-ENUMERATING surface here the mitigations are the
@@ -785,7 +785,7 @@ object Q25dImageNearDup extends GraftQuery {
     * evaluating [[hammingExpr]] per candidate PAIR costs 16 string
     * `conv` parses per row, and the store path's first-shared-pair
     * filter added ~112 substring comparisons — together ~100 µs of
-    * CPU per candidate (DiagAudio: 4M raw candidates → 13 s of a
+    * CPU per candidate (HISTORY.md round 19: 4M raw candidates → 13 s of a
     * 14 s serve, flat across decades because the candidate count
     * was). Parsing each hash ONCE per join INPUT row into two 32-bit
     * halves (8-hex `conv` each — no 64-bit unsigned overflow) moves
@@ -976,7 +976,7 @@ object Q25dImageNearDup extends GraftQuery {
     *    short-circuits to the slice + within-join plan (the top-k is
     *    entirely exact-dup pairs; enumeration here pays Σg² over
     *    dup groups — measured 37 GB of shuffle spill and a dead
-    *    disk at crafted 1600-member groups, DiagBands);
+    *    disk at crafted 1600-member groups, HISTORY.md round 11);
     *  - < k → every group has < k+1 members, so enumeration's
     *    duplication term is ≤ k·N (linear, safe) while the bounded
     *    construction's window + expansion joins are pure overhead

@@ -218,8 +218,9 @@ object Stores {
 
   /** Operational eviction: drop EVERY incarnation under `prefix` —
     * catalog entries, warehouse directories, commit markers, lock
-    * files. The cold-start lever for measurements (ScaleBench's
-    * build-vs-serve split) and for decommissioning a store family. */
+    * files. The cold-start lever for measurements (the build-vs-serve
+    * split of HISTORY.md's round-11 scale points) and for
+    * decommissioning a store family. */
   def evict(spark: SparkSession, prefix: String): Unit = this.synchronized {
     spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith(prefix + "_"))

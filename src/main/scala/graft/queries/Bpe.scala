@@ -739,7 +739,7 @@ object Q64gWordpieceEncode extends GraftQuery {
   def run(spark: SparkSession, dir: String): DataFrame =
     // wide spread (r19): this tier is ONE dominant map stage (the
     // per-word greedy fold) — measured 0.97 s at full width vs 2.0 s
-    // at the composite default (DiagSpreadWidth).
+    // at the composite default (OPTIMIZATION_r19.md width sweep).
     encode(Tables.documents(spark, dir, wide = true))
 
   /** CTE chain `v, s0..sN, enc(w, ew)` — the greedy encode of every
@@ -2021,7 +2021,7 @@ object Q64oWordpieceDriftGatedStore extends GraftQuery {
   * within-envelope flags, all replayed exactly by the oracle. At
   * scale the audit columns drop and only the sampled arm runs
   * (q30b's documented trade) — [[decideSampled]] is that production
-  * shape, and ScaleBench's `q64q_gate_decide_sampled` decade row
+  * shape, and BASELINE.md's `q64q_gate_decide_sampled` decade row
   * prices it against the full decide. From the standard layout the
   * sampled decide's floor is the corpus SCAN (text decoded before
   * the doc-id filter); [[decideSampledPruned]] over the

@@ -658,15 +658,15 @@ object Q60cExciseDuplicates extends GraftQuery {
     * unique) the giant-key hash aggregate spilled at 245 s and the
     * join-back added 163 s, while the window computes the same
     * removals in 54 s with a near-linear hop (4.8× for 10× data;
-    * DiagExcise1000 carries the decomposition, round 18). Same
+    * decomposition in BASELINE.md, round 18). Same
     * semantics: occurrences of spans seen ≥2× minus the (doc_id, i)
     * minimum keeper — the oracle is unchanged. */
   private[graft] def excise(docs: DataFrame): DataFrame =
     exciseUnsorted(docs).orderBy(col("doc_id"))
 
   /** The operator WITHOUT the final global sort — the production
-    * surface (VERDICT r18 #2). DiagReassemble proved the operator
-    * itself linear at the fourth decade (mask/rewrite 11.7 s, hop
+    * surface (VERDICT r18 #2). The round-18 decomposition
+    * (BASELINE.md) proved the operator itself linear at the fourth decade (mask/rewrite 11.7 s, hop
     * 9.75) and the superlinear tail to be the driver-dump
     * `orderBy(doc_id)` on the corpus-sized rewritten-text output
     * (39.1 s sorted vs 11.7 s unsorted — a 27 s range-sort spill)
@@ -704,7 +704,7 @@ object Q60cExciseDuplicates extends GraftQuery {
     * removes; rows land in whatever order the mask join produces and
     * a consumer needing order sorts its own shard (doc_id mod N keeps
     * each doc whole within one shard). Round19Spec pins write-tier
-    * rows ≡ dump-tier rows re-sorted; ScaleBench's
+    * rows ≡ dump-tier rows re-sorted; BASELINE.md's
     * `q60c_write_excise` decade row prices it. */
   private[graft] def writeShards(docs: DataFrame, outDir: String,
       nShards: Int = 32): Unit =

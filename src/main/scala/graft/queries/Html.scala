@@ -285,7 +285,7 @@ object Q72bWarcExtract extends GraftQuery {
     // fold below is the query's dominant CPU (~1.2 s serial, paid
     // TWICE: once by the final sort's range sampling, once by the
     // sort itself). Spread across cores the fold is ~40 ms per pass
-    // (r20: same-window PlanDump pair 3.3 → 2.2 s, full benches
+    // (OPTIMIZATION_r20.md: same-window pair 3.3 → 2.2 s, full benches
     // 2.9 → 1.2 s; see Tables.spreadCpu for the scale guard and the
     // rejected global-AQE alternative).
     val archives = Tables.spreadCpu(Tables.documents(spark, dir)

@@ -3544,6 +3544,11 @@ object Q19gAnnPq extends GraftQuery {
   val Ks = 16
   /** ADC candidates kept for the exact re-rank pass. */
   val Rerank = 50
+  /** Partitions of the codebook fit input. A constant, not the core
+    * count: k-means|| seeds per partition index, so a core-derived
+    * count would fit different codebooks on different hosts. 8 keeps
+    * the codebooks every host with ≤ 8 cores fitted before. */
+  private val FitPartitions = 8
   private val prefix = "graft_pqstore"
 
   /** Build (or bind) the PQ tier over the BOUND q19e index: returns
@@ -3569,12 +3574,12 @@ object Q19gAnnPq extends GraftQuery {
       // codebooks — and the spec's measured recall — reproducible
       // across sessions. (Observed before the pin: 0.30 recall with
       // the store built in isolation vs 0.20 with the store built by
-      // an earlier suite, same tree, same seed.)
+      // an earlier suite, same tree, same seed.) The partition count
+      // is `FitPartitions`, so the host's core count drops out too.
       val base = spark.table(listsT)
         .select(col("vec_id"), col("list_id"),
           col("embedding").cast("array<double>").as("emb"))
-        .repartition(math.max(8, spark.sparkContext.defaultParallelism),
-          col("vec_id"))
+        .repartition(FitPartitions, col("vec_id"))
         .sortWithinPartitions(col("vec_id"))
         .localCheckpoint()
       // One seeded KMeans per subspace; each fit sees only its

@@ -148,7 +148,7 @@ object Q58bShardExport extends GraftQuery {
   /** One row per exported LINE: (lang, shard_id, doc_id, chunk_id,
     * ct, line) under exactly q58's assignment rule, with the chunk's
     * own text carried (`doc:chunk:tokens`). */
-  private[graft] def linesFrame(spark: SparkSession, dir: String): DataFrame = {
+  private def linesFrame(spark: SparkSession, dir: String): DataFrame = {
     val kept = Q42CorpusClean.statusByDoc(spark, dir, withContamination = true)
       .filter(col("status") === "kept")
       .select(col("doc_id"), col("lang"))
@@ -189,7 +189,7 @@ object Q58bShardExport extends GraftQuery {
     * each newline-terminated (the text writer's framing). The sort
     * happens INSIDE the aggregate (array_sort over per-shard state),
     * so the checksum is collect-order-independent. */
-  private[graft] def manifestOf(lines: DataFrame): DataFrame =
+  private def manifestOf(lines: DataFrame): DataFrame =
     // Explicit keyed repartition BEFORE the groupBy (r20): the
     // checksum aggregate concatenates + md5's every exported byte, so
     // its reduce stage is CPU-dense but byte-light per group — AQE's

@@ -681,7 +681,7 @@ object Q12bApproxDistinct extends GraftQuery {
   def run(spark: SparkSession, dir: String): DataFrame =
     // Deliberately NOT spread (r19): parallelizing the partial HLL
     // (rsd 0.01 → 2^14-register sketches) was measured NET-SLOWER
-    // (3.7 → 5.2 s; DiagSpread: task time inflated ~40× under 32-way
+    // (3.7 → 5.2 s; OPTIMIZATION_r19.md: task time inflated ~40× under 32-way
     // concurrency) — the sketch update itself is the floor here.
     Tables.lineitem(spark, dir)
       .groupBy(col("l_returnflag"))
@@ -928,7 +928,7 @@ object Q33GroupingSets extends GraftQuery {
   * salt never reaches the aggregate, so the result is exactly the
   * plain join the oracle computes. This is the manual fallback for
   * single-key skew beyond what AQE's skew-join splitting handles —
-  * measured (BASELINE round-12, DiagSkew): when AQE CAN split, it
+  * measured (HISTORY.md, round-12 AQE skew-join): when AQE CAN split, it
   * beats this salt 1.7–2.4× (it splits only hot partitions; salting
   * replicates the build side ×16 for every key), so the plain join
   * under the session's AQE default is the first choice; the salt

@@ -118,7 +118,7 @@ object Q70SemanticDedup extends GraftQuery {
       .filter(col("cos") >= tau)
       .groupBy(col("vb")).agg(min(col("va")).as("dom_id"))
     // UNORDERED: the driver-facing queries add the total order; the
-    // composed consumers (q71's doc_id join, ScaleBench's noop sink)
+    // composed consumers (q71's doc_id join, a benchmark's noop sink)
     // would only throw a global range-exchange away.
     assign.join(doms, assign("vec_id") === doms("vb"), "left")
       .select(col("vec_id"), col("cluster"),

@@ -7,8 +7,9 @@ import graft.queries.{Q19dAnnIvf, Q19eAnnIvfStore, Q19gAnnPq, Q19SimilarityTopK}
   * KMeans codebooks live in the JVM) — this spec is its gate:
   * determinism, recall floors against both the exact baseline (q19,
   * hash-checked) and the uncompressed store tier (q19e), the
-  * partition-pruned codes scan, and the measured on-disk
-  * bytes-per-vector compression that is the tier's reason to exist. */
+  * partition-pruned codes scan, the codebook's independence from the
+  * core count, and the measured on-disk bytes-per-vector compression
+  * that is the tier's reason to exist. */
 class AnnPqSpec extends SparkSpec {
   import spark.implicits._
 
@@ -83,6 +84,26 @@ class AnnPqSpec extends SparkSpec {
     } finally evictAll()
   }
 
+  test("q19g: the codebook does not depend on the core count (local[16] child JVM ≡ this session)") {
+    evictAll()
+    val childWh = java.nio.file.Files.createTempDirectory("pq_child_wh")
+    try {
+      val child = graft.plans.ChildJvm.runUntil(
+        "graft.AnnPqCodebookChild", Seq(sf01, childWh.toString),
+        AnnPqCodebookChild.Done)
+      val (_, _, cbT, _) = Q19gAnnPq.ensurePqStore(spark, sf01)
+      val mine = AnnPqCodebookChild.rows(spark, cbT)
+      assert(mine.size == Q19gAnnPq.M * Q19gAnnPq.Ks)
+      val differing = child.zip(mine).count { case (c, m) => c != m }
+      assert(child.size == mine.size && differing == 0,
+        s"$differing of ${mine.size} codebook rows differ under local[16] " +
+          s"(child returned ${child.size} rows)")
+    } finally {
+      evictAll()
+      graft.plans.Stores.deleteTree(childWh)
+    }
+  }
+
   test("q19g: the codes table is an order-of-magnitude smaller on disk than the raw lists (the memory tier's contract)") {
     evictAll()
     try {
@@ -106,5 +127,32 @@ class AnnPqSpec extends SparkSpec {
       assert(codeB * 4 < rawB,
         s"codes table not meaningfully smaller: $codeB vs $rawB")
     } finally evictAll()
+  }
+}
+
+/** Child-JVM side of AnnPqSpec's core-count test: builds the PQ store
+  * under `local[16]` in its own warehouse and prints the codebook rows.
+  * Args: corpus dir, warehouse dir. */
+object AnnPqCodebookChild {
+  val Done = "CODEBOOK_DONE"
+
+  /** One line per codebook row, in (sub_id, code_id) order, with the
+    * centroid's doubles printed exactly. */
+  def rows(spark: org.apache.spark.sql.SparkSession, cbT: String): Seq[String] =
+    spark.table(cbT).orderBy("sub_id", "code_id").collect().toSeq
+      .map(r => s"${r.getInt(0)} ${r.getInt(1)} ${r.getSeq[Double](2).mkString(",")}")
+
+  def main(args: Array[String]): Unit = {
+    val Array(corpusDir, warehouseDir) = args
+    val spark = Engine.configure(org.apache.spark.sql.SparkSession.builder()
+        .master("local[16]")
+        .config("spark.sql.warehouse.dir", warehouseDir)
+        .config("spark.sql.shuffle.partitions", "16"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val (_, _, cbT, _) = Q19gAnnPq.ensurePqStore(spark, corpusDir)
+    rows(spark, cbT).foreach(println)
+    println(Done)
+    Console.flush()
   }
 }

@@ -112,11 +112,11 @@ class Round11Spec extends SparkSpec {
   }
 
   test("q64c: per-merge cost is incremental — later merges touch few words") {
-    // Not a wall-clock assertion (those live in ScaleBench): assert
-    // the STRUCTURAL property that makes K≈30k viable — the learner
-    // completes a merge budget 25× q64's on a realistic vocabulary in
-    // one call, and the trajectory prefix is stable under k (merge i
-    // does not depend on the budget).
+    // Not a wall-clock assertion (HISTORY.md's round-11 scale points
+    // hold those): assert the STRUCTURAL property that makes K≈30k
+    // viable — the learner completes a merge budget 25× q64's on a
+    // realistic vocabulary in one call, and the trajectory prefix is
+    // stable under k (merge i does not depend on the budget).
     val docs = Tables.documents(spark, sf)
     val freq = graft.queries.Bpe.wordFreq(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -220,8 +220,8 @@ class Round11Spec extends SparkSpec {
     // vocabulary — the learner's input is the (word, cnt) table, so
     // this IS the production-shaped workload; only the one corpus
     // scan upstream of it scales with data, and that term is priced
-    // in ScaleBench. Deterministic seed; trajectory cross-checked
-    // against the naive recount on its first 150 merges (running the
+    // in HISTORY.md's round-11 scale points. Deterministic seed;
+    // trajectory cross-checked against the naive recount on its first 150 merges (running the
     // naive learner to 30k would be O(K·vocab·len) — the exact cost
     // the incremental structure exists to avoid).
     val rnd = new scala.util.Random(3011)

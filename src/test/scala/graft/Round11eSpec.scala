@@ -409,7 +409,7 @@ class Round11eSpec extends SparkSpec {
     // plus band-decorrelated singletons.
     val thin = (Seq(
       (0L, h0), (1L, h0), (2L, h1), (3L, h1)) ++
-      (4L until 12L).map(i => (i, f"${DiagBands.mix(i * 7 + 3)}%016x")))
+      (4L until 12L).map(i => (i, f"${SplitMix.mix(i * 7 + 3)}%016x")))
       .toDF("media_id", "dhash")
     val bruteThin = Q25dImageNearDup.verifiedCandidates(thin)
       .orderBy(col("hamming"), col("id_a"), col("id_b")).limit(25)

@@ -173,11 +173,11 @@ class Round11fSpec extends SparkSpec {
     // bands and spread across many.
     val st = graft.multimodal.Q25hAudioDedupStore.store
     val cases = (0 until 200).map { t =>
-      var h = DiagBands.mix(t * 31 + 7)
+      var h = SplitMix.mix(t * 31 + 7)
       val flips = t % 7 // 0..6 differing bits
       var h2 = h
       (0 until flips).foreach { f =>
-        val bit = ((DiagBands.mix(t * 131 + f) % 64) + 64) % 64
+        val bit = ((SplitMix.mix(t * 131 + f) % 64) + 64) % 64
         h2 ^= 1L << bit.toInt
       }
       (t.toLong * 2, f"$h%016x", t.toLong * 2 + 1, f"$h2%016x")

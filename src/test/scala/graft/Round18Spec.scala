@@ -1,9 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.functions._
-import graft.plans.{AdmitLog, ReadRepair, Stores}
+import graft.plans.{AdmitLog, ReadRepair, Stores, TornAppendDrill}
 import graft.queries._
 
 /** Round 18 (VERDICT r17 next #1): append durability under HARD
@@ -274,71 +274,10 @@ class Round18Spec extends SparkSpec {
   }
 
   // ------------------------------------------------------------------
-  // SIGKILL drill harness
+  // SIGKILL drill harness: TornAppendDrill.sigkill forks the drill
+  // against OUR warehouse and returns once it is dead with the torn
+  // state on disk
   // ------------------------------------------------------------------
-
-  /** Fork `TornAppendDrill <family>` against OUR warehouse, wait for
-    * its TORN_READY, SIGKILL it, and reap. Returns only once the
-    * child is dead with the torn state on disk. */
-  /** [[sigkillDrill]] with a 4th drill argument (the epoch drill's
-    * scratch dir). */
-  private def sigkillDrill4(family: String, corpusDir: String,
-      extra: String): Unit = sigkillDrill(family, corpusDir, Seq(extra))
-
-  private def sigkillDrill(family: String, corpusDir: String,
-      extraArgs: Seq[String] = Nil): Unit = {
-    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val opens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = (Seq(javaBin, "-Xmx3g") ++ opens ++ Seq(
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", sys.props("java.class.path"),
-      "graft.plans.TornAppendDrill", family, corpusDir, wh.toString)
-      ++ extraArgs)
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    val p = pb.start()
-    try {
-      val br = new java.io.BufferedReader(
-        new java.io.InputStreamReader(p.getInputStream))
-      val deadline = System.currentTimeMillis() + 300000
-      var ready = false
-      while (!ready && System.currentTimeMillis() < deadline) {
-        if (br.ready()) {
-          val line = br.readLine()
-          if (line != null && line.contains("TORN_READY")) ready = true
-        } else if (!p.isAlive)
-          fail(s"drill '$family' died before staging (exit ${p.exitValue()})")
-        else Thread.sleep(200)
-      }
-      assert(ready, s"drill '$family' never reported TORN_READY")
-    } finally {
-      p.destroyForcibly() // SIGKILL — no shutdown hooks, no flush
-      p.waitFor()
-    }
-  }
-
-  private def tornPartsUnder(root: Path): Seq[Path] = {
-    import scala.jdk.CollectionConverters._
-    val fs = new org.apache.hadoop.fs.Path(root.toUri)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val s = Files.walk(root)
-    try s.iterator().asScala.filter { p =>
-      val n = p.getFileName.toString
-      Files.isRegularFile(p) && n.endsWith(".parquet") &&
-        !n.startsWith(".") && !n.startsWith("_") &&
-        ReadRepair.isTorn(fs,
-          fs.getFileStatus(new org.apache.hadoop.fs.Path(p.toUri)))
-    }.toVector
-    finally s.close()
-  }
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -358,8 +297,8 @@ class Round18Spec extends SparkSpec {
         .write.parquet(s"$scratch/delta")
       Seq(runT, markerT).foreach(Stores.dropManaged(spark, _))
 
-      sigkillDrill4("epoch", sf, scratch.toString)
-      assert(tornPartsUnder(wh.resolve(runT)).nonEmpty,
+      TornAppendDrill.sigkill("epoch", sf, wh, Seq(scratch.toString))
+      assert(TornAppendDrill.tornParts(spark, wh.resolve(runT)).nonEmpty,
         "drill left no torn part under the epoch table")
 
       // The restarting process: repair precedes ANY footer read (the
@@ -386,7 +325,7 @@ class Round18Spec extends SparkSpec {
         Some(s"$scratch/ckpt"))(Q74Bm25.postingsOf)
       assert(applied == 2L,
         s"expected killed epoch 1 re-applied + epoch 2, got $applied")
-      assert(tornPartsUnder(wh.resolve(runT)).isEmpty,
+      assert(TornAppendDrill.tornParts(spark, wh.resolve(runT)).isEmpty,
         "a torn part survived the restart")
       val got = StreamQueries.epochless(spark.table(runT))
         .collect().map(_.toString).sorted.toSeq
@@ -411,8 +350,8 @@ class Round18Spec extends SparkSpec {
     assert(Files.exists(marker), "no commit marker before the drill")
     val markerM = Files.getLastModifiedTime(marker)
 
-    sigkillDrill("bm25", sf)
-    assert(tornPartsUnder(wh.resolve(lenT)).nonEmpty,
+    TornAppendDrill.sigkill("bm25", sf, wh)
+    assert(TornAppendDrill.tornParts(spark, wh.resolve(lenT)).nonEmpty,
       "drill left no torn part under the lengths table")
     val logT = AdmitLog.logTableOf(postT)
 
@@ -420,8 +359,8 @@ class Round18Spec extends SparkSpec {
     val after = rowsOf(Q74bBm25Store.run(spark, sf))
     assert(after == before,
       "post-kill serve diverges from the pre-kill serve")
-    assert(tornPartsUnder(wh.resolve(lenT)).isEmpty &&
-      tornPartsUnder(wh.resolve(postT)).isEmpty,
+    assert(TornAppendDrill.tornParts(spark, wh.resolve(lenT)).isEmpty &&
+      TornAppendDrill.tornParts(spark, wh.resolve(postT)).isEmpty,
       "a torn part survived recovery")
     assert(Files.isDirectory(
       wh.resolve(lenT + ReadRepair.QuarantineSuffix)),
@@ -449,14 +388,14 @@ class Round18Spec extends SparkSpec {
     }
     val markerM = Files.getLastModifiedTime(marker)
 
-    sigkillDrill("span", sf)
-    assert(tornPartsUnder(wh.resolve(spansT)).nonEmpty,
+    TornAppendDrill.sigkill("span", sf, wh)
+    assert(TornAppendDrill.tornParts(spark, wh.resolve(spansT)).nonEmpty,
       "drill left no torn part under the span store")
 
     val after = rowsOf(Q60dExciseStore.run(spark, sf))
     assert(after == before,
       "post-kill span serve diverges from the pre-kill serve")
-    assert(tornPartsUnder(wh.resolve(spansT)).isEmpty,
+    assert(TornAppendDrill.tornParts(spark, wh.resolve(spansT)).isEmpty,
       "torn span part survived recovery")
     assert(Files.isDirectory(
       wh.resolve(spansT + ReadRepair.QuarantineSuffix)),
@@ -474,14 +413,14 @@ class Round18Spec extends SparkSpec {
     }
     val markerM = Files.getLastModifiedTime(marker)
 
-    sigkillDrill("ann", sf)
-    assert(tornPartsUnder(wh.resolve(listsT)).nonEmpty,
+    TornAppendDrill.sigkill("ann", sf, wh)
+    assert(TornAppendDrill.tornParts(spark, wh.resolve(listsT)).nonEmpty,
       "drill left no torn part under the lists table")
 
     val after = rowsOf(Q19eAnnIvfStore.run(spark, sf))
     assert(after == before,
       "post-kill ANN serve diverges from the pre-kill serve")
-    assert(tornPartsUnder(wh.resolve(listsT)).isEmpty,
+    assert(TornAppendDrill.tornParts(spark, wh.resolve(listsT)).isEmpty,
       "torn list part survived recovery")
     assert(Files.isDirectory(
       wh.resolve(listsT + ReadRepair.QuarantineSuffix)),

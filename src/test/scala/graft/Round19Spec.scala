@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
-import graft.plans.{AdmitLog, Bucketing, FamilyRegistry, GuardTrace, ReadRepair, Stores}
+import graft.plans.{AdmitLog, Bucketing, FamilyRegistry, GuardTrace, Stores, TornAppendDrill}
 import graft.queries._
 
 /** Round 19 (VERDICT r18 brief + ADVICE r18):
@@ -300,59 +300,6 @@ class Round19Spec extends SparkSpec {
   // FamilyRegistry entry, must serve green after a hard-killed append
   // ------------------------------------------------------------------
 
-  private def sigkillDrill(family: String, corpusDir: String): Unit = {
-    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val opens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(javaBin, "-Xmx3g") ++ opens ++ Seq(
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", sys.props("java.class.path"),
-      "graft.plans.TornAppendDrill", family, corpusDir, wh.toString)
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    val p = pb.start()
-    try {
-      val br = new java.io.BufferedReader(
-        new java.io.InputStreamReader(p.getInputStream))
-      val deadline = System.currentTimeMillis() + 300000
-      var ready = false
-      while (!ready && System.currentTimeMillis() < deadline) {
-        if (br.ready()) {
-          val line = br.readLine()
-          if (line != null && line.contains("TORN_READY")) ready = true
-        } else if (!p.isAlive)
-          fail(s"drill '$family' died before staging (exit ${p.exitValue()})")
-        else Thread.sleep(200)
-      }
-      assert(ready, s"drill '$family' never reported TORN_READY")
-    } finally {
-      p.destroyForcibly() // SIGKILL — no shutdown hooks, no flush
-      p.waitFor()
-    }
-  }
-
-  private def tornPartsUnder(root: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
-    val fs = new org.apache.hadoop.fs.Path(root.toUri)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val s = Files.walk(root)
-    try s.iterator().asScala.filter { p =>
-      val n = p.getFileName.toString
-      Files.isRegularFile(p) && n.endsWith(".parquet") &&
-        !n.startsWith(".") && !n.startsWith("_") &&
-        ReadRepair.isTorn(fs,
-          fs.getFileStatus(new org.apache.hadoop.fs.Path(p.toUri)))
-    }.toVector
-    finally s.close()
-  }
-
   test("registry-driven SIGKILL drills: each appendable family serves green after a torn append") {
     // The three families Round18Spec drills by hand (span/bm25/ann)
     // are excluded; these six are the coverage the registry adds.
@@ -363,12 +310,12 @@ class Round19Spec extends SparkSpec {
       val fam = FamilyRegistry.families.find(_.prefix == prefix)
         .getOrElse(fail(s"$prefix missing from FamilyRegistry"))
       val tables = fam.tables(spark, sf) // build/bind in THIS catalog
-      sigkillDrill(prefix, sf)
+      TornAppendDrill.sigkill(prefix, sf, wh)
       val target = wh.resolve(tables(fam.drillIdx))
-      assert(tornPartsUnder(target).nonEmpty,
+      assert(TornAppendDrill.tornParts(spark, target).nonEmpty,
         s"$prefix drill staged no torn part under $target")
       fam.serve(spark, sf) // must recover — no eviction, no failure
-      assert(tornPartsUnder(target).isEmpty,
+      assert(TornAppendDrill.tornParts(spark, target).isEmpty,
         s"$prefix: torn part survived the serve (guard did not engage)")
     }
   }

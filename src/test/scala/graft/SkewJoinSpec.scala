@@ -55,7 +55,7 @@ class SkewJoinSpec extends SparkSpec {
   }
 
   test("AQE DECLINES the split when the join key is the downstream grouping key — q34's salt is the fallback") {
-    // The measured dispatch rule (BASELINE round-12, DiagSkew): AQE
+    // The measured dispatch rule (HISTORY.md, round-12 AQE skew-join): AQE
     // beats manual salting whenever it can split, but splitting a
     // partition would break a downstream hash-distribution
     // requirement on the same key, so a join feeding GROUP BY <join

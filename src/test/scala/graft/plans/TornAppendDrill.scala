@@ -1,6 +1,6 @@
 package graft.plans
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 /** DURABILITY DRILL (VERDICT r17 next #1): a separate-JVM `main` that
   * reproduces, deterministically, the on-disk state a hard-killed
   * append leaves behind — then waits to be SIGKILLed by the driving
-  * spec (Round18Spec). One drill per append family:
+  * spec (Round18Spec, Round19Spec) through [[sigkill]]. One drill per
+  * append family:
   *
   *  - `bm25`  — the [[graft.queries.Q74bBm25Store]] admission path
   *    (s23's batch twin): the drill opens a REAL admission
@@ -36,6 +37,31 @@ import org.apache.spark.sql.functions._
   * that never finished. Protocol on stdout: `TORN_READY` once the
   * state is staged; the spec kills on reading it. */
 object TornAppendDrill {
+
+  /** Fork the drill for `family` against `warehouse`, wait for its
+    * TORN_READY, SIGKILL it, and reap. Returns only once the child is
+    * dead with the torn state on disk. `extraArgs` follow the three
+    * common ones (the epoch drill's scratch dir). */
+  def sigkill(family: String, corpusDir: String, warehouse: Path,
+      extraArgs: Seq[String] = Nil): Unit =
+    ChildJvm.runUntil("graft.plans.TornAppendDrill",
+      Seq(family, corpusDir, warehouse.toString) ++ extraArgs, "TORN_READY")
+
+  /** The part files under `root` that [[ReadRepair.isTorn]] flags. */
+  def tornParts(spark: SparkSession, root: Path): Seq[Path] = {
+    import scala.jdk.CollectionConverters._
+    val fs = new org.apache.hadoop.fs.Path(root.toUri)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val s = Files.walk(root)
+    try s.iterator().asScala.filter { p =>
+      val n = p.getFileName.toString
+      Files.isRegularFile(p) && n.endsWith(".parquet") &&
+        !n.startsWith(".") && !n.startsWith("_") &&
+        ReadRepair.isTorn(fs,
+          fs.getFileStatus(new org.apache.hadoop.fs.Path(p.toUri)))
+    }.toVector
+    finally s.close()
+  }
 
   /** Stage a torn part file in `dir`: a prefix of an existing
     * committed part under the same directory tree, written under a
