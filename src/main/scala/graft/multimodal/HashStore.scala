@@ -98,8 +98,7 @@ private[graft] final class BandedHashStore(
     * killed media admit's partially-landed READABLE rows survived and
     * could shift future best-base picks). No derived scalars here. */
   private[graft] def scrubTorn(spark: SparkSession, bandsT: String): Seq[Long] =
-    graft.plans.AdmitLog.scrub(spark,
-      graft.plans.AdmitLog.logTableOf(bandsT), Seq(bandsT)) { () }
+    graft.plans.AdmitLog.scrub(spark, Seq(bandsT)) { () }
 
   /** The store read frame: (bkey, base_id, base_dhash). Scrubbed
     * first (VERDICT r17 #1 + the round-18 guard): repairs a torn
@@ -116,42 +115,24 @@ private[graft] final class BandedHashStore(
     * delta dedups against them too — two arriving shards that
     * duplicate each other (but nothing in the base corpus) must not
     * both be admitted. CONTRACT: `feats` must be the items to append
-    * verbatim — pass `verdicts` (this delta's [[verdictFrame]]
-    * output) to have the `verdict == 'new'` filter applied here;
-    * without it the caller must pre-filter, because appending a
-    * raw delta re-inserts dup hashes (store growth, and a dup row
-    * with a lower media_id would shift future best-base picks).
-    * Delta-sized; routed through the SAME bucket spec the store was
-    * created with, so the zero-exchange join posture survives the
-    * append; `Bucketing.compact` bounds file growth.
+    * verbatim — the caller filters this delta's [[verdictFrame]] to
+    * `verdict == 'new'` first, because appending a raw delta
+    * re-inserts dup hashes (store growth, and a dup row with a lower
+    * media_id would shift future best-base picks). Delta-sized,
+    * collapsed like the build; `Bucketing.compact` bounds file growth.
     *
-    * EXACTLY-ONCE (round 18, the bm25 guard applied to the media
-    * family): the append runs under the [[graft.plans.AdmitLog]]
-    * intent/commit guard — rows tagged with the admission id, commit
+    * EXACTLY-ONCE through [[graft.plans.AdmitLog.admit]] (at most one
+    * new file per bucket): rows tagged with the admission id, commit
     * row appended only after the data append, and a crash anywhere
     * between is scrubbed by the next serve/admit instead of leaving
     * half an ingest's band rows live. `injectCrashAfter` (spec hook,
     * 0 = off): 1 throws after the data append, before the commit. */
   private[graft] def admit(feats: DataFrame, bandsT: String,
-      verdicts: Option[DataFrame] = None,
       injectCrashAfter: Int = 0): Unit = {
     val spark = feats.sparkSession
     scrubTorn(spark, bandsT)
-    val toAppend = verdicts match {
-      case Some(v) => feats.join(
-        v.filter(col("verdict") === "new").select(col("media_id")),
-        Seq("media_id"), "left_semi")
-      case None => feats
-    }
-    val logT = graft.plans.AdmitLog.logTableOf(bandsT)
-    val adm = graft.plans.AdmitLog.begin(spark, logT)
-    bandRows(collapse(toAppend))
-      .withColumn("_adm", lit(adm))
-      .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
-      .bucketBy(16, "bkey").sortBy("bkey").saveAsTable(bandsT)
-    if (injectCrashAfter == 1)
-      throw new RuntimeException(s"injected crash before commit marker ($adm)")
-    graft.plans.AdmitLog.commit(spark, logT, adm)
+    graft.plans.AdmitLog.admit(spark,
+      Seq(bandsT -> bandRows(collapse(feats))), injectCrashAfter) { () }
   }
 
   /** Banded candidates + exact-Hamming verify + best-base pick over

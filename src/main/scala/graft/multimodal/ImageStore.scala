@@ -45,75 +45,32 @@ object Q25fImageDedupStore extends GraftQuery {
   val name = "q25f_image_dedup_store"
   private[graft] val store = new BandedHashStore("graft_imgstore", MaxHamming)
 
-  /** One row per (band, key) bucket of each hash (see
-    * [[BandedHashStore.bandRows]]). */
-  private[graft] def bandRows(feats: DataFrame): DataFrame =
-    store.bandRows(feats)
-
-  /** EXACT-DUP COLLAPSE before the near-dup join (the q18 staging —
-    * "dedupe exactly, then near-dup the survivors" — applied at the
-    * hash level; [[BandedHashStore.collapse]]). Not an optimization
-    * of the synthetic fixture but the structural answer to a real
-    * corpus shape: image corpora are full of exact re-uploads, and
-    * without the collapse every one lands in every band bucket its
-    * hash touches — the measured 100×-scale serve explosion
-    * (HISTORY.md round 11: 167k images with 13k distinct hashes drove bucket
-    * occupancy to 8k rows and the banded join to 111 s; collapsed,
-    * the join is distinct-hash sized). */
-  private[graft] def collapse(feats: DataFrame): DataFrame =
-    store.collapse(feats)
-
-  /** The train split's feature frame (real PNG codec pass). */
-  private def trainFeats(spark: SparkSession, dir: String): DataFrame =
+  /** One split's image fingerprints (real PNG codec pass), as the
+    * store's (media_id, dhash) feature frame. Exact re-uploads are
+    * collapsed by the store ([[BandedHashStore.collapse]]) before any
+    * band join — the structural answer to a real corpus shape
+    * (HISTORY.md round 11: 167k images with 13k distinct hashes drove
+    * bucket occupancy to 8k rows and the banded join to 111 s;
+    * collapsed, the join is distinct-hash sized). */
+  private[graft] def featsOf(spark: SparkSession, dir: String,
+      split: String): DataFrame =
     extractImageFeatures(Q25cImageFeatures.imageFrames(
         Multimodal.mediaTable(spark, dir)
-          .filter(Q40TrainTestSplit.splitColOf("media_id") === "train")))
+          .filter(Q40TrainTestSplit.splitColOf("media_id") === split)))
       .toDF().select(col("media_id"), col("dhash"))
 
   /** Build (or bind/serve) the fingerprinted band store for this
-    * corpus snapshot; returns the bands table name. One row per
-    * DISTINCT corpus hash (see [[collapse]]). */
+    * corpus snapshot; returns the bands table name. */
   private[graft] def ensureStore(spark: SparkSession, dir: String): String =
-    store.ensureStore(spark, dir)(trainFeats(spark, dir))
+    store.ensureStore(spark, dir)(featsOf(spark, dir, "train"))
 
-  /** The store read frame: (bkey, base_id, base_dhash). */
-  private[graft] def storeFrame(spark: SparkSession, bandsT: String): DataFrame =
-    store.storeFrame(spark, bandsT)
-
-  /** The COMMIT step of an image ingest ([[BandedHashStore.admit]]):
-    * append band rows to the store, so the NEXT delta dedups against
-    * them too. CONTRACT (inherited): `feats` must already be the
-    * admitted ("new") items, or `verdicts` must be supplied so the
-    * `verdict == 'new'` filter is applied here. Collapsed like the
-    * build; compact bounds the growth. */
-  private[graft] def admit(spark: SparkSession, feats: DataFrame,
-      bandsT: String, verdicts: Option[DataFrame] = None): Unit =
-    store.admit(feats, bandsT, verdicts)
-
-  /** Banded candidates + exact-Hamming verify + best-base pick over
-    * any delta feature frame — batch (q25f) or STREAMING (s14); see
-    * [[BandedHashStore.verdictFrame]]. */
-  private[graft] def verdictFrame(deltaFeats: DataFrame,
-      storeF: DataFrame): DataFrame =
-    store.verdictFrame(deltaFeats, storeF)
-
-  /** Final-state rows → the audit contract. */
-  private[graft] def formatVerdicts(best: DataFrame): DataFrame =
-    store.formatVerdicts(best)
-
-  def run(spark: SparkSession, dir: String): DataFrame = {
-    // Delta-sized: the test split's own images through the real codec
-    // path, checkpointed narrow (id + 16 hex chars) because the
-    // feature frame feeds two plan branches (hash reps + the verdict
-    // re-attach) and each would otherwise re-run the PNG
-    // encode/decode pass.
-    val deltaFeats = extractImageFeatures(Q25cImageFeatures.imageFrames(
-        Multimodal.mediaTable(spark, dir)
-          .filter(Q40TrainTestSplit.splitColOf("media_id") === "test")))
-      .toDF().select(col("media_id"), col("dhash"))
-      .localCheckpoint()
-    store.runVerdicts(spark, ensureStore(spark, dir), deltaFeats)
-  }
+  /** The test split's own images, checkpointed narrow (id + 16 hex
+    * chars): the feature frame feeds two plan branches (hash reps +
+    * the verdict re-attach), each of which would otherwise re-run the
+    * PNG encode/decode pass. */
+  def run(spark: SparkSession, dir: String): DataFrame =
+    store.runVerdicts(spark, ensureStore(spark, dir),
+      featsOf(spark, dir, "test").localCheckpoint())
 
   /** ALL-PAIRS relational replay (stronger than the banded plan: the
     * operator must agree with the exhaustive decision, proving its

@@ -742,7 +742,7 @@ object Q25kJpegLossy extends GraftQuery {
   * [[bandBitsFor]] width knob and pre-collapsing exact duplicates
   * upstream; the ingest operator (q25f/s14) bakes that collapse in —
   * its store and delta join are DISTINCT-HASH sized by construction
-  * ([[Q25fImageDedupStore.collapse]]). */
+  * ([[BandedHashStore.collapse]]). */
 object Q25dImageNearDup extends GraftQuery {
   import Q25cImageFeatures._
   val name = "q25d_image_neardup"

@@ -3,33 +3,38 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** EXACTLY-ONCE guard for BATCH store admission (VERDICT r13 #3):
-  * the batch twin of the streaming epoch-marker contract
+/** EXACTLY-ONCE guard for BATCH store admission, and the one
+  * admission path of the appendable store families: q57b's signature
+  * store, q18g's labels store, q74b's BM25 store, q60d's span store
+  * and the banded media stores (q25f/q25h/q25j). It is the batch twin
+  * of the streaming epoch-marker contract
   * (`StreamQueries.maintainAppend` — marker committed AFTER the data
-  * append, replay scrubs a partial epoch). Before this, q74b's and
-  * q18g's `admit()` shared a torn-store-on-crash posture: a crash
-  * between the data appends and the meta/labels rewrite left a torn
-  * fingerprint whose only recovery was a full rebuild.
+  * append, replay scrubs a partial epoch). The ANN index is the one
+  * appendable family outside it: its ingest is a streaming tier with
+  * serve-side read-repair.
   *
-  * Protocol (single batch writer per store family — the documented
-  * admission contract; concurrent BUILDS are already serialized by
-  * [[Stores.ensure]]'s cross-process lock):
+  * Protocol ([[admit]] — single batch writer per store family, the
+  * documented admission contract; concurrent BUILDS are already
+  * serialized by [[Stores.ensure]]'s cross-process lock):
   *  1. `begin` appends an INTENT row (adm_id, "intent") to the
   *     family's log table — one single-file append, atomic visibility
   *     (the maintainAppend marker argument: a parquet job commit is a
   *     sequence of task-file renames, but a one-task one-file append
   *     becomes visible with a single rename).
-  *  2. The caller appends its data rows tagged `_adm` = adm_id to
-  *     each family table and rewrites any derived scalars (meta).
+  *  2. Each data frame is tagged `_adm` = adm_id and appended through
+  *     [[Bucketing.appendBucketed]] (≤ one file per bucket); then the
+  *     caller's derived scalars (meta) are recomputed.
   *  3. `commit` appends the COMMIT row. Visible commit ⇒ every data
   *     append above fully committed.
-  * Recovery (`scrub`, run by the store's bind/ensure and at the top
-  * of every admit): an intent with no commit ⇒ that admission may
+  * Recovery (`scrub`, run by each family's `ensureStore`, so every
+  * reader that resolves the store is covered, and at the top of every
+  * admit): an intent with no commit ⇒ that admission may
   * have left PARTIAL rows — rewrite each family table without its
   * `_adm` rows, let the caller recompute derived scalars, then log
   * the id as "scrubbed" so it never re-scrubs. The rewrite is
   * crash-recovery-only, so full-table cost is acceptable (the
-  * maintainAppend posture); detection is O(log), one tiny-table read.
+  * maintainAppend posture); detection is O(log), one tiny-table read,
+  * and no table read at all while a family has no log yet.
   *
   * Build-time rows are tagged `_adm` = −1 (never scrubbed). The log
   * table's name embeds the family head table's fingerprinted name, so
@@ -98,7 +103,7 @@ object AdmitLog {
     * before any scrub could run (the [[ReadRepair]] hazard applied
     * to the guard's own table; the log is tiny, so the repair is a
     * few 12-byte reads). */
-  def begin(spark: SparkSession, logT: String): Long = {
+  private[graft] def begin(spark: SparkSession, logT: String): Long = {
     ReadRepair.repairTable(spark, logT)
     bindIfOnDisk(spark, logT)
     ensureLog(spark, logT)
@@ -108,7 +113,7 @@ object AdmitLog {
   }
 
   /** Seal an admission: every data append before this call committed. */
-  def commit(spark: SparkSession, logT: String, id: Long): Unit =
+  private[graft] def commit(spark: SparkSession, logT: String, id: Long): Unit =
     append(spark, logT, id, "commit")
 
   /** Admission ids whose intent has no commit/scrubbed resolution —
@@ -126,9 +131,9 @@ object AdmitLog {
     }
 
   /** Remove every torn admission's rows from the family's tagged
-    * tables, run the caller's derived-scalar recompute, and resolve
-    * the ids as scrubbed. Returns the ids scrubbed (empty = nothing
-    * torn). The rewrite goes through `insertInto(Overwrite)` — it
+    * tables (the log is keyed on the first, as in [[admit]]), run the
+    * caller's derived-scalar recompute, and resolve the ids as
+    * scrubbed. Returns the ids scrubbed (empty = nothing torn). The rewrite goes through `insertInto(Overwrite)` — it
     * keeps the catalog entry and routes through the TABLE's bucket
     * spec, which is what makes the rewrite correct on BOTH a
     * this-session managed table and a re-BOUND external one (a
@@ -136,8 +141,9 @@ object AdmitLog {
     * re-create managed over the still-populated location —
     * LOCATION_ALREADY_EXISTS; the scrub-after-rebind path ADVICE r14
     * restored is exactly that case). */
-  def scrub(spark: SparkSession, logT: String,
+  private[graft] def scrub(spark: SparkSession,
       tables: Seq[String])(recompute: => Unit): Seq[Long] = {
+    val logT = logTableOf(tables.head)
     // Read-repair BEFORE any table read (VERDICT r17 #1): a job
     // SIGKILLed mid-append can leave a physically torn part file that
     // fails the scan before the row-level scrub below can run. The
@@ -166,5 +172,36 @@ object AdmitLog {
       ids.foreach(append(spark, logT, _, "scrubbed"))
     }
     ids
+  }
+
+  /** ADMIT rows into a store family — the one admission path. The
+    * log is keyed on the first append's table (the family's head
+    * table, as [[FamilyRegistry]]'s `tables` lists it); each frame is
+    * tagged `_adm` = the new id and appended in order through
+    * [[Bucketing.appendBucketed]]; then every appended table is
+    * refreshed, `recompute` rewrites derived scalars, and the commit
+    * lands last. Callers scrub first (their `scrubTorn`), so a torn
+    * earlier admission never mixes with this one. Frames are lazy and
+    * evaluated at their own append, after `begin`.
+    *
+    * `crashAfter` is the failure-injection hook for the specs (0 =
+    * off): k below the number of appends throws after append k; k
+    * equal to it throws after `recompute`, just before the commit. */
+  private[graft] def admit(spark: SparkSession,
+      appends: Seq[(String, DataFrame)], crashAfter: Int = 0)(
+      recompute: => Unit): Unit = {
+    val logT = logTableOf(appends.head._1)
+    val id = begin(spark, logT)
+    def crash(k: Int): Unit =
+      if (crashAfter == k)
+        throw new RuntimeException(s"injected crash at step $k of admission $id")
+    appends.zipWithIndex.foreach { case ((t, df), i) =>
+      Bucketing.appendBucketed(df.withColumn("_adm", lit(id)), t)
+      if (i + 1 < appends.size) crash(i + 1)
+    }
+    appends.foreach(a => spark.catalog.refreshTable(a._1))
+    recompute
+    crash(appends.size)
+    commit(spark, logT, id)
   }
 }

@@ -54,13 +54,47 @@ object Bucketing {
     val wh = java.net.URI.create(
       spark.conf.get("spark.sql.warehouse.dir")).getPath
     Stores.deleteTree(java.nio.file.Paths.get(wh, table))
+    withBucketedScan(spark) {
+      df.repartition(buckets, col(key)).write.mode(SaveMode.Overwrite)
+        .bucketBy(buckets, key).sortBy(key)
+        .format("parquet").saveAsTable(table)
+    }
+  }
+
+  /** APPEND `df` to an existing bucketed table with at most ONE new
+    * file per bucket — the append mode of [[writeBucketed]], and the
+    * one write path of every store admission ([[AdmitLog.admit]]).
+    * The bucket count and key are read from the table's own catalog
+    * spec (managed or re-bound external alike), so no caller restates
+    * them; rows go in by `insertInto` in the table's column order.
+    * A bare `bucketBy` append would write up to (input tasks ×
+    * buckets) files per admission. */
+  def appendBucketed(df: DataFrame, table: String): Unit = {
+    val spark = df.sparkSession
+    val (key, buckets) = specOf(spark, table)
+    withBucketedScan(spark) {
+      df.select(spark.table(table).columns.toSeq.map(col): _*)
+        .repartition(buckets, col(key))
+        .write.mode(SaveMode.Append).insertInto(table)
+    }
+  }
+
+  /** (bucket key, bucket count) of a bound table, from the catalog. */
+  def specOf(spark: SparkSession, table: String): (String, Int) = {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
+      .bucketSpec.collect { case s if s.bucketColumnNames.size == 1 =>
+        (s.bucketColumnNames.head, s.numBuckets) }
+      .getOrElse(sys.error(s"$table carries no single-key bucket spec"))
+  }
+
+  /** Run a bucketed write with the bucketed scan FORCED (see
+    * [[writeBucketed]]). */
+  private def withBucketedScan[T](spark: SparkSession)(body: => T): T = {
     val k = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val saved = spark.conf.get(k)
     spark.conf.set(k, "false")
-    try df.repartition(buckets, col(key)).write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, key).sortBy(key)
-      .format("parquet").saveAsTable(table)
-    finally spark.conf.set(k, saved)
+    try body finally spark.conf.set(k, saved)
   }
 
   /** Join two bucketed tables on their bucket key. When both sides
@@ -72,11 +106,11 @@ object Bucketing {
 
   /** COMPACT an append-mode bucketed table back to one file per
     * bucket, preserving the bucket spec — the operational counterpart
-    * of the q57b store lifecycle: every `Append` through `bucketBy`
-    * (e.g. the signature store's per-ingest `admit`) adds at least
-    * one new file per touched bucket, so a long-lived store
-    * accumulates files linearly in INGESTS while its data grows only
-    * with the CORPUS. A build through [[writeBucketed]] starts the
+    * of the q57b store lifecycle: every admission
+    * ([[appendBucketed]], e.g. the signature store's per-ingest
+    * `admit`) adds at most one new file per bucket, so a long-lived
+    * store accumulates files linearly in INGESTS while its data grows
+    * only with the CORPUS. A build through [[writeBucketed]] starts the
     * store at AT MOST `buckets` files; left alone, every append adds
     * to that — the classic small-file spiral: the zero-exchange
     * bucketed join stays zero-exchange but pays

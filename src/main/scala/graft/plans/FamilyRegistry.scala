@@ -45,11 +45,15 @@ private[graft] object FamilyRegistry {
         * killed ingest's torn part lands; the registry-driven SIGKILL
         * drill tears this one. */
       drillIdx: Int = 0,
-      /** True when the serve's torn-row recovery runs through
-        * [[AdmitLog.scrub]] (the guard only engages on a TORN INTENT,
-        * so the drill must open a real admission before tearing —
-        * exactly the state a killed `admit` leaves). Families with
-        * unconditional serve-side [[ReadRepair]] need no intent. */
+      /** True when the family's torn-row recovery runs through
+        * [[AdmitLog.scrub]] in its `ensureStore` (the guard only
+        * engages on a TORN INTENT, so the drill must open a real
+        * admission before tearing — exactly the state a killed
+        * `admit` leaves). Every batch-admit family is log-guarded,
+        * since every batch admit runs through [[AdmitLog.admit]]; the
+        * ANN indexes are the exception — their appends are streaming
+        * ingests, recovered by unconditional serve-side
+        * [[ReadRepair]], which needs no intent. */
       logGuarded: Boolean = false)
 
   private def noop(df: org.apache.spark.sql.DataFrame): Unit =
@@ -61,7 +65,8 @@ private[graft] object FamilyRegistry {
     Seq(
       StoreFamily("graft_sigstore", appendable = true,
         (s, d) => { val (b, e) = Q57bDeltaDedupStore.ensureStore(s, d); Seq(b, e) },
-        (s, d) => noop(Q57bDeltaDedupStore.run(s, d))),
+        (s, d) => noop(Q57bDeltaDedupStore.run(s, d)),
+        logGuarded = true),
       StoreFamily("graft_lblstore", appendable = true,
         (s, d) => { val (l, b) = Q18gDedupLabelsStore.ensureStore(s, d); Seq(l, b) },
         (s, d) => noop(Q18gDedupLabelsStore.run(s, d)),
@@ -72,7 +77,8 @@ private[graft] object FamilyRegistry {
         logGuarded = true),
       StoreFamily("graft_spanstore", appendable = true,
         (s, d) => Seq(Q60dExciseStore.ensureStore(s, d)),
-        (s, d) => noop(Q60dExciseStore.run(s, d))),
+        (s, d) => noop(Q60dExciseStore.run(s, d)),
+        logGuarded = true),
       StoreFamily("graft_annstore", appendable = true,
         (s, d) => { val (c, l) = Q19eAnnIvfStore.ensureStore(s, d); Seq(c, l) },
         (s, d) => noop(Q19eAnnIvfStore.run(s, d)),

@@ -23,13 +23,12 @@ import org.apache.spark.sql.SparkSession
   * appends only ever CREATE files, so every byte of a torn file was
   * written by the crashed, uncommitted job — its surviving committed
   * rows (if any) are then excised by the family's existing row-level
-  * replay ([[AdmitLog.scrub]] for admission families, the
-  * `maintainAppend` epoch scrub for streamed ones, the idempotent
-  * anti-join re-admit for the span store). Repair + row scrub
-  * together restore exactly the pre-append state — the admission is
-  * then REPLAYED from the caller's delta, which the scrub makes
-  * legal again (the doc-id replay guard passes once the torn rows
-  * are gone).
+  * replay ([[AdmitLog.scrub]] for the batch-admit families, the
+  * `maintainAppend` epoch scrub for streamed ones). Repair + row
+  * scrub together restore exactly the pre-append state — the
+  * admission is then REPLAYED from the caller's delta, which the
+  * scrub makes legal again (the doc-id replay guard passes once the
+  * torn rows are gone).
   *
   * VALIDATION is the physical envelope only — O(12 bytes) per file:
   * leading "PAR1" magic, trailing "PAR1" magic, and a sane footer
@@ -39,9 +38,10 @@ import org.apache.spark.sql.SparkSession
   * checksummed or remote FS a checksum mismatch on those ranges
   * surfaces as an IOException — also quarantined. Cost: one listing
   * + a 12-byte read per part file, driver-side — the same order as
-  * the file listing the scan itself performs, which is why the
-  * unguarded serve paths (span/ANN) can afford it per serve; the
-  * AdmitLog families gate it on an O(log) torn-intent read instead.
+  * the file listing the scan itself performs, which is why the ANN
+  * serve paths (streamed appends, no admission log) can afford it
+  * per serve; the AdmitLog families gate it on an O(log) torn-intent
+  * read in their `ensureStore` instead.
   * The listing is a plain recursive `listStatus` walk and must stay
   * one: `fs.listFiles` builds a `LocatedFileStatus` per file, whose
   * constructor reads the file's owner, group and permission — on a

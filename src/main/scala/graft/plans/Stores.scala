@@ -15,9 +15,11 @@ import org.apache.spark.sql.SparkSession
   *    the one dir whose store went stale, bounding warehouse growth
   *    without touching live stores.
   *
-  * Used by the signature store (`Q57bDeltaDedupStore` — bucketed band
-  * rows + content hashes) and the incremental-aggregate store
-  * (`Q65IncrementalStats` — mergeable per-key partials).
+  * Used by every persisted store family — the appendable ones
+  * (signatures, labels, BM25, spans, ANN indexes, media hashes) and
+  * the write-once ones (aggregates, vocabularies, classifiers, …);
+  * [[FamilyRegistry]] lists them all. Appendable families admit rows
+  * through [[AdmitLog.admit]].
   *
   * CROSS-PROCESS BUILD PROTOCOL (round 11): two sessions sharing a
   * warehouse must not race `build`. The critical section is guarded
@@ -205,8 +207,8 @@ object Stores {
   /** Register a committed store directory another process built as an
     * external table: schema inferred from the parquet files, bucket
     * spec re-declared (Spark reads bucket ids from the file names, so
-    * the zero-exchange join posture survives the re-bind; appends
-    * through the same `bucketBy` keep routing correctly). */
+    * the zero-exchange join posture survives the re-bind, and
+    * [[Bucketing.appendBucketed]] reads the re-declared spec). */
   private[plans] def bind(spark: SparkSession, name: String, loc: Path,
                           bucket: Option[(String, Int)]): Unit = {
     val schema = spark.read.parquet(loc.toString).schema.toDDL

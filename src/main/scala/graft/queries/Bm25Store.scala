@@ -58,8 +58,7 @@ object Q74bBm25Store extends GraftQuery {
         Q74Bm25.postingsOf(docs).withColumn("_adm", lit(-1L)),
         postT, "word", PostingsBuckets)
       graft.plans.Bucketing.writeBucketed(
-        Q74Bm25.wordsOf(docs).groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("dl")).withColumn("_adm", lit(-1L)), lenT,
+        lengthsOf(docs).withColumn("_adm", lit(-1L)), lenT,
         "doc_id", PostingsBuckets)
       spark.sql(s"DROP TABLE IF EXISTS $metaT")
       graft.plans.Stores.deleteTree(
@@ -69,6 +68,11 @@ object Q74bBm25Store extends GraftQuery {
     scrubTorn(spark, names(0), names(1), names(2))
     (names(0), names(1), names(2))
   }
+
+  /** (doc_id, dl) BM25 length rows of `docs` — shared by build and
+    * [[admit]], as [[Q74Bm25.postingsOf]] is for the postings. */
+  private def lengthsOf(docs: DataFrame): DataFrame =
+    Q74Bm25.wordsOf(docs).groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
 
   /** The meta scalars, recomputed from the lengths table — shared by
     * build, admit, and the torn-admission scrub. */
@@ -93,10 +97,8 @@ object Q74bBm25Store extends GraftQuery {
     * Idempotent; no-op when the log is absent or fully resolved. */
   private[graft] def scrubTorn(spark: SparkSession, postT: String,
       lenT: String, metaT: String): Seq[Long] =
-    graft.plans.AdmitLog.scrub(spark,
-      graft.plans.AdmitLog.logTableOf(postT), Seq(postT, lenT)) {
-      writeMeta(spark, lenT, metaT)
-    }
+    graft.plans.AdmitLog.scrub(spark, Seq(postT, lenT))(
+      writeMeta(spark, lenT, metaT))
 
   /** Serve BM25 from a bound (postings, lengths, meta) family —
     * shared by `run` and the admission spec so the post-admit serve
@@ -122,8 +124,8 @@ object Q74bBm25Store extends GraftQuery {
     * driver (ADVICE r15: the old 10⁶ cap was unpriced — plan work
     * blows up long before driver memory does). */
   private[graft] val MaxTerms = 100000
-  /** The postings store's bucket count (shared with every
-    * `writeBucketed`/`bucketBy` call in this family). */
+  /** The postings store's bucket count (shared by both bucketed
+    * tables of this family). */
   private[graft] val PostingsBuckets = 16
   /** Largest batch served through the literal `isin` (the static
     * bucket prune's input shape) — OCCUPANCY-derived, not a flat cap:
@@ -179,13 +181,12 @@ object Q74bBm25Store extends GraftQuery {
   }
 
   /** ADMIT a delta of arriving documents: append their postings and
-    * length rows through the stores' bucket specs and rewrite the
-    * meta scalars LAST (every BM25 statistic is additive — postings,
-    * dl, N and Σdl — so admitted-serve equals a full rebuild over
-    * corpus ∪ delta, which the spec pins row-for-row).
+    * length rows and rewrite the meta scalars LAST (every BM25
+    * statistic is additive — postings, dl, N and Σdl — so
+    * admitted-serve equals a full rebuild over corpus ∪ delta, which
+    * the spec pins row-for-row).
     *
-    * EXACTLY-ONCE (VERDICT r13 #3): the whole admission runs under
-    * the [[graft.plans.AdmitLog]] intent/commit guard — rows are
+    * EXACTLY-ONCE through [[graft.plans.AdmitLog.admit]]: rows are
     * tagged with this admission's id, the commit marker lands only
     * AFTER the meta rewrite, and a crash anywhere in between is
     * scrubbed (rows removed, meta recomputed) by the next
@@ -204,7 +205,6 @@ object Q74bBm25Store extends GraftQuery {
   private[graft] def admit(spark: SparkSession, docs: DataFrame,
       postT: String, lenT: String, metaT: String,
       injectCrashAfter: Int = 0): Unit = {
-    import org.apache.spark.sql.SaveMode
     scrubTorn(spark, postT, lenT, metaT)
     val replayed = docs.select(col("doc_id"))
       .join(spark.table(lenT), Seq("doc_id"), "left_semi")
@@ -212,32 +212,14 @@ object Q74bBm25Store extends GraftQuery {
       s"admit(): delta re-admits doc_ids already in $lenT " +
         s"(e.g. ${replayed.limit(3).collect().mkString(", ")}) — " +
         "replaying a delta would double-count postings")
-    val logT = graft.plans.AdmitLog.logTableOf(postT)
-    val adm = graft.plans.AdmitLog.begin(spark, logT)
-    val ws = Q74Bm25.wordsPosOf(docs).localCheckpoint(true)
-    ws.groupBy(col("doc_id"), col("word"))
-      .agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions"))
-      .withColumn("_adm", lit(adm))
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(PostingsBuckets, "word").sortBy("word").saveAsTable(postT)
-    if (injectCrashAfter == 1)
-      throw new RuntimeException(s"injected crash after postings append ($adm)")
-    ws.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      .withColumn("_adm", lit(adm))
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(PostingsBuckets, "doc_id").sortBy("doc_id").saveAsTable(lenT)
-    spark.catalog.refreshTable(postT)
-    spark.catalog.refreshTable(lenT)
-    writeMeta(spark, lenT, metaT)
-    if (injectCrashAfter == 2)
-      throw new RuntimeException(s"injected crash before commit marker ($adm)")
-    graft.plans.AdmitLog.commit(spark, logT, adm)
+    graft.plans.AdmitLog.admit(spark,
+      Seq(postT -> Q74Bm25.postingsOf(docs), lenT -> lengthsOf(docs)),
+      injectCrashAfter)(writeMeta(spark, lenT, metaT))
   }
 
   /** Operational COMPACTION for the batch admit waves (VERDICT r18
     * #3 — the s23b trade, applied to the PERSISTED family in place):
-    * every [[admit]] appends ≥1 file per touched bucket to postings
+    * every [[admit]] appends up to one file per bucket to postings
     * AND lengths, so ingest-heavy stores pay ingest-count×(open +
     * footer) per bucket at serve. Compacts both bucketed tables back
     * to ≤ [[PostingsBuckets]] files each through their own specs; any

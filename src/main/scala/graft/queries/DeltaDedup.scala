@@ -158,73 +158,65 @@ object Q57bDeltaDedupStore extends GraftQuery {
   /** Build the corpus-side store if this fingerprint's tables are
     * absent; returns (bandsTable, exactTable). Naming, staleness
     * eviction, and synchronization live in [[graft.plans.Stores]]
-    * (the shared persisted-derived-store machinery). */
+    * (the shared persisted-derived-store machinery). Layout v2 adds
+    * the `_adm` admission tag (−1 = build) the exactly-once admit
+    * scrubs by; every resolve then scrubs a torn admission, so each
+    * reader of the store (this serve and s12b's stream) is guarded. */
   private[graft] def ensureStore(spark: SparkSession, dir: String): (String, String) = {
     val names = graft.plans.Stores.ensure(
         spark, prefix, dir, Seq("bands", "exact"),
-        buckets = Map("bands" -> (("bkey", 16)), "exact" -> (("th", 16)))) {
+        buckets = Map("bands" -> (("bkey", 16)), "exact" -> (("th", 16))),
+        layoutVersion = "2") {
         case Seq(bandsT, exactT) =>
       val base = Tables.documents(spark, dir)
         .filter(Q40TrainTestSplit.splitCol === "train")
       graft.plans.Bucketing.writeBucketed(
-        base.select(col("doc_id"), md5(col("text")).as("th")),
-        exactT, "th", 16)
-      val sig = Q18bDedupMinHash.signatures(
-        base.select(col("doc_id"), expr(NorthStar.toksExpr).as("t"))
-          .filter(size(col("t")) >= 3)
-          .select(col("doc_id"),
-            expr(NorthStar.let("t", "t", NorthStar.shinglesExpr)).as("sh")))
-      val bands = sig.select(col("doc_id"), col("sig"),
-        explode(expr(NorthStar.let("sg", "sig",
-          NorthStar.bandKeysExpr("sg")))).as("bkey"))
-      graft.plans.Bucketing.writeBucketed(bands, bandsT, "bkey", 16)
+        exactRows(base).withColumn("_adm", lit(-1L)), exactT, "th", 16)
+      graft.plans.Bucketing.writeBucketed(
+        Q18bDedupMinHash.bandRows(base).withColumn("_adm", lit(-1L)),
+        bandsT, "bkey", 16)
     }
+    scrubTorn(spark, names(0), names(1))
     (names(0), names(1))
   }
 
+  /** (doc_id, th) exact-tier rows — shared by build and [[admit]]. */
+  private def exactRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), md5(col("text")).as("th"))
+
+  /** Resolve any torn admission (intent logged, no commit): quarantine
+    * torn parts and rewrite bands/exact without its `_adm` rows. No
+    * derived scalars in this family. */
+  private def scrubTorn(spark: SparkSession, bandsT: String,
+      exactT: String): Seq[Long] =
+    graft.plans.AdmitLog.scrub(spark, Seq(bandsT, exactT)) { () }
+
   /** The COMMIT step of an ingest: append the admitted ("new")
-    * documents' content hashes and band rows to the store, so the
+    * documents' band rows and content hashes to the store, so the
     * NEXT delta dedups against them too — without this, two arriving
     * shards that duplicate each other (but nothing in the base
-    * corpus) would both be admitted. Delta-sized work: the admitted
-    * docs are hashed/signed once and appended through the SAME bucket
-    * spec the store was created with (Spark routes appended rows to
-    * their buckets, so the zero-exchange join posture survives the
-    * append). Mutating by design: the store is the LIVE corpus index
-    * — the dir fingerprint in the table name tracks the base
-    * snapshot it was seeded from, and admitted deltas accumulate on
-    * top (a production deployment would version or compact the store
-    * on its own schedule). Round10Spec drives a two-wave ingest:
-    * wave 2's copy of a wave-1-admitted doc is flagged against the
-    * UPDATED store. */
+    * corpus) would both be admitted. Delta-sized work through
+    * [[graft.plans.AdmitLog.admit]]: exactly-once (a crashed admit is
+    * scrubbed by the next resolve, so replaying the delta lands it
+    * once), and at most one new file per bucket, so the zero-exchange
+    * join posture survives the append. Mutating by design: the store
+    * is the LIVE corpus index — the dir fingerprint in the table name
+    * tracks the base snapshot it was seeded from, and admitted deltas
+    * accumulate on top (`Bucketing.compact` bounds the file count).
+    * Round10Spec drives a two-wave ingest: wave 2's copy of a
+    * wave-1-admitted doc is flagged against the UPDATED store.
+    * `injectCrashAfter` (spec hook, 0 = off): 1 throws after the
+    * bands append, 2 just before the commit. */
   private[graft] def admit(spark: SparkSession, docs: DataFrame,
-      bandsT: String, exactT: String): Unit = {
-    import org.apache.spark.sql.SaveMode
-    docs.select(col("doc_id"), md5(col("text")).as("th"))
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(16, "th").sortBy("th").saveAsTable(exactT)
-    Q18bDedupMinHash.signatures(
-        docs.select(col("doc_id"), expr(NorthStar.toksExpr).as("t"))
-          .filter(size(col("t")) >= 3)
-          .select(col("doc_id"),
-            expr(NorthStar.let("t", "t", NorthStar.shinglesExpr)).as("sh")))
-      .select(col("doc_id"), col("sig"),
-        explode(expr(NorthStar.let("sg", "sig",
-          NorthStar.bandKeysExpr("sg")))).as("bkey"))
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(16, "bkey").sortBy("bkey").saveAsTable(bandsT)
+      bandsT: String, exactT: String, injectCrashAfter: Int = 0): Unit = {
+    scrubTorn(spark, bandsT, exactT)
+    graft.plans.AdmitLog.admit(spark,
+      Seq(bandsT -> Q18bDedupMinHash.bandRows(docs), exactT -> exactRows(docs)),
+      injectCrashAfter) { () }
   }
 
   def run(spark: SparkSession, dir: String): DataFrame = {
     val (bandsT, exactT) = ensureStore(spark, dir)
-    // Read-repair per serve (the span-store rule, VERDICT r17 #1):
-    // this family's admit is an unguarded append, so a hard-killed
-    // ingest can leave a torn part under the valid marker; the serve
-    // validates the envelope of what it is about to scan. Partial
-    // ROWS from a killed admit are re-admitted by the caller's
-    // replay (the two-wave Round10Spec contract).
-    graft.plans.ReadRepair.repairTable(spark, bandsT)
-    graft.plans.ReadRepair.repairTable(spark, exactT)
     // The delta frame is everything the incremental query reads from
     // the corpus dir: one scan producing (doc_id, content hash,
     // shingle set — null when <3 tokens, which still participates in

@@ -864,7 +864,10 @@ object Q60cExciseDuplicates extends GraftQuery {
   * [[admit]] is the ingest COMMIT: append the delta's surviving
   * (not-previously-present) hashes so the NEXT shard dedups against
   * them — without it, two shards duplicating each other but nothing
-  * in the base would both be admitted. Windows created by excision's
+  * in the base would both be admitted. It runs exactly-once through
+  * [[graft.plans.AdmitLog.admit]], and [[ensureStore]] scrubs a torn
+  * admission, so every reader that resolves the store (this serve
+  * and s20's stream) is guarded. Windows created by excision's
   * new token adjacencies are deliberately NOT indexed (batch
   * ExactSubstr has the same between-snapshots behavior); a compaction
   * re-runs q60c.
@@ -895,89 +898,74 @@ object Q60dExciseStore extends GraftQuery {
   }
 
   /** Build (once per corpus fingerprint) the bucketed distinct-hash
-    * store of the TRAIN split's windows; returns the table name. */
+    * store of the TRAIN split's windows; returns the table name.
+    * Layout v3 adds the `_adm` admission tag (−1 = build); every
+    * resolve scrubs a torn admission. */
   private[graft] def ensureStore(spark: SparkSession, dir: String): String = {
     val n = spanBuckets(spark, dir)
-    graft.plans.Stores.ensure(spark, prefix, dir, Seq("spans"),
+    val spansT = graft.plans.Stores.ensure(spark, prefix, dir, Seq("spans"),
       buckets = Map("spans" -> (("span_h", n))),
-      layoutVersion = "2" /* decade-scoped bucket count */) {
+      layoutVersion = "3" /* decade-scoped bucket count; _adm tag */) {
       case Seq(spansT) =>
       val base = Tables.documents(spark, dir)
         .filter(Q40TrainTestSplit.splitCol === "train")
         .select(col("doc_id"), expr(NorthStar.toksExpr).as("t"))
       graft.plans.Bucketing.writeBucketed(
         Q60cExciseDuplicates.spanPositions(base)
-          .select(col("span_h")).distinct(),
+          .select(col("span_h")).distinct().withColumn("_adm", lit(-1L)),
         spansT, "span_h", n)
     }.head
+    scrubTorn(spark, spansT)
+    spansT
   }
 
+  /** Resolve any torn admission: quarantine torn parts and rewrite
+    * the store without its `_adm` rows. */
+  private def scrubTorn(spark: SparkSession, spansT: String): Seq[Long] =
+    graft.plans.AdmitLog.scrub(spark, Seq(spansT)) { () }
+
   /** Ingest commit: append the delta's hashes that were NOT in the
-    * store (exactly the ones whose first occurrence survived), routed
-    * through the same bucket spec so the zero-exchange serve posture
-    * survives the append. */
+    * store (exactly the ones whose first occurrence survived) through
+    * [[graft.plans.AdmitLog.admit]] — exactly-once, at most one new
+    * file per bucket of the table's own (decade-scoped) spec.
+    * `injectCrashAfter` (spec hook, 0 = off): 1 throws after the
+    * append, before the commit. */
   private[graft] def admit(spark: SparkSession, docs: DataFrame,
-      spansT: String): Unit = {
-    import org.apache.spark.sql.SaveMode
-    // Read-repair first (VERDICT r17 #1 — the family the torn-append
-    // hazard was OBSERVED on): the anti-join below reads the store,
-    // so a part file a killed ingest left torn would fail the admit
-    // itself. This admit needs no row-level scrub after the repair —
-    // it appends only DISTINCT hashes absent from the store, so
-    // replaying a half-landed delta is idempotent by construction
-    // (present hashes are anti-joined away, missing ones re-land).
-    graft.plans.ReadRepair.repairTable(spark, spansT)
-    Q60cExciseDuplicates.spanPositions(
-        docs.select(col("doc_id"), expr(NorthStar.toksExpr).as("t")))
-      .select(col("span_h")).distinct()
-      .join(spark.table(spansT), Seq("span_h"), "left_anti")
-      .write.mode(SaveMode.Append).format("parquet")
-      // the table's OWN bucket count — appends must route through the
-      // spec the store was created with (decade-scoped since round 18)
-      .bucketBy(boundBuckets(spark, spansT), "span_h")
-      .sortBy("span_h").saveAsTable(spansT)
+      spansT: String, injectCrashAfter: Int = 0): Unit = {
+    scrubTorn(spark, spansT)
+    graft.plans.AdmitLog.admit(spark, Seq(spansT ->
+      Q60cExciseDuplicates.spanPositions(
+          docs.select(col("doc_id"), expr(NorthStar.toksExpr).as("t")))
+        .select(col("span_h")).distinct()
+        .join(spark.table(spansT), Seq("span_h"), "left_anti")),
+      injectCrashAfter) { () }
   }
 
   /** Operational COMPACTION for the span store's append waves
     * (VERDICT r18 #3 — parity with the media stores and s23b's
-    * streamed index): every [[admit]] wave appends at least one file
-    * per touched bucket through the bucket spec, so a long-lived
-    * store accumulates files linearly in INGESTS while its rows grow
-    * only with the corpus — the small-file spiral
-    * [[graft.plans.Bucketing.compact]] exists for. Routed through the
-    * table's OWN bound bucket count (decade-scoped since round 18),
-    * so the zero-exchange serve posture and the [[serve]] row set are
-    * both preserved — Round19Spec pins ≥20 admit waves, the file
-    * count collapsing to ≤ buckets, serve rows identical pre/post,
-    * and no corpus re-scan (compact reads only the store). Repairs
-    * first: compact scans every part, so a torn append must be
-    * quarantined before, not re-written into the compacted copy. */
+    * streamed index): every [[admit]] wave appends up to one file
+    * per bucket, so a long-lived store accumulates files linearly in
+    * INGESTS while its rows grow only with the corpus — the
+    * small-file spiral [[graft.plans.Bucketing.compact]] exists for.
+    * Routed through the table's OWN bound bucket spec (decade-scoped
+    * since round 18), so the zero-exchange serve posture and the
+    * [[serve]] row set are both preserved — Round19Spec pins ≥20
+    * admit waves, the file count collapsing to ≤ buckets, serve rows
+    * identical pre/post, and no corpus re-scan (compact reads only
+    * the store). Scrubs first: compact scans every part, so a torn
+    * admission must be excised before, not re-written into the
+    * compacted copy. */
   private[graft] def compactStore(spark: SparkSession, spansT: String): Unit = {
-    graft.plans.ReadRepair.repairTable(spark, spansT)
-    graft.plans.Bucketing.compact(spark, spansT, "span_h",
-      boundBuckets(spark, spansT))
+    scrubTorn(spark, spansT)
+    val (key, n) = graft.plans.Bucketing.specOf(spark, spansT)
+    graft.plans.Bucketing.compact(spark, spansT, key, n)
   }
 
-  /** The bound store's own bucket count, from catalog metadata — the
-    * append/ingest side must route through the spec the store was
-    * created with, whatever decade sized it. */
-  private def boundBuckets(spark: SparkSession, table: String): Int =
-    spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(sys.error(s"$table carries no bucket spec"))
-
-  /** Serve a delta frame (doc_id, text) against an existing store
-    * table — the composable surface run() and the two-wave spec
-    * share. */
+  /** Serve a delta frame (doc_id, text) against a store table that
+    * [[ensureStore]] resolved (and so scrubbed) — the composable
+    * surface run() and the two-wave spec share. */
   private[graft] def serve(spark: SparkSession, docs: DataFrame,
       spansT: String): DataFrame = {
-    // Read-repair per serve: the span store has no admission log to
-    // gate on (its admit is idempotent, see above), so the serve
-    // validates the envelope of what it is about to scan — one
-    // listing + 12 bytes per part, the same order of driver work as
-    // the scan's own file listing.
-    graft.plans.ReadRepair.repairTable(spark, spansT)
     val toks = docs
       .select(col("doc_id"), expr(NorthStar.toksExpr).as("t"))
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -71,7 +71,8 @@ object Q18gDedupLabelsStore extends GraftQuery {
         Q18fDedupClusters.labels(spark, dir).withColumn("_adm", lit(-1L)),
         labelsT, "id", 16)
       graft.plans.Bucketing.writeBucketed(
-        bandRows(Tables.documents(spark, dir)).withColumn("_adm", lit(-1L)),
+        Q18bDedupMinHash.bandRows(Tables.documents(spark, dir))
+          .withColumn("_adm", lit(-1L)),
         bandsT, "bkey", 16)
     }
     scrubTorn(spark, names(0), names(1))
@@ -84,21 +85,7 @@ object Q18gDedupLabelsStore extends GraftQuery {
     * recompute in this family. */
   private[graft] def scrubTorn(spark: SparkSession, labelsT: String,
       bandsT: String): Seq[Long] =
-    graft.plans.AdmitLog.scrub(spark,
-      graft.plans.AdmitLog.logTableOf(labelsT),
-      Seq(labelsT, bandsT)) { () }
-
-  /** (doc_id, sig, bkey) MinHash band rows for `docs` — the store's
-    * admission-index shape, shared by build and [[admit]]. */
-  private def bandRows(docs: DataFrame): DataFrame =
-    Q18bDedupMinHash.signatures(
-        docs.select(col("doc_id"), expr(NorthStar.toksExpr).as("t"))
-          .filter(size(col("t")) >= 3)
-          .select(col("doc_id"),
-            expr(NorthStar.let("t", "t", NorthStar.shinglesExpr)).as("sh")))
-      .select(col("doc_id"), col("sig"),
-        explode(expr(NorthStar.let("sg", "sig",
-          NorthStar.bandKeysExpr("sg")))).as("bkey"))
+    graft.plans.AdmitLog.scrub(spark, Seq(labelsT, bandsT)) { () }
 
   /** Converged (id, lbl) labels SERVED FROM THE STORE — the drop-in
     * replacement for [[Q18fDedupClusters.labels]] that
@@ -109,23 +96,20 @@ object Q18gDedupLabelsStore extends GraftQuery {
 
   /** ADMIT a delta of arriving documents: attach each to the cluster
     * of its best stored near-dup (or found a singleton), append the
-    * new label rows and the delta's band rows through the stores'
-    * bucket specs, and return the admitted (id, lbl) rows.
+    * new label rows and the delta's band rows to the store, and return
+    * the admitted (id, lbl) rows.
     *
-    * EXACTLY-ONCE (VERDICT r13 #3): runs under the
-    * [[graft.plans.AdmitLog]] intent/commit guard like
-    * [[Q74bBm25Store.admit]] — appended rows carry this admission's
-    * `_adm` id, the commit marker lands after BOTH appends, and a
-    * crash in between is scrubbed by the next bind/admit.
-    * `injectCrashAfter` (spec hook, 0 = off): 1 throws between the
-    * labels and bands appends. */
+    * EXACTLY-ONCE through [[graft.plans.AdmitLog.admit]]: appended
+    * rows carry this admission's `_adm` id, the commit lands after
+    * BOTH appends, and a crash in between is scrubbed by the next
+    * bind/admit. `injectCrashAfter` (spec hook, 0 = off): 1 throws
+    * between the labels and bands appends. */
   private[graft] def admit(spark: SparkSession, docs: DataFrame,
       labelsT: String, bandsT: String,
       injectCrashAfter: Int = 0): DataFrame = {
-    import org.apache.spark.sql.SaveMode
     scrubTorn(spark, labelsT, bandsT)
     // Delta-sized: band the arrivals once, join only collided buckets.
-    val dbands = bandRows(docs).localCheckpoint(true)
+    val dbands = Q18bDedupMinHash.bandRows(docs).localCheckpoint(true)
     val bstore = spark.table(bandsT)
       .select(col("bkey"), col("doc_id").as("cand"), col("sig").as("bsig"))
     val best = dbands
@@ -144,8 +128,6 @@ object Q18gDedupLabelsStore extends GraftQuery {
     // label row is an unpaired singleton, so its cluster id is itself.
     val lbls = spark.table(labelsT)
       .select(col("id").as("cand"), col("lbl").as("cand_lbl"))
-    val logT = graft.plans.AdmitLog.logTableOf(labelsT)
-    val adm = graft.plans.AdmitLog.begin(spark, logT)
     val admitted = docs.select(col("doc_id"))
       .join(best.join(lbls, Seq("cand"), "left")
           .select(col("delta_id").as("doc_id"),
@@ -154,17 +136,8 @@ object Q18gDedupLabelsStore extends GraftQuery {
       .select(col("doc_id").as("id"),
         coalesce(col("attach_lbl"), col("doc_id")).as("lbl"))
       .localCheckpoint(true)
-    admitted.withColumn("_adm", lit(adm))
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(16, "id").sortBy("id").saveAsTable(labelsT)
-    if (injectCrashAfter == 1)
-      throw new RuntimeException(s"injected crash after labels append ($adm)")
-    dbands.withColumn("_adm", lit(adm))
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(16, "bkey").sortBy("bkey").saveAsTable(bandsT)
-    spark.catalog.refreshTable(labelsT)
-    spark.catalog.refreshTable(bandsT)
-    graft.plans.AdmitLog.commit(spark, logT, adm)
+    graft.plans.AdmitLog.admit(spark,
+      Seq(labelsT -> admitted, bandsT -> dbands), injectCrashAfter) { () }
     admitted
   }
 

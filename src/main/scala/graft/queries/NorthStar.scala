@@ -370,6 +370,20 @@ object Q18bDedupMinHash extends GraftQuery {
         array((0 until 32).map(i => col(s"m$i")): _*).as("sig"))
   }
 
+  /** (doc_id, sig, bkey) MinHash band rows of a (doc_id, text) frame —
+    * one row per band key of each doc with ≥ 3 tokens. The band-index
+    * shape of the persisted dedup stores (q57b's signature store,
+    * q18g's labels store), shared by their builds and admits. */
+  private[graft] def bandRows(docs: DataFrame): DataFrame =
+    signatures(
+        docs.select(col("doc_id"), expr(NorthStar.toksExpr).as("t"))
+          .filter(size(col("t")) >= 3)
+          .select(col("doc_id"),
+            expr(NorthStar.let("t", "t", NorthStar.shinglesExpr)).as("sh")))
+      .select(col("doc_id"), col("sig"),
+        explode(expr(NorthStar.let("sg", "sig",
+          NorthStar.bandKeysExpr("sg")))).as("bkey"))
+
   private[queries] def pairsFrom(
       shingles: DataFrame, crossOnly: Option[DataFrame]): DataFrame = {
     // The explicit repartition is the materialization barrier (sig is
@@ -1187,6 +1201,25 @@ object Q19dAnnIvf extends GraftQuery {
   val name = "q19d_ann_ivf"
   private[graft] val K = 16
   private[graft] val NProbe = 4
+  /** Partitions of the k-means fit input. A constant, not the scan
+    * spread (`max(4, cores / 4)`): k-means|| seeds per partition
+    * index, so a core-derived count fits different centroids on
+    * different hosts (the q19g rule). */
+  private val FitPartitions = 4
+
+  /** The canonical k-means input over an embeddings frame — (vec_id,
+    * embedding, features) in a layout that is a pure function of the
+    * data: a keyed repartition to [[FitPartitions]] plus an
+    * in-partition sort, checkpointed. Shared by q19d's fit and q19e's
+    * store build, so the two tiers fit the same quantizer. */
+  private[graft] def fitInput(emb: DataFrame): DataFrame = {
+    import org.apache.spark.ml.functions.array_to_vector
+    emb.repartition(FitPartitions, col("vec_id"))
+      .sortWithinPartitions(col("vec_id"))
+      .select(col("vec_id"), col("embedding"),
+        array_to_vector(col("embedding").cast("array<double>")).as("features"))
+      .localCheckpoint()
+  }
 
   /** Snapshot dirs (probed list ids, fitted membership) of the last
     * [[run]] — the q19f/q19e oracle bridge applied to the RECOMPUTE
@@ -1227,11 +1260,8 @@ object Q19dAnnIvf extends GraftQuery {
   private def fitProbe(spark: SparkSession, dir: String,
       nProbe: Int): (DataFrame, Seq[Int]) = {
     import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
     import org.apache.spark.ml.linalg.{Vector, Vectors}
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-        array_to_vector(col("embedding").cast("array<double>")).as("features"))
+    val e = fitInput(Tables.embeddings(spark, dir))
     val model = new KMeans().setK(K).setSeed(42).setMaxIter(20)
       .setFeaturesCol("features").setPredictionCol("list_id").fit(e)
     val assigned = model.transform(e).localCheckpoint(true)
@@ -1341,15 +1371,12 @@ object Q19eAnnIvfStore extends GraftQuery {
         fpTables = Seq("embeddings.parquet")) {
       case Seq(centT, listsT) =>
         import org.apache.spark.ml.clustering.KMeans
-        import org.apache.spark.ml.functions.array_to_vector
         import spark.implicits._
         val base = Tables.embeddings(spark, dir)
-        val src =
+        val e = Q19dAnnIvf.fitInput(
           if (trainOnly)
             base.filter(Q40TrainTestSplit.splitColOf("vec_id") === "train")
-          else base
-        val e = src.select(col("vec_id"), col("embedding"),
-          array_to_vector(col("embedding").cast("array<double>")).as("features"))
+          else base)
         val model = new KMeans().setK(Q19dAnnIvf.K).setSeed(42).setMaxIter(20)
           .setFeaturesCol("features").setPredictionCol("list_id").fit(e)
         model.clusterCenters.zipWithIndex

@@ -891,15 +891,15 @@ object S14StreamImageDedupStore extends GraftQuery {
   val name = "s14_stream_image_dedup_store"
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    val store = Q25fImageDedupStore.storeFrame(spark,
-      Q25fImageDedupStore.ensureStore(spark, dir))
+    val img = Q25fImageDedupStore.store
+    val store = img.storeFrame(spark, Q25fImageDedupStore.ensureStore(spark, dir))
     val deltaFeats = Q25cImageFeatures.extractImageFeatures(
         Q25cImageFeatures.imageFrames(
           Multimodal.mediaFrame(docsStream(spark, dir))
             .filter(Q40TrainTestSplit.splitColOf("media_id") === "test")))
       .toDF().select(col("media_id"), col("dhash"))
-    val best = Q25fImageDedupStore.verdictFrame(deltaFeats, store)
-    Q25fImageDedupStore.formatVerdicts(runToBatch(spark, best, "complete",
+    val best = img.verdictFrame(deltaFeats, store)
+    img.formatVerdicts(runToBatch(spark, best, "complete",
       rocksdb = rocksDefault(spark)))
   }
 
@@ -1101,8 +1101,8 @@ object S17StreamMultimodalAdmission extends GraftQuery {
     val feats = Q25cImageFeatures.extractImageFeatures(
         Q25cImageFeatures.imageFrames(Multimodal.mediaFrame(docs)))
       .toDF().select(col("media_id"), col("dhash"))
-    val imgDup = Q25fImageDedupStore.formatVerdicts(
-        Q25fImageDedupStore.verdictFrame(feats, imgStore))
+    val imgDup = Q25fImageDedupStore.store.formatVerdicts(
+        Q25fImageDedupStore.store.verdictFrame(feats, imgStore))
       .filter(col("verdict") === "dup")
       .select(col("media_id").as("doc_id"), lit(true).as("image_dup"))
     val semDup = Q70bSemanticDedupStore.ingest(
@@ -1143,7 +1143,7 @@ object S17StreamMultimodalAdmission extends GraftQuery {
       admitBatch(_, imgStore, cent, semStore, embs, audStore))
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    val imgStore = Q25fImageDedupStore.storeFrame(spark,
+    val imgStore = Q25fImageDedupStore.store.storeFrame(spark,
       Q25fImageDedupStore.ensureStore(spark, dir))
     val (centT, assignT) = Q70bSemanticDedupStore.ensureStore(spark, dir)
     val (cent, semStore) = (spark.table(centT), spark.table(assignT))

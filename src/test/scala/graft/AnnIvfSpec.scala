@@ -155,4 +155,53 @@ class AnnIvfSpec extends SparkSpec {
       } finally spark.sql(s"DROP TABLE IF EXISTS $runT")
     } finally graft.plans.Stores.evict(spark, "graft_annstore")
   }
+
+  test("q19e: the centroids do not depend on the core count (local[20] child JVM ≡ this session)") {
+    import graft.queries.Q19eAnnIvfStore
+    graft.plans.Stores.evict(spark, "graft_annstore")
+    val childWh = java.nio.file.Files.createTempDirectory("ivf_child_wh")
+    try {
+      val child = graft.plans.ChildJvm.runUntil(
+        "graft.AnnIvfCentroidChild", Seq(sf01, childWh.toString),
+        AnnIvfCentroidChild.Done)
+      val (centT, _) = Q19eAnnIvfStore.ensureStore(spark, sf01)
+      val mine = AnnIvfCentroidChild.rows(spark, centT)
+      assert(mine.size == Q19dAnnIvf.K)
+      val differing = child.zip(mine).count { case (c, m) => c != m }
+      assert(differing == 0 && child.size == mine.size,
+        s"$differing of ${mine.size} centroid rows differ under local[20] " +
+          s"(child returned ${child.size} rows)")
+    } finally {
+      graft.plans.Stores.evict(spark, "graft_annstore")
+      graft.plans.Stores.deleteTree(childWh)
+    }
+  }
+}
+
+/** Child-JVM side of AnnIvfSpec's core-count test: builds the q19e
+  * index under `local[20]` (a scan spread of 5, not the suite's 4) in
+  * its own warehouse and prints the centroid rows. Args: corpus dir,
+  * warehouse dir. */
+object AnnIvfCentroidChild {
+  val Done = "CENTROIDS_DONE"
+
+  /** One line per centroid row, in list_id order, with the doubles
+    * printed exactly. */
+  def rows(spark: org.apache.spark.sql.SparkSession, centT: String): Seq[String] =
+    spark.table(centT).orderBy("list_id").collect().toSeq
+      .map(r => s"${r.getInt(0)} ${r.getSeq[Double](1).mkString(",")}")
+
+  def main(args: Array[String]): Unit = {
+    val Array(corpusDir, warehouseDir) = args
+    val spark = Engine.configure(org.apache.spark.sql.SparkSession.builder()
+        .master("local[20]")
+        .config("spark.sql.warehouse.dir", warehouseDir)
+        .config("spark.sql.shuffle.partitions", "20"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val (centT, _) = graft.queries.Q19eAnnIvfStore.ensureStore(spark, corpusDir)
+    rows(spark, centT).foreach(println)
+    println(Done)
+    Console.flush()
+  }
 }

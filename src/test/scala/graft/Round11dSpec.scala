@@ -193,7 +193,7 @@ class Round11dSpec extends SparkSpec {
           rows.map { case (id, t) => (id, t, t.length.toLong) }
             .toDF("doc_id", "text", "n_chars"))))
           .toDF().select(col("media_id"), col("dhash"))
-      Q25fImageDedupStore.admit(spark, featsOf(Seq((24L, textB.trim))), bandsT)
+      Q25fImageDedupStore.store.admit(featsOf(Seq((24L, textB.trim))), bandsT)
       // Wave 2: an off-grid single-pixel edit of wave 1's content —
       // dHash-identical — must now flag as a dup of the ADMITTED id.
       val tb = textB.trim
@@ -201,10 +201,10 @@ class Round11dSpec extends SparkSpec {
       val sampled = (for (gy <- 0 until GridH; gx <- 0 until GridW)
         yield ((gy * h / GridH) * w + gx * w / GridW) % tb.length).toSet
       val off = (0 until tb.length).find(i => !sampled.contains(i) && tb(i) != 'x').get
-      val w2 = Q25fImageDedupStore.formatVerdicts(
-        Q25fImageDedupStore.verdictFrame(
+      val w2 = Q25fImageDedupStore.store.formatVerdicts(
+        Q25fImageDedupStore.store.verdictFrame(
           featsOf(Seq((102L, tb.updated(off, 'x')))),
-          Q25fImageDedupStore.storeFrame(spark, bandsT))).collect()
+          Q25fImageDedupStore.store.storeFrame(spark, bandsT))).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
       assert(w2 == Seq((102L, "dup", 24L, 0L)),
         s"wave 2 must dup against the admitted image, got $w2")
@@ -217,10 +217,10 @@ class Round11dSpec extends SparkSpec {
       val filesAfter = graft.plans.Bucketing.dataFileCount(spark, bandsT)
       assert(filesAfter <= 16 && filesAfter <= filesBefore,
         s"compact must bound files to one per bucket, $filesBefore -> $filesAfter")
-      val w2c = Q25fImageDedupStore.formatVerdicts(
-        Q25fImageDedupStore.verdictFrame(
+      val w2c = Q25fImageDedupStore.store.formatVerdicts(
+        Q25fImageDedupStore.store.verdictFrame(
           featsOf(Seq((102L, tb.updated(off, 'x')))),
-          Q25fImageDedupStore.storeFrame(spark, bandsT))).collect()
+          Q25fImageDedupStore.store.storeFrame(spark, bandsT))).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
       assert(w2c == w2, "compaction must not change verdicts")
     } finally {

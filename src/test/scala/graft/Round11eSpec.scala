@@ -475,7 +475,7 @@ class Round11eSpec extends SparkSpec {
       val sch = spark.read.parquet(s"$dir/delta").schema
       val stream = spark.readStream.schema(sch)
         .option("maxFilesPerTrigger", "1").parquet(s"$dir/delta/*.parquet")
-      val imgStore = Q25fImageDedupStore.storeFrame(spark,
+      val imgStore = Q25fImageDedupStore.store.storeFrame(spark,
         Q25fImageDedupStore.ensureStore(spark, sf01))
       val (centT, assignT) = Q70bSemanticDedupStore.ensureStore(spark, sf01)
       val embs = Tables.embeddings(spark, sf01)

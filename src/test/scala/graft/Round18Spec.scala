@@ -239,7 +239,7 @@ class Round18Spec extends SparkSpec {
     try {
       val bandsT = Q25fImageDedupStore.ensureStore(spark, dir)
       def storeRows() = Q25fImageDedupStore
-        .storeFrame(spark, bandsT).collect().map(_.toString).sorted.toSeq
+        .store.storeFrame(spark, bandsT).collect().map(_.toString).sorted.toSeq
       val baseline = storeRows()
       def featsOf(rows: Seq[(Long, String)]) =
         Q25cImageFeatures.extractImageFeatures(

@@ -10,7 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  `graft.Verify` (the correctness dump) and `graft.Bench` (the legacy
   *  floor check) — no one-off diagnostic mains, no second harness;
   *  - it reads no JVM system property, so no `-D` setting can choose
-  *  between equivalent paths. */
+  *  between equivalent paths;
+  *  - bucketed writes go through `plans/Bucketing` alone (a build via
+  *  `writeBucketed`, an admission via `appendBucketed`), so no store
+  *  restates its bucket spec. */
 class SourceLayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
   private val entryPoints =
@@ -50,5 +53,10 @@ class SourceLayoutSpec extends AnyFunSuite {
     val prop = raw"\bsys\.props\b|\bSystem\.getPropert(y|ies)\b".r
     val found = offenders(prop.findFirstIn(_).isDefined)
     assert(found.isEmpty, found.mkString("system property reads:\n", "\n", ""))
+  }
+
+  test("main code writes bucketed tables only through plans/Bucketing") {
+    val found = offenders(_.contains(".bucketBy("), _ == "graft/plans/Bucketing.scala")
+    assert(found.isEmpty, found.mkString("bucketBy outside plans/Bucketing:\n", "\n", ""))
   }
 }

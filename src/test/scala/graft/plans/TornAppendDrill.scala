@@ -21,10 +21,11 @@ import org.apache.spark.sql.functions._
   *    [[AdmitLog.scrub]] row excision (the committed postings of the
   *    uncommitted admission).
   *  - `span`  — [[graft.queries.Q60dExciseStore]] (s20's target; the
-  *    family the hazard was OBSERVED on in round 17): kill lands
-  *    while the FIRST part file of an ingest append is mid-write.
-  *    Recovery is the quarantine alone — the span admit is
-  *    idempotent by anti-join, so there are no rows to scrub.
+  *    family the hazard was OBSERVED on in round 17): an admission
+  *    intent is open and the kill lands while the FIRST part file of
+  *    its append is mid-write. Recovery is the intent-gated scrub in
+  *    the store's `ensureStore`: the quarantine, then no rows left to
+  *    excise.
   *  - `ann`   — [[graft.queries.Q19eAnnIvfStore]]'s lists table
   *    (s19's ingest target): torn part inside a PROBED list_id
   *    partition, so the serve's partition-scoped repair must catch
@@ -134,6 +135,10 @@ object TornAppendDrill {
       case "span" =>
         import graft.queries.Q60dExciseStore
         val spansT = Q60dExciseStore.ensureStore(spark, corpusDir)
+        // A torn part is only ever written inside an admission (the
+        // registry case below does the same for every log-guarded
+        // family).
+        AdmitLog.begin(spark, AdmitLog.logTableOf(spansT))
         stageTornPart(wh.resolve(spansT))
 
       case "ann" =>
