@@ -801,17 +801,6 @@ object Q25dImageNearDup extends GraftQuery {
       bHi: String, bLo: String): String =
     s"bit_count($aHi ^ $bHi) + bit_count($aLo ^ $bLo)"
 
-  /** "band `i` agrees" as a shift-mask test over the xor halves
-    * (`xHi`/`xLo` = a_hi^b_hi / a_lo^b_lo); bands are big-endian in
-    * the hex string, `bandBits` | 32 so no band straddles the halves. */
-  private[graft] def bandCleanExpr(xHi: String, xLo: String,
-      bandBits: Int, i: Int): String = {
-    val mask = (1L << bandBits) - 1
-    val fromTop = (i + 1) * bandBits
-    if (fromTop <= 32) s"(shiftright($xHi, ${32 - fromTop}) & $mask) = 0"
-    else s"(shiftright($xLo, ${64 - fromTop}) & $mask) = 0"
-  }
-
   /** Banded candidates + exact-Hamming verify over an arbitrary
     * (media_id, dhash) frame — shared by the driver entry and the
     * crafted-fixture spec.

@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   * documented admission contract; concurrent BUILDS are already
   * serialized by [[Stores.ensure]]'s cross-process lock):
   *  1. `begin` appends an INTENT row (adm_id, "intent") to the
-  *     family's log table — one single-file append, atomic visibility
+  *     family's log table (the first intent bootstraps the log) —
+  *     one single-file write, atomic visibility
   *     (the maintainAppend marker argument: a parquet job commit is a
   *     sequence of task-file renames, but a one-task one-file append
   *     becomes visible with a single rename).
@@ -42,27 +43,44 @@ import org.apache.spark.sql.functions._
   * prefix-sweep removes logs with their family. */
 object AdmitLog {
 
-  /** Priming id: present from bootstrap so max()+1 starts at 0. */
-  private val Primer = -1L
-
   def logTableOf(headT: String): String = s"${headT}_admlog"
 
+  /** Write one (adm_id, state) row: an append to an existing log, or
+    * the bootstrap of a new one. Either way one single-file write. A
+    * dead JVM can leave a log's managed LOCATION with no catalog entry
+    * (the maintainAppend bootstrap hazard), so a bootstrap clears it
+    * first. */
   private def append(spark: SparkSession, logT: String, id: Long,
       state: String): Unit = {
+    val exists = spark.catalog.tableExists(logT)
+    if (!exists) Stores.deleteTree(Stores.warehouse(spark).resolve(logT))
     spark.range(1)
       .select(lit(id).as("adm_id"), lit(state).as("state"))
       .repartition(1)
-      .write.mode(SaveMode.Append).format("parquet").saveAsTable(logT)
+      .write.mode(if (exists) SaveMode.Append else SaveMode.Overwrite)
+      .format("parquet").saveAsTable(logT)
     spark.catalog.refreshTable(logT)
   }
+
+  /** The log's (adm_id, state) rows, read with ONE collect (the log
+    * holds a few rows per admission); empty while the family has no
+    * log. Both the torn ids and the next id derive from these rows on
+    * the driver. */
+  private def entries(spark: SparkSession, logT: String): Seq[(Long, String)] =
+    if (!spark.catalog.tableExists(logT)) Nil
+    else {
+      spark.catalog.refreshTable(logT)
+      spark.table(logT).select(col("adm_id"), col("state")).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq
+    }
 
   /** Bind a log table ANOTHER process wrote to this warehouse (the
     * drill scenario: an ingest JVM opened the family's first-ever
     * admission and died; the serving JVM's catalog has the family
     * bound from before that log existed). Without the bind, torn()
-    * reads "no log table" and skips the scrub, and [[ensureLog]]'s
-    * bootstrap would treat the live log directory as garbage —
-    * clearing the torn-intent record and re-priming adm_ids at 0
+    * reads "no log table" and skips the scrub, and [[begin]]'s
+    * bootstrap write would treat the live log directory as garbage —
+    * clearing the torn-intent record and restarting adm_ids at 0
     * against data rows still tagged with the old ids (exactly the
     * ADVICE r14 hazard, one process boundary later). Callers must
     * [[ReadRepair]] the directory FIRST: the bind's schema inference
@@ -70,13 +88,13 @@ object AdmitLog {
     *
     * Only bind when the directory holds at least one visible,
     * envelope-valid parquet file (ADVICE r18): a log dir with NO
-    * readable footer — a first-ever priming write killed mid-write
+    * readable footer — a first-ever bootstrap write killed mid-write
     * leaving only `_temporary` staging, or the sole visible file just
     * quarantined by the preceding repair — would make the bind's
     * schema inference throw, wedging begin()/scrub() until manual
     * cleanup. An unreadable log implies no durable admissions, so
-    * falling through to [[ensureLog]]'s deleteTree + re-prime
-    * bootstrap is the correct recovery there. */
+    * falling through to the bootstrap write (deleteTree, then the
+    * intent at adm_id 0) is the correct recovery there. */
   private def bindIfOnDisk(spark: SparkSession, logT: String): Unit =
     if (!spark.catalog.tableExists(logT)) {
       val loc = Stores.warehouse(spark).resolve(logT)
@@ -86,28 +104,17 @@ object AdmitLog {
         Stores.bind(spark, logT, loc, None)
     }
 
-  private def ensureLog(spark: SparkSession, logT: String): Unit =
-    if (!spark.catalog.tableExists(logT)) {
-      // A dead JVM can leave the managed LOCATION with no catalog
-      // entry (the maintainAppend bootstrap hazard) — clear it first.
-      Stores.deleteTree(Stores.warehouse(spark).resolve(logT))
-      spark.range(1)
-        .select(lit(Primer).as("adm_id"), lit("commit").as("state"))
-        .repartition(1)
-        .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(logT)
-    }
-
-  /** Open an admission: log the intent, return the new adm_id. The
-    * log is read-repaired first — a killed log append can leave the
-    * log ITSELF physically torn, which would fail the max() read
-    * before any scrub could run (the [[ReadRepair]] hazard applied
-    * to the guard's own table; the log is tiny, so the repair is a
-    * few 12-byte reads). */
+  /** Open an admission: log the intent, return the new adm_id (one
+    * past the highest logged; 0 for a new log, whose bootstrap write
+    * IS the intent). The log is read-repaired first — a killed log
+    * append can leave the log ITSELF physically torn, which would fail
+    * the read before any scrub could run (the [[ReadRepair]] hazard
+    * applied to the guard's own table; the log is tiny, so the repair
+    * is a few 12-byte reads). */
   private[graft] def begin(spark: SparkSession, logT: String): Long = {
     ReadRepair.repairTable(spark, logT)
     bindIfOnDisk(spark, logT)
-    ensureLog(spark, logT)
-    val id = spark.table(logT).agg(max(col("adm_id"))).head().getLong(0) + 1
+    val id = entries(spark, logT).map(_._1).maxOption.fold(0L)(_ + 1)
     append(spark, logT, id, "intent")
     id
   }
@@ -119,16 +126,9 @@ object AdmitLog {
   /** Admission ids whose intent has no commit/scrubbed resolution —
     * each may have left partial data rows. */
   def torn(spark: SparkSession, logT: String): Seq[Long] =
-    if (!spark.catalog.tableExists(logT)) Nil
-    else {
-      spark.catalog.refreshTable(logT)
-      spark.table(logT).groupBy(col("adm_id"))
-        .agg(collect_set(col("state")).as("states"))
-        .filter(array_contains(col("states"), "intent") &&
-          !array_contains(col("states"), "commit") &&
-          !array_contains(col("states"), "scrubbed"))
-        .select(col("adm_id")).collect().map(_.getLong(0)).toSeq
-    }
+    entries(spark, logT).groupBy(_._1).collect {
+      case (id, es) if es.forall(_._2 == "intent") => id
+    }.toSeq.sorted
 
   /** Remove every torn admission's rows from the family's tagged
     * tables (the log is keyed on the first, as in [[admit]]), run the

@@ -111,7 +111,7 @@ object ReadRepair {
   /** True when `dir` holds at least one visible, envelope-valid
     * parquet part — i.e. a [[Stores.bind]] schema inference has a
     * footer to read (ADVICE r18: a log directory whose only content
-    * is `_temporary` staging from a killed first-ever priming write,
+    * is `_temporary` staging from a killed first-ever bootstrap write,
     * or whose sole visible file was just quarantined, must NOT be
     * bound — binding it throws in schema inference and wedges the
     * recovery path this module exists to harden). */

@@ -362,7 +362,7 @@ object Stores {
             // never in `names`, so without the exemption every
             // fresh-session re-bind would deleteTree the current log —
             // destroying the torn-intent record BEFORE scrub can run,
-            // and re-priming adm_ids at 0 against data rows still
+            // and restarting adm_ids at 0 against data rows still
             // tagged with the old ids (a later scrub would then delete
             // COMMITTED rows). Old fingerprints' logs remain stale and
             // are retired with their family.

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -13,77 +12,47 @@ import graft.Tables
   * (train = existing corpus, test = incoming delta) so the operator
   * is reproducible without side state.
   *
-  * Two tiers, one verdict per delta doc (exact wins over near):
+  * One verdict per delta doc, exact over near over new:
   *  - `exact_dup`: md5(text) equi-join against the base — at scale a
-  *    128-bit hash shuffle, never text;
-  *  - `near_dup`: q18b's MinHash band pipeline over the WHOLE corpus
-  *    once (signatures and band keys are side-agnostic — computing
-  *    them per side would run the signature stage twice), then the
-  *    undirected candidate pairs filtered to cross-split ones; best
-  *    base per delta doc by (est_jaccard desc, base_id asc);
+  *    128-bit hash shuffle, never text; lowest base id wins;
+  *  - `near_dup`: the delta's MinHash band rows joined on band key to
+  *    the base's, verified at est_jaccard ≥ 0.5; best base by
+  *    (est_jaccard desc, base_id asc);
   *  - `new`: everything else, kept in the output (an ingest audit
   *    must account for every arriving doc).
   *
+  * q57 is q57b with the store recomputed: its base side is the
+  * store's two row builders ([[Q57bDeltaDedupStore.exactRows]],
+  * [[Q18bDedupMinHash.bandRows]]) over the train split, checkpointed
+  * for this run instead of persisted, and the rest is q57b's serve —
+  * the same delta rows and the same [[Q57bDeltaDedupStore
+  * .verdictFrame]]. The DuckDB oracle keeps the independent
+  * self-join + window spelling, so "recompute = store = stream" is
+  * checked against SQL that shares none of this code.
+  *
   * est_jaccard is k/32 — exactly representable binary, surfaced
   * UNROUNDED so both engines hash the identical double. Scale shape:
-  * the band join is blocked (never all-pairs); the per-delta-doc
-  * window ranks a candidate list bounded by band collisions, not by
-  * corpus size.
+  * the band join is blocked (never all-pairs), and the verdict is one
+  * aggregation per delta doc over its band collisions, not over the
+  * corpus.
   */
 object Q57DeltaDedup extends GraftQuery {
   val name = "q57_delta_dedup"
 
+  /** The corpus side, recomputed per run: (doc_id, th) and
+    * (doc_id, sig, bkey) rows of the train split — the rows q57b's
+    * store holds — each checkpointed narrow (never text). Shared with
+    * s12, whose stream-static joins would otherwise re-scan and
+    * re-sign the corpus every trigger. */
+  private[graft] def baseRows(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val base = Q57bDeltaDedupStore.trainDocs(spark, dir)
+    (Q57bDeltaDedupStore.exactRows(base).localCheckpoint(),
+      Q18bDedupMinHash.bandRows(base).localCheckpoint())
+  }
+
   def run(spark: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint is the materialization barrier: the hashed frame
-    // feeds FIVE plan branches (both exact-tier sides, both split
-    // attachments, the final delta frame) with different filters, so
-    // exchange reuse can't apply (predicate pushdown would sink each
-    // branch's filter below a repartition) and without a barrier the
-    // documents scan + full-text md5 run five times. The checkpointed
-    // frame is 3 narrow columns — corpus-count-sized, never text-sized.
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), Q40TrainTestSplit.splitCol.as("split"),
-        md5(col("text")).as("th"))
-      .localCheckpoint()
-    val exact = docs.filter(col("split") === "test").as("d")
-      .join(docs.filter(col("split") === "train").as("b"),
-        col("d.th") === col("b.th"))
-      .groupBy(col("d.doc_id").as("doc_id"))
-      .agg(min(col("b.doc_id")).as("exact_base"))
-    // undirected MinHash candidates (q18b's pipeline, signatures
-    // computed once for both sides); the split labels ride INTO the
-    // band join so within-split pairs die before the 32-term verify
-    // and pair-dedup shuffle (~2/3 of candidates under the 13/16
-    // split), and the surviving cross-split pairs are oriented
-    // delta → base via the same narrow label frame
-    val split = docs.select(col("doc_id"), col("split"))
-    val pairs = Q18bDedupMinHash
-      .pairsFrom(NorthStar.shingleSets(spark, dir), Some(split))
-      .join(split.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(split.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .select(
-        when(col("sa.split") === "test", col("doc_a")).otherwise(col("doc_b"))
-          .as("delta_id"),
-        when(col("sa.split") === "test", col("doc_b")).otherwise(col("doc_a"))
-          .as("cand_base"),
-        col("est_jaccard"))
-    val near = pairs
-      .withColumn("rk", row_number().over(Window.partitionBy(col("delta_id"))
-        .orderBy(col("est_jaccard").desc, col("cand_base").asc)))
-      .filter(col("rk") === 1)
-      .select(col("delta_id").as("doc_id"), col("cand_base").as("near_base"),
-        col("est_jaccard").as("near_jac"))
-    docs.filter(col("split") === "test").select(col("doc_id"))
-      .join(exact, Seq("doc_id"), "left")
-      .join(near, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("exact_base").isNotNull, lit("exact_dup"))
-          .when(col("near_base").isNotNull, lit("near_dup"))
-          .otherwise(lit("new")).as("verdict"),
-        coalesce(col("exact_base"), col("near_base")).as("base_id"),
-        when(col("exact_base").isNull, col("near_jac"))
-          .otherwise(lit(null).cast("double")).as("est_jaccard"))
-      .orderBy(col("doc_id"))
+    val (baseHash, baseBands) = baseRows(spark, dir)
+    Q57bDeltaDedupStore.serve(spark, dir, baseHash, baseBands)
   }
 
   private[queries] val oracleSqlText = s"""
@@ -144,13 +113,12 @@ object Q57DeltaDedup extends GraftQuery {
   * rows; Verify in a fresh JVM rebuilds because the in-memory catalog
   * forgot the table, and repeated runs in one session reuse it.
   *
-  * Same verdict semantics and SAME ORACLE as q57: signatures and
-  * banding geometry come from the shared [[Q18bDedupMinHash
-  * .signatures]] stage, the store join yields exactly the cross-split
-  * band-collision pairs q57's self-join yields, and the per-delta-doc
-  * best-base rule is identical — so equality with q57 holds by
-  * construction and the driver hash-checks it against the identical
-  * SQL. */
+  * This object is the text delta-dedup family, as
+  * [[graft.multimodal.BandedHashStore]] is the media one: the two row
+  * builders ([[exactRows]], [[Q18bDedupMinHash.bandRows]]) write the
+  * store, its admits and q57's per-run base, and [[verdictFrame]] is
+  * the one verdict of q57, q57b, s12 and s12b — so all four share
+  * q57's oracle by construction. */
 object Q57bDeltaDedupStore extends GraftQuery {
   val name = "q57b_delta_dedup_store"
   private val prefix = "graft_sigstore"
@@ -168,8 +136,7 @@ object Q57bDeltaDedupStore extends GraftQuery {
         buckets = Map("bands" -> (("bkey", 16)), "exact" -> (("th", 16))),
         layoutVersion = "2") {
         case Seq(bandsT, exactT) =>
-      val base = Tables.documents(spark, dir)
-        .filter(Q40TrainTestSplit.splitCol === "train")
+      val base = trainDocs(spark, dir)
       graft.plans.Bucketing.writeBucketed(
         exactRows(base).withColumn("_adm", lit(-1L)), exactT, "th", 16)
       graft.plans.Bucketing.writeBucketed(
@@ -180,9 +147,77 @@ object Q57bDeltaDedupStore extends GraftQuery {
     (names(0), names(1))
   }
 
-  /** (doc_id, th) exact-tier rows — shared by build and [[admit]]. */
-  private def exactRows(docs: DataFrame): DataFrame =
+  /** The existing corpus: the train split of `documents`. */
+  private[queries] def trainDocs(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir).filter(Q40TrainTestSplit.splitCol === "train")
+
+  /** (doc_id, th) exact-tier rows of a (doc_id, text) frame, batch or
+    * streaming — the store's second row builder, beside
+    * [[Q18bDedupMinHash.bandRows]]. */
+  private[graft] def exactRows(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), md5(col("text")).as("th"))
+
+  /** The one verdict: three stateless branches — the exact hash join,
+    * the verified band join, and every delta doc as `new` — unioned
+    * into ONE aggregation per doc, min(struct(priority, 32 − matches,
+    * base_id)): exact over near over new, then the highest estimate,
+    * then the lowest base id, all integer comparisons. One shuffle on
+    * doc_id decides the verdict, and the same plan runs as a stream's
+    * stateful aggregation, its state one row per delta doc.
+    *
+    * `delta` is (doc_id, th) and `deltaBands` (doc_id, sig, bkey) —
+    * the row builders over the delta, batch or streaming; `baseHash`
+    * and `baseBands` are the same shapes over the base — the store
+    * tables or q57's checkpointed rows. */
+  private[graft] def verdictFrame(delta: DataFrame, deltaBands: DataFrame,
+      baseHash: DataFrame, baseBands: DataFrame): DataFrame = {
+    val exact = delta
+      .join(baseHash.select(col("th"), col("doc_id").as("base_id")), "th")
+      .select(col("doc_id"), lit(0).as("pri"), lit(0).as("negest"),
+        col("base_id"))
+    val near = deltaBands
+      .select(col("doc_id"), col("sig").as("dsig"), col("bkey"))
+      .join(baseBands.select(col("bkey"), col("doc_id").as("base_id"),
+        col("sig").as("bsig")), "bkey")
+      .select(col("doc_id"), col("base_id"),
+        expr(NorthStar.matchCountExpr("dsig", "bsig")).as("matches"))
+      .filter(col("matches") >= 16) // est_jaccard >= 0.5
+      .select(col("doc_id"), lit(1).as("pri"),
+        (lit(32) - col("matches")).as("negest"), col("base_id"))
+    val fresh = delta.select(col("doc_id"), lit(2).as("pri"),
+      lit(0).as("negest"), lit(null).cast("long").as("base_id"))
+    exact.unionByName(near).unionByName(fresh)
+      .groupBy(col("doc_id"))
+      .agg(min(struct(col("pri"), col("negest"), col("base_id"))).as("b"))
+  }
+
+  /** Verdict rows → the audit contract (doc_id, verdict, base_id,
+    * est_jaccard), est_jaccard only on `near_dup`. */
+  private[graft] def formatVerdicts(best: DataFrame): DataFrame =
+    best.select(col("doc_id"),
+        when(col("b.pri") === 0, lit("exact_dup"))
+          .when(col("b.pri") === 1, lit("near_dup"))
+          .otherwise(lit("new")).as("verdict"),
+        col("b.base_id").as("base_id"),
+        when(col("b.pri") === 1,
+          (lit(32) - col("b.negest")).cast("double") / 32.0d)
+          .otherwise(lit(null).cast("double")).as("est_jaccard"))
+      .orderBy(col("doc_id"))
+
+  /** The batch serve over any base side: the test-split delta is read
+    * once into a checkpoint (the three verdict branches would
+    * otherwise re-scan it; delta-sized, never corpus-sized), hashed
+    * and banded by the store's own row builders, and judged by
+    * [[verdictFrame]]. */
+  private[queries] def serve(spark: SparkSession, dir: String,
+      baseHash: DataFrame, baseBands: DataFrame): DataFrame = {
+    val delta = Tables.documents(spark, dir)
+      .filter(Q40TrainTestSplit.splitCol === "test")
+      .select(col("doc_id"), col("text"))
+      .localCheckpoint()
+    formatVerdicts(verdictFrame(exactRows(delta),
+      Q18bDedupMinHash.bandRows(delta), baseHash, baseBands))
+  }
 
   /** Resolve any torn admission (intent logged, no commit): quarantine
     * torn parts and rewrite bands/exact without its `_adm` rows. No
@@ -217,56 +252,7 @@ object Q57bDeltaDedupStore extends GraftQuery {
 
   def run(spark: SparkSession, dir: String): DataFrame = {
     val (bandsT, exactT) = ensureStore(spark, dir)
-    // The delta frame is everything the incremental query reads from
-    // the corpus dir: one scan producing (doc_id, content hash,
-    // shingle set — null when <3 tokens, which still participates in
-    // the exact tier). localCheckpoint is the barrier: three plan
-    // branches (exact side, signature pipeline, final audit spine)
-    // would otherwise re-scan the delta three times. Delta-sized,
-    // never corpus-sized.
-    val delta = Tables.documents(spark, dir)
-      .filter(Q40TrainTestSplit.splitCol === "test")
-      .select(col("doc_id"), md5(col("text")).as("th"),
-        expr(NorthStar.toksExpr).as("t"))
-      .select(col("doc_id"), col("th"),
-        when(size(col("t")) >= 3,
-          expr(NorthStar.let("t", "t", NorthStar.shinglesExpr))).as("sh"))
-      .localCheckpoint()
-    val exact = delta.select(col("doc_id"), col("th"))
-      .join(spark.table(exactT).select(col("th"), col("doc_id").as("base_id")),
-        "th")
-      .groupBy(col("doc_id"))
-      .agg(min(col("base_id")).as("exact_base"))
-    val dbands = Q18bDedupMinHash.signatures(
-        delta.filter(col("sh").isNotNull).select(col("doc_id"), col("sh")))
-      .select(col("doc_id").as("delta_id"), col("sig").as("dsig"),
-        explode(expr(NorthStar.let("sg", "sig",
-          NorthStar.bandKeysExpr("sg")))).as("bkey"))
-    val bstore = spark.table(bandsT)
-      .select(col("bkey"), col("doc_id").as("cand_base"), col("sig").as("bsig"))
-    val near = dbands.join(bstore, "bkey")
-      .select(col("delta_id"), col("cand_base"), col("dsig"), col("bsig"))
-      .dropDuplicates("delta_id", "cand_base")
-      .select(col("delta_id"), col("cand_base"),
-        (expr(NorthStar.matchCountExpr("dsig", "bsig")).cast("double") / 32.0)
-          .as("est_jaccard"))
-      .filter(col("est_jaccard") >= 0.5)
-      .withColumn("rk", row_number().over(Window.partitionBy(col("delta_id"))
-        .orderBy(col("est_jaccard").desc, col("cand_base").asc)))
-      .filter(col("rk") === 1)
-      .select(col("delta_id").as("doc_id"), col("cand_base").as("near_base"),
-        col("est_jaccard").as("near_jac"))
-    delta.select(col("doc_id"))
-      .join(exact, Seq("doc_id"), "left")
-      .join(near, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("exact_base").isNotNull, lit("exact_dup"))
-          .when(col("near_base").isNotNull, lit("near_dup"))
-          .otherwise(lit("new")).as("verdict"),
-        coalesce(col("exact_base"), col("near_base")).as("base_id"),
-        when(col("exact_base").isNull, col("near_jac"))
-          .otherwise(lit(null).cast("double")).as("est_jaccard"))
-      .orderBy(col("doc_id"))
+    serve(spark, dir, spark.table(exactT), spark.table(bandsT))
   }
 
   /** Identical output contract to q57 — the oracle is shared. */

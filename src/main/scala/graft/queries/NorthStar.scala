@@ -330,22 +330,6 @@ object Q18bDedupMinHash extends GraftQuery {
   val name = "q18b_dedup_minhash"
   def run(spark: SparkSession, dir: String): DataFrame =
     pairsFrom(shingleSets(spark, dir)).orderBy(col("doc_a"), col("doc_b"))
-  /** The candidate pairs WITHOUT the final sort, over a caller-chosen
-    * shingle frame — q18f consumes these (a global orderBy would add
-    * a range-partitioning sampling pass that re-runs the whole
-    * signature pipeline a second time, and q18f anchors the shingle
-    * frame so its two pair pipelines share one computation). */
-  private[queries] def pairsFrom(shingles: DataFrame): DataFrame =
-    pairsFrom(shingles, None)
-
-  /** `crossOnly`: a narrow (doc_id, split) frame — when present, the
-    * band join keeps only pairs whose sides carry DIFFERENT split
-    * labels, BEFORE the 32-term verify and the pair-dedup shuffle.
-    * q57 needs only cross-split (delta↔base) pairs; with a 13/16
-    * train split roughly two-thirds of band candidates are
-    * within-split and verifying them first just to discard them was
-    * the near-tier's dominant wasted cost (round-9 review finding).
-    * Output schema is unchanged — the label column never escapes. */
   /** Signature stage — (doc_id, sig[32]) — as explode + 32 flat
     * codegen'd min aggregations (the q18c vote-sum pattern): each
     * shingle becomes a row, is md5-hashed ONCE via native conv()
@@ -355,9 +339,9 @@ object Q18bDedupMinHash extends GraftQuery {
     * map-side partial combine — round 3 evaluated them as 32
     * interpreted array_min passes over each doc's hash array. The
     * DuckDB oracle computes the same VALUES with list folds; method
-    * need not match. Shared by pairsFrom (self-join dedup) and q57b's
-    * persisted store (corpus side at write time, delta side per
-    * ingest) so the two tiers can never drift. */
+    * need not match. Shared by pairsFrom (self-join dedup) and
+    * [[bandRows]] (the dedup stores' rows, and every batch delta
+    * judged against them) so the tiers can never drift. */
   private[graft] def signatures(shingles: DataFrame): DataFrame = {
     val shex = shingles.select(col("doc_id"), explode(col("sh")).as("s"))
       .select(col("doc_id"), expr(NorthStar.shingleHashExpr("s")).as("h"))
@@ -373,7 +357,8 @@ object Q18bDedupMinHash extends GraftQuery {
   /** (doc_id, sig, bkey) MinHash band rows of a (doc_id, text) frame —
     * one row per band key of each doc with ≥ 3 tokens. The band-index
     * shape of the persisted dedup stores (q57b's signature store,
-    * q18g's labels store), shared by their builds and admits. */
+    * q18g's labels store), shared by their builds and admits, q57's
+    * per-run base and every batch delta judged against them. */
   private[graft] def bandRows(docs: DataFrame): DataFrame =
     signatures(
         docs.select(col("doc_id"), expr(NorthStar.toksExpr).as("t"))
@@ -384,8 +369,12 @@ object Q18bDedupMinHash extends GraftQuery {
         explode(expr(NorthStar.let("sg", "sig",
           NorthStar.bandKeysExpr("sg")))).as("bkey"))
 
-  private[queries] def pairsFrom(
-      shingles: DataFrame, crossOnly: Option[DataFrame]): DataFrame = {
+  /** The candidate pairs WITHOUT the final sort, over a caller-chosen
+    * shingle frame — q18f consumes these (a global orderBy would add
+    * a range-partitioning sampling pass that re-runs the whole
+    * signature pipeline a second time, and q18f anchors the shingle
+    * frame so its two pair pipelines share one computation). */
+  private[queries] def pairsFrom(shingles: DataFrame): DataFrame = {
     // The explicit repartition is the materialization barrier (sig is
     // referenced from both band-join sides + the verify columns). It
     // is NOT redundant: when the caller hands an already-doc_id-
@@ -397,17 +386,13 @@ object Q18bDedupMinHash extends GraftQuery {
     // sig rides along through the band join: Spark does not share DAG
     // subtrees, so separate sa/sb join branches would re-run the whole
     // signature pipeline twice more.
-    val bands0 = sig.select(col("doc_id"), col("sig"),
+    val bands = sig.select(col("doc_id"), col("sig"),
       explode(expr(let("sg", "sig", NorthStar.bandKeysExpr("sg")))).as("bkey"))
-    val bands = crossOnly.fold(bands0)(lbl => bands0.join(lbl, "doc_id"))
     // codegen'd 32-term match count (no per-pair interpreted HOF)
     val matches = NorthStar.matchCountExpr("sa", "sb")
-    val baseCond = col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id")
-    val joinCond =
-      if (crossOnly.isDefined) baseCond && col("a.split") =!= col("b.split")
-      else baseCond
     bands.as("a")
-      .join(bands.as("b"), joinCond)
+      .join(bands.as("b"),
+        col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.sig").as("sa"), col("b.sig").as("sb"))
       .dropDuplicates("doc_a", "doc_b")

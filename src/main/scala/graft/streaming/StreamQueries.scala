@@ -47,35 +47,6 @@ object StreamQueries {
     * none of them). */
   @volatile private[graft] var lastStateMetrics: Seq[String] = Nil
 
-  /** The delta-dedup streams (s12/s12b) run under the RocksDB state
-    * store BY DEFAULT: their state grows with the ingest (one verdict
-    * row per delta doc — at real ingest rates that outgrows executor
-    * heap, which is exactly what the default HDFSBackedStateStore
-    * keeps resident). RocksDB spills to local disk. The default is
-    * scoped to state that GROWS WITH THE STREAM: s11's per-source
-    * counter dashboard is bounded by source cardinality and stays on
-    * the heap store (the s13 rule — bounded hot state lives in the
-    * stream, and paying RocksDB's native per-trigger cost for a
-    * 5-row dashboard bought nothing but a 2.6× floor breach, r10
-    * verdict). Opt out per session with
-    * `spark.graft.streaming.rocksdb=false` (fixture-scale benches of
-    * OTHER operators don't pay the native-store per-trigger cost).
-    * Round8Spec proved operator-result equality under the provider;
-    * Round10Spec pins s12's oracle equality + engagement through
-    * this default path and measures the per-trigger overhead
-    * (BASELINE.md note). */
-  private[graft] def rocksDefault(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.streaming.rocksdb").forall {
-      // tolerant parse: the natural opt-out spellings must not turn
-      // into a plan-time crash from a raw String.toBoolean
-      _.trim.toLowerCase match {
-        case "false" | "0" | "off" | "no" => false
-        case "true" | "1" | "on" | "yes"  => true
-        case other => throw new IllegalArgumentException(
-          s"spark.graft.streaming.rocksdb must be a boolean, got '$other'")
-      }
-    }
-
   /** EPOCH-GUARDED append maintenance for the stateless append-model
     * streams (s15/s16/s17): drive `src` to completion, appending
     * `frame(batch)` per non-empty micro-batch to `tableT` with the
@@ -196,6 +167,17 @@ object StreamQueries {
     * result/merge frame. */
   private[graft] def epochless(df: DataFrame): DataFrame = df.drop("_epoch")
 
+  /** [[runToBatch]] with the state-store provider chosen per stream:
+    * `rocksdb` = true runs it under the RocksDB state store, which
+    * spills to local disk. The streams whose state grows with the
+    * ingest pass it — one verdict row per arriving item (s12, s12b,
+    * s14, s18, s20, s22): at real ingest rates that outgrows executor
+    * heap, which is exactly what the default HDFSBackedStateStore
+    * keeps resident. State bounded by a key's cardinality (s11's
+    * per-source counters) stays on the heap store (the s13 rule):
+    * RocksDB's native per-trigger cost buys nothing on a few rows.
+    * Round8Spec pins identical results under either provider, and
+    * Round10Spec that s12 engages RocksDB. */
   private[graft] def runToBatch(spark: SparkSession, stream: DataFrame,
                                 mode: String, rocksdb: Boolean): DataFrame = this.synchronized {
     // synchronized: the save/set/restore of the GLOBAL shuffle-
@@ -543,7 +525,7 @@ object S6IncrementalIndex extends GraftQuery {
   * corpus after the fact. The gate itself adds no state; the only
   * state store is the per-source counter row (bounded by source
   * cardinality, not corpus size) — which is why this stream runs on
-  * the default heap state store, NOT the RocksDB ingest default:
+  * the default heap state store, NOT the ingest streams' RocksDB:
   * bounded hot state belongs in the stream (the s13 split), and the
   * native store's per-trigger cost is pure overhead on a dashboard
   * of a few rows. Final state is a pure function of the data, so it
@@ -603,171 +585,93 @@ object S11StreamCuration extends GraftQuery {
   * shape of delta dedup: admit-or-reject as data arrives, not a
   * nightly batch.
   *
-  * Streaming constraints drive the design:
-  *  - MinHash signatures are computed PER ROW with higher-order
-  *    functions (32 array_min folds over the shingle hashes) —
-  *    stateless, so no pre-aggregation stage is needed on the stream
-  *    side (a groupBy signature stage would chain two stateful
-  *    operators, which update mode forbids). Same VALUES as q18b's
-  *    flat-agg pipeline — method independence is exactly what the
-  *    shared oracle proves.
-  *  - Both tiers and the "new" fallback are three STATELESS branches
-  *    of the same stream (exact md5 stream-static join, banded
-  *    stream-static join, identity), unioned into ONE stateful
-  *    aggregation: min(struct(priority, 32−matches, base)) picks
-  *    exact over near, then highest estimate, then lowest base id —
-  *    all integer comparisons.
-  *  - State is one row per delta doc (bounded by the delta, not the
-  *    corpus); the static band frame is the corpus-side index.
-  * Shares q57's DuckDB oracle verbatim. */
+  * The base side is q57's ([[graft.queries.Q57DeltaDedup.baseRows]]:
+  * the signature store's two row builders over the train split,
+  * checkpointed for the run, so no trigger re-scans the corpus), and
+  * the verdict is q57b's [[graft.queries.Q57bDeltaDedupStore
+  * .verdictFrame]]: its three branches are stateless stream-static
+  * joins and projections, and its one aggregation per doc is the
+  * stream's only stateful operator (state bounded by the delta, not
+  * the corpus; RocksDB state store).
+  *
+  * The delta side has its own signature stage, on purpose: a stream
+  * cannot aggregate before its stateful verdict (two chained
+  * stateful operators), so [[bandRows]] computes each signature PER
+  * ROW with higher-order functions (32 array_min folds over the
+  * shingle hashes) where the batch delta keeps q18b's flat
+  * aggregation. Same VALUES — method independence is what the shared
+  * q57 oracle proves. */
 object S12StreamDeltaDedup extends GraftQuery {
   import StreamQueries._
-  import graft.queries.{NorthStar, Q40TrainTestSplit, Q57DeltaDedup}
+  import graft.queries.{NorthStar, Q40TrainTestSplit, Q57bDeltaDedupStore, Q57DeltaDedup}
   val name = "s12_stream_delta_dedup"
 
-  /** Per-row MinHash machinery (stream-safe: no aggregation), built
-    * from NorthStar's shared constants — same values as q18b. */
+  /** Per-row MinHash fold, built from NorthStar's shared constants —
+    * same values as q18b's aggregation. */
   private val sigExpr =
     s"transform(sequence(1, 32), i_ -> array_min(transform(hs, h_ -> " +
       s"(((${NorthStar.MinhashA} * i_) % ${NorthStar.MinhashP}) * h_ + " +
       s"((${NorthStar.MinhashB} * i_ + 7) % ${NorthStar.MinhashP})) % ${NorthStar.MinhashP})))"
-  // band geometry + match count are NorthStar's shared builders —
-  // q18b, s12 and the oracle can only change banding together
-  private val bandsExpr = NorthStar.bandKeysExpr("sig")
-  private val matchesExpr = NorthStar.matchCountExpr("dsig", "bsig")
 
-  /** (doc_id, sig, carry...) — NULL sig for docs with < 3 tokens (no
-    * shingles); works on a static OR streaming frame. `carry` columns
-    * ride through the projection chain so a caller can derive hash +
-    * signature from ONE scan of the text. */
-  private def sigFrame(docs: DataFrame, carry: String*): DataFrame = {
-    val cs = carry.map(col)
-    docs
-      .select(col("doc_id") +: expr(NorthStar.toksExpr).as("t") +: cs: _*)
-      .select(col("doc_id") +:
-        when(size(col("t")) >= 3,
-          expr(NorthStar.let("t", "t", NorthStar.shinglesExpr))).as("sh") +:
-        cs: _*)
+  /** (doc_id, sig, bkey) band rows of a STREAMING (doc_id, text) frame
+    * — the shape of [[graft.queries.Q18bDedupMinHash.bandRows]],
+    * without its aggregation. */
+  private def bandRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), expr(NorthStar.toksExpr).as("t"))
+      .filter(size(col("t")) >= 3)
+      .select(col("doc_id"),
+        expr(NorthStar.let("t", "t", NorthStar.shinglesExpr)).as("sh"))
       // `hs` is a let-bound LAMBDA variable, not a projection alias:
       // CollapseProject inlines a single-referenced alias into the
       // 32-iteration signature fold — md5 per shingle 32x per row,
       // the exact measured regression q18b/q18c's notes price out —
       // but it cannot inline through a lambda binding.
-      .select(col("doc_id") +:
-        when(col("sh").isNotNull,
-          expr(NorthStar.let("hs",
-            s"transform(sh, s_ -> ${NorthStar.shingleHashExpr("s_")})",
-            sigExpr))).as("sig") +:
-        cs: _*)
-  }
+      .select(col("doc_id"), expr(NorthStar.let("hs",
+        s"transform(sh, s_ -> ${NorthStar.shingleHashExpr("s_")})",
+        sigExpr)).as("sig"))
+      .select(col("doc_id"), col("sig"), explode(expr(NorthStar.let("sg", "sig",
+        NorthStar.bandKeysExpr("sg")))).as("bkey"))
 
-  /** (doc_id, sig, bkey) — one row per band of each doc with a
-    * signature. */
-  private def bandFrame(docs: DataFrame): DataFrame =
-    sigFrame(docs).filter(col("sig").isNotNull)
-      .select(col("doc_id"), col("sig"), explode(expr(bandsExpr)).as("bkey"))
-
-  /** The three stateless branches + one stateful best-verdict agg
-    * over ANY corpus-side index pair — s12 hands a per-run
-    * checkpointed frame, s12b the persisted bucketed store tables.
-    * `baseHash`: (th, base_id); `baseBands`: (base_id, bsig, bkey). */
-  private[streaming] def verdictStream(delta: DataFrame,
+  /** The stream serve over any base side — s12's checkpointed rows or
+    * s12b's store tables, both in the store's row shapes. */
+  private[streaming] def serve(spark: SparkSession, dir: String,
       baseHash: DataFrame, baseBands: DataFrame): DataFrame = {
-    val exact = delta.select(col("doc_id"), md5(col("text")).as("th"))
-      .join(baseHash, Seq("th"))
-      .select(col("doc_id"), lit(0).as("pri"), lit(0).as("negest"),
-        col("base_id"))
-    val near = bandFrame(delta)
-      .select(col("doc_id"), col("sig").as("dsig"), col("bkey"))
-      .join(baseBands, Seq("bkey"))
-      .select(col("doc_id"), col("base_id"),
-        expr(matchesExpr).as("matches"))
-      .filter(col("matches") >= 16) // est_jaccard >= 0.5
-      .select(col("doc_id"), lit(1).as("pri"),
-        (lit(32) - col("matches")).as("negest"), col("base_id"))
-    val fresh = delta.select(col("doc_id"), lit(2).as("pri"),
-      lit(0).as("negest"), lit(null).cast("long").as("base_id"))
-    exact.unionByName(near).unionByName(fresh)
-      .groupBy(col("doc_id"))
-      .agg(min(struct(col("pri"), col("negest"), col("base_id"))).as("b"))
+    val delta = docsStream(spark, dir)
+      .filter(Q40TrainTestSplit.splitCol === "test")
+    val best = Q57bDeltaDedupStore.verdictFrame(
+      Q57bDeltaDedupStore.exactRows(delta), bandRows(delta), baseHash, baseBands)
+    Q57bDeltaDedupStore.formatVerdicts(
+      runToBatch(spark, best, "complete", rocksdb = true))
   }
-
-  /** Final-state rows → q57's audit contract. */
-  private[streaming] def formatVerdicts(best: DataFrame): DataFrame =
-    best.select(col("doc_id"),
-        when(col("b.pri") === 0, lit("exact_dup"))
-          .when(col("b.pri") === 1, lit("near_dup"))
-          .otherwise(lit("new")).as("verdict"),
-        col("b.base_id").as("base_id"),
-        when(col("b.pri") === 1,
-          (lit(32) - col("b.negest")).cast("double") / 32.0d)
-          .otherwise(lit(null).cast("double")).as("est_jaccard"))
-      .orderBy(col("doc_id"))
-
-  private[streaming] def deltaStream(spark: SparkSession, dir: String): DataFrame =
-    docsStream(spark, dir)
-      .withColumn("split", Q40TrainTestSplit.splitCol)
-      .filter(col("split") === "test")
 
   def run(spark: SparkSession, dir: String): DataFrame = {
-    // wide: the corpus re-sign below (md5 + the 32-hash MinHash fold
-    // in ONE projection chain into a localCheckpoint) is this row's
-    // dominant map stage (r20 stage dump: 3.1 s of task time on 8
-    // tasks, nothing else over 1.8 s) — the q64g single-dominant-
-    // stage rule (Tables.spreadN).
-    val static = graft.Tables.documents(spark, dir, wide = true)
-      .withColumn("split", Q40TrainTestSplit.splitCol)
-      .filter(col("split") === "train")
-    // ONE corpus-side text scan (review finding: md5 and signatures
-    // were two separate full-text scans): hash + nullable signature
-    // in a single projection, checkpointed NARROW (doc_id, 16-byte
-    // md5, 32 longs — never text). localCheckpoint because a
-    // stream-static join re-evaluates the static plan EVERY trigger —
-    // without the barrier the deploy shape would re-scan and re-sign
-    // the whole existing corpus per micro-batch.
-    val signed = sigFrame(static.withColumn("th", md5(col("text"))), "th")
-      .select(col("doc_id").as("base_id"), col("th"), col("sig"))
-      .localCheckpoint()
-    val baseHash = signed.select(col("th"), col("base_id"))
-    val baseBands = signed.filter(col("sig").isNotNull)
-      .select(col("base_id"), col("sig").as("bsig"),
-        explode(expr(bandsExpr)).as("bkey"))
-    val best = verdictStream(deltaStream(spark, dir), baseHash, baseBands)
-    formatVerdicts(runToBatch(spark, best, "complete",
-      rocksdb = rocksDefault(spark)))
+    val (baseHash, baseBands) = Q57DeltaDedup.baseRows(spark, dir)
+    serve(spark, dir, baseHash, baseBands)
   }
 
   val oracle = Q57DeltaDedup.oracle
 }
 
 /** S12b — s12 against the PERSISTED signature store (q57b's tables):
-  * the full deploy shape of incremental ingest. s12's corpus index is
-  * a per-run `localCheckpoint` — rebuilt every run, dead with the
-  * JVM; here the stream-static joins read the bucketed store tables,
-  * which are built once, survive restarts, and serve every trigger
-  * AND every run. Per trigger the static side is a bucketed table
-  * scan (no corpus text ever re-read, no signatures ever recomputed);
-  * at 100 TB this is the difference between an ingest pipeline that
+  * the full deploy shape of incremental ingest. s12's corpus side is
+  * a per-run checkpoint — rebuilt every run, dead with the JVM; here
+  * the stream-static joins read the bucketed store tables, which are
+  * built once, survive restarts, and serve every trigger AND every
+  * run. Per trigger the static side is a bucketed table scan (no
+  * corpus text ever re-read, no signatures ever recomputed); at
+  * 100 TB this is the difference between an ingest pipeline that
   * starts in seconds and one that re-signs the corpus on every
-  * deploy. Same branches, same stateful verdict agg, same RocksDB
-  * default, and the SAME q57 oracle as s12 — batch store path (q57b),
-  * checkpoint stream path (s12) and store stream path (s12b) must all
-  * agree row for row. */
+  * deploy. The rows are the same (the store's row builders wrote
+  * both), so is the verdict (s12's serve), and so is the q57 oracle:
+  * recompute (q57), store (q57b), checkpoint stream (s12) and store
+  * stream (s12b) must all agree row for row. */
 object S12bStreamDeltaDedupStore extends GraftQuery {
-  import StreamQueries._
   import graft.queries.{Q57bDeltaDedupStore, Q57DeltaDedup}
   val name = "s12b_stream_delta_dedup_store"
 
   def run(spark: SparkSession, dir: String): DataFrame = {
     val (bandsT, exactT) = Q57bDeltaDedupStore.ensureStore(spark, dir)
-    val baseHash = spark.table(exactT)
-      .select(col("th"), col("doc_id").as("base_id"))
-    val baseBands = spark.table(bandsT)
-      .select(col("doc_id").as("base_id"), col("sig").as("bsig"), col("bkey"))
-    val best = S12StreamDeltaDedup.verdictStream(
-      S12StreamDeltaDedup.deltaStream(spark, dir), baseHash, baseBands)
-    S12StreamDeltaDedup.formatVerdicts(runToBatch(spark, best, "complete",
-      rocksdb = rocksDefault(spark)))
+    S12StreamDeltaDedup.serve(spark, dir, spark.table(exactT), spark.table(bandsT))
   }
 
   val oracle = Q57DeltaDedup.oracle
@@ -879,7 +783,7 @@ object S13StreamIncrementalStats extends GraftQuery {
   * ever re-hashed corpus-side), and the single stateful operator is
   * the per-image best-base struct aggregation. State grows with the
   * ingest (one verdict row per arriving image), so the stream runs
-  * under the RocksDB default like s12/s12b — the s13 rule.
+  * under the RocksDB state store like s12/s12b — the s13 rule.
   *
   * Shares q25f's ALL-PAIRS oracle: the streamed banded verdicts must
   * equal the exhaustive batch decision — recall guarantee, store
@@ -900,7 +804,7 @@ object S14StreamImageDedupStore extends GraftQuery {
       .toDF().select(col("media_id"), col("dhash"))
     val best = img.verdictFrame(deltaFeats, store)
     img.formatVerdicts(runToBatch(spark, best, "complete",
-      rocksdb = rocksDefault(spark)))
+      rocksdb = true))
   }
 
   val oracle = Q25fImageDedupStore.oracle
@@ -996,7 +900,7 @@ object S15StreamBpeEncodeStore extends GraftQuery {
   * the batch-store and stream-store tiers cannot drift.
   *
   * Unlike s12/s14 (whose best-base aggregation is kept in stream
-  * state under the RocksDB default), the semantic verdict needs NO
+  * state under RocksDB), the semantic verdict needs NO
   * cross-trigger state at all: each delta vector's verdict is a pure
   * function of (vector, store) — candidates live in the same
   * micro-batch as the vector by construction. So the stream is
@@ -1245,8 +1149,8 @@ object S17StreamMultimodalAdmission extends GraftQuery {
   * generic `BandedHashStore.verdictFrame` the batch path and the
   * image twin use (three consumers, one implementation: the paths
   * cannot drift); the single stateful operator is the per-clip
-  * best-base struct aggregation. State grows with the ingest, so the
-  * RocksDB default applies (the s13 rule).
+  * best-base struct aggregation. State grows with the ingest, so it
+  * runs under RocksDB (the s13 rule).
   *
   * Shares q25h's ALL-PAIRS oracle: the streamed banded verdicts must
   * equal the exhaustive batch decision — recall guarantee, store
@@ -1268,7 +1172,7 @@ object S18StreamAudioDedupStore extends GraftQuery {
       .toDF().select(col("media_id"), col("ahash").as("dhash"))
     val best = Q25hAudioDedupStore.store.verdictFrame(deltaFeats, store)
     Q25hAudioDedupStore.store.formatVerdicts(
-      runToBatch(spark, best, "complete", rocksdb = rocksDefault(spark)))
+      runToBatch(spark, best, "complete", rocksdb = true))
   }
 
   val oracle = Q25hAudioDedupStore.oracle
@@ -1402,7 +1306,7 @@ object S19StreamAnnIngest extends GraftQuery {
   * State per span hash is its delta occurrence list — bounded by the
   * shard's own multiplicity (a production shard's repeats of ONE
   * window are few; the base corpus's occurrences never enter state) —
-  * and state grows with the shard ⇒ RocksDB default (the s13 rule).
+  * and state grows with the shard ⇒ RocksDB (the s13 rule).
   */
 object S20StreamExcise extends GraftQuery {
   import StreamQueries._
@@ -1426,7 +1330,7 @@ object S20StreamExcise extends GraftQuery {
         collect_list(struct(col("doc_id"), col("i"))).as("occs"),
         count(col("in_store")).as("n_store"))
     val finalState = runToBatch(spark, state, "complete",
-      rocksdb = rocksDefault(spark))
+      rocksdb = true)
     val removals = finalState
       .select(col("keeper"), col("n_store"), explode(col("occs")).as("o"))
       .filter(col("n_store") > 0 ||
@@ -1507,8 +1411,7 @@ object S21StreamWarc extends GraftQuery {
   * batch path and the image/audio twins use (four consumers, one
   * implementation: the paths cannot drift); the single stateful
   * operator is the per-video best-base struct aggregation. State
-  * grows with the ingest, so the RocksDB default applies (the s13
-  * rule).
+  * grows with the ingest, so it runs under RocksDB (the s13 rule).
   *
   * Shares q25j's ALL-PAIRS oracle: the streamed banded verdicts must
   * equal the exhaustive batch decision — recall guarantee, store
@@ -1529,7 +1432,7 @@ object S22StreamVideoDedupStore extends GraftQuery {
           .filter(Q40TrainTestSplit.splitColOf("media_id") === "test")))
     val best = Q25jVideoDedupStore.store.verdictFrame(deltaFeats, store)
     Q25jVideoDedupStore.store.formatVerdicts(
-      runToBatch(spark, best, "complete", rocksdb = rocksDefault(spark)))
+      runToBatch(spark, best, "complete", rocksdb = true))
   }
 
   val oracle = Q25jVideoDedupStore.oracle

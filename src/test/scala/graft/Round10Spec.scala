@@ -133,34 +133,27 @@ class Round10Spec extends SparkSpec {
     assert(a == b)
   }
 
-  test("s12 runs under RocksDB by default, opt-out restores the heap store; results identical") {
+  test("s12 runs under RocksDB; a warm rerun gives identical results") {
     import graft.streaming.{StreamQueries, S12StreamDeltaDedup}
     def timed[A](body: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = body
       (a, (System.nanoTime() - t0) / 1e9)
     }
-    // Default path: RocksDB engages (its custom metrics are reported).
+    // RocksDB engages (its custom metrics are reported).
     val (viaRocks, tRocks) = timed(
       S12StreamDeltaDedup.run(spark, sf).collect().toSeq)
     assert(StreamQueries.lastStateMetrics
         .exists(_.toLowerCase.contains("rocksdb")),
       s"expected RocksDB metrics, got: ${StreamQueries.lastStateMetrics}")
-    // Opt-out path: heap store, identical rows.
-    val (viaHeap, tHeap) = withConfs(
-      "spark.graft.streaming.rocksdb" -> "false") {
-      timed(S12StreamDeltaDedup.run(spark, sf).collect().toSeq)
-    }
-    assert(!StreamQueries.lastStateMetrics
-      .exists(_.toLowerCase.contains("rocksdb")))
-    assert(viaRocks == viaHeap && viaRocks.nonEmpty)
+    assert(viaRocks.nonEmpty)
     // Per-trigger overhead, recorded for the BASELINE note. The first
     // RocksDB run pays the one-time native-library load + column
     // family setup; the warm run is the steady-state per-trigger cost.
     val (viaRocks2, tRocksWarm) = timed(
       S12StreamDeltaDedup.run(spark, sf).collect().toSeq)
-    assert(viaRocks2 == viaHeap)
+    assert(viaRocks2 == viaRocks)
     info(f"s12 single-trigger: rocksdb_cold=$tRocks%.2fs " +
-      f"rocksdb_warm=$tRocksWarm%.2fs heap=$tHeap%.2fs")
+      f"rocksdb_warm=$tRocksWarm%.2fs")
   }
 
   test("AsofJoinExec exposes SQL metrics: output/match/prune accounting holds") {

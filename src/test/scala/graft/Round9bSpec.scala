@@ -201,22 +201,54 @@ class Round9bSpec extends SparkSpec {
     val ids = (1L to 60L)
     val train = ids.filter(splitOf(_) == "train")
     val test = ids.filter(splitOf(_) == "test")
-    assert(train.size >= 2 && test.size >= 3)
+    assert(train.size >= 9 && test.size >= 7)
     val base1 = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     val base2 = "kilo lima mike november oscar papa quebec romeo sierra tango"
     val nearCopy = base2.replace("tango", "uniform") // last token: J = 16/20
+    val twoTok = "lone pair"
+    val twice = "red orange yellow green blue indigo violet black white grey"
+    val exact = "north south east west up down left right front back"
+    val tied = "ant bee cat dog eel fox gnu hen ibis jay"
     val dir = writeDocs(Seq(
       train(0) -> base1, train(1) -> base2,
       test(0) -> base1,              // exact dup of train(0)
       test(1) -> nearCopy,           // near dup of train(1)
-      test(2) -> "victor whiskey xray yankee zulu one two three four five"))
-    val out = Q57DeltaDedup.run(spark, dir).collect()
+      test(2) -> "victor whiskey xray yankee zulu one two three four five",
+      // 2 tokens: no shingles, so only the exact tier can catch it
+      train(2) -> twoTok, test(3) -> twoTok,
+      // exact copy of two train docs: the lower base id wins
+      train(4) -> twice, train(3) -> twice, test(4) -> twice,
+      // exact copy of train(6), near copy of the lower train(5): exact wins
+      train(5) -> exact.replace("back", "center"), train(6) -> exact,
+      test(5) -> exact,
+      // train(7) and train(8) differ only in whitespace, so their
+      // shingles (and est_jaccard) are equal: the lower base id wins
+      train(8) -> tied.replace(" ", "  "), train(7) -> tied,
+      test(6) -> tied.replace("jay", "kite")))
+    val rows = Q57DeltaDedup.run(spark, dir).collect().toSeq
+    val out = rows
       .map(r => r.getLong(0) -> ((r.getString(1),
         if (r.isNullAt(2)) -1L else r.getLong(2)))).toMap
     assert(out(test(0)) === (("exact_dup", train(0))))
     assert(out(test(1)) === (("near_dup", train(1))))
     assert(out(test(2))._1 === "new")
-    assert(out.size === 3) // every delta doc accounted for
+    assert(out(test(3)) === (("exact_dup", train(2))))
+    assert(out(test(4)) === (("exact_dup", train(3))))
+    assert(out(test(5)) === (("exact_dup", train(6))))
+    assert(out(test(6)) === (("near_dup", train(7))))
+    assert(out.size === 7) // every delta doc accounted for
+    // exact verdicts carry no estimate; the near ones carry k/32
+    rows.foreach { r =>
+      assert(r.isNullAt(3) === (r.getString(1) != "near_dup"), r.toString)
+    }
+    // the store (q57b), checkpoint-stream (s12) and store-stream (s12b)
+    // entries give the same rows over the same corpus
+    try {
+      Seq(Q57bDeltaDedupStore, graft.streaming.S12StreamDeltaDedup,
+          graft.streaming.S12bStreamDeltaDedupStore).foreach { q =>
+        assert(q.run(spark, dir).collect().toSeq === rows, q.name)
+      }
+    } finally graft.plans.Stores.evict(spark, "graft_sigstore")
   }
 
   // ---- q58 end-to-end assembly ---------------------------------------

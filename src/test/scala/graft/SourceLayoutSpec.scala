@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - its only entry points are `graft.Cli` (the reference job),
   *  `graft.Verify` (the correctness dump) and `graft.Bench` (the legacy
   *  floor check) — no one-off diagnostic mains, no second harness;
-  *  - it reads no JVM system property, so no `-D` setting can choose
-  *  between equivalent paths;
+  *  - it reads no JVM system property and no `spark.graft.*` session
+  *  setting, so no `-D` or `--conf` setting can choose between
+  *  equivalent paths;
   *  - bucketed writes go through `plans/Bucketing` alone (a build via
   *  `writeBucketed`, an admission via `appendBucketed`), so no store
   *  restates its bucket spec. */
@@ -53,6 +54,11 @@ class SourceLayoutSpec extends AnyFunSuite {
     val prop = raw"\bsys\.props\b|\bSystem\.getPropert(y|ies)\b".r
     val found = offenders(prop.findFirstIn(_).isDefined)
     assert(found.isEmpty, found.mkString("system property reads:\n", "\n", ""))
+  }
+
+  test("main code reads no spark.graft. session setting") {
+    val found = offenders(_.contains("\"spark.graft."))
+    assert(found.isEmpty, found.mkString("spark.graft.* settings:\n", "\n", ""))
   }
 
   test("main code writes bucketed tables only through plans/Bucketing") {
