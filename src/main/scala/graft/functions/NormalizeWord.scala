@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Un
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** R5 (the reference's `filterWord`, main.cpp:191-208) as a native
@@ -14,9 +15,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * UTF8String, no regex engine, no UDF serialization boundary.
   *
   * This is the pack's only word normalizer: Q1 (the reference job),
-  * S6 and every word-level query use it, through [[NormalizeWord.of]]
-  * on Columns (mostly via `InvertedIndex.words`) and as
-  * `graft_normalize_fast` inside SQL lambdas. It replaced
+  * S6 and every word-level query use its loop, [[NormalizeWord.letters]]:
+  * through the [[TokenizeWords]] generator (under `InvertedIndex.words`
+  * and Q1/S6's pairs), through [[NormalizeWord.of]] on Columns at the
+  * posexplode sites, and as `graft_normalize_fast` inside SQL lambdas.
+  * It replaced
   * `lower(regexp_replace(tok, '[^a-zA-Z]', ''))`, which gives the same
   * strings but runs a regex per token: on the reference job
   * (perfbench `cli_index`, 4-core VM) the scan → split → normalize
@@ -38,11 +41,30 @@ case class NormalizeWord(child: Expression)
   override def prettyName: String = "graft_normalize_fast"
 
   override protected def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].getBytes
-    val out = new Array[Byte](s.length)
+    val s = input.asInstanceOf[UTF8String]
+    NormalizeWord.letters(s.getBaseObject, s.getBaseOffset, s.numBytes)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.NormalizeWord.letters($c.getBaseObject(), $c.getBaseOffset(), $c.numBytes())")
+
+  override protected def withNewChildInternal(newChild: Expression): NormalizeWord =
+    copy(child = newChild)
+}
+
+object NormalizeWord {
+  /** The reference's `filterWord` loop over the `len` bytes at `offset`
+    * in `base` (a UTF8String's memory): keep `[A-Za-z]`, lowercased,
+    * drop every other byte. Read in place, so a tokenizer can normalize
+    * a token without first copying it out of its line. The one copy of
+    * the loop: the expression's interpreted and generated code and
+    * [[TokenizeWords]] all call it. */
+  def letters(base: AnyRef, offset: Long, len: Int): UTF8String = {
+    val out = new Array[Byte](len)
     var i = 0; var n = 0
-    while (i < s.length) {
-      val b = s(i)
+    while (i < len) {
+      val b = Platform.getByte(base, offset + i)
       if (b >= 'a' && b <= 'z') { out(n) = b; n += 1 }
       else if (b >= 'A' && b <= 'Z') { out(n) = (b + 32).toByte; n += 1 }
       i += 1
@@ -50,31 +72,6 @@ case class NormalizeWord(child: Expression)
     UTF8String.fromBytes(out, 0, n)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val b = ctx.freshName("b")
-      s"""
-         |byte[] $bytes = $c.getBytes();
-         |byte[] $out = new byte[$bytes.length];
-         |int $n = 0;
-         |for (int $i = 0; $i < $bytes.length; $i++) {
-         |  byte $b = $bytes[$i];
-         |  if ($b >= 'a' && $b <= 'z') { $out[$n++] = $b; }
-         |  else if ($b >= 'A' && $b <= 'Z') { $out[$n++] = (byte)($b + 32); }
-         |}
-         |${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromBytes($out, 0, $n);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): NormalizeWord =
-    copy(child = newChild)
-}
-
-object NormalizeWord {
   /** The normalizer as a Column, built from the expression itself: no
     * function-registry lookup, so a session without [[GraftExtensions]]
     * (an embedding app's, which `Cli` leaves untouched) runs it too. */

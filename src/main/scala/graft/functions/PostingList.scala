@@ -10,10 +10,9 @@ import org.apache.spark.sql.expressions.Aggregator
   * scalar normalizer udf: every query normalizes words with the codegen
   * [[NormalizeWord]] expression.
   *
-  * This is deliberately the ONLY extension point that drops out of
-  * whole-stage codegen: the hot Q1 path stays on built-in Catalyst
-  * expressions (`sort_array(collect_set)` — see InvertedIndex), and
-  * RelationalSpec pins the two paths to identical results.
+  * Q1's posting list stays on built-in Catalyst expressions
+  * (`sort_array(collect_set)` — see InvertedIndex); this udaf is q1b's,
+  * and RelationalSpec pins the two paths to identical results.
   * The buffer is a kryo-encoded mutable HashSet (see PostingListAgg's
   * own doc) — partial aggregates on the shuffle wire carry distinct
   * ids only, the same map-side-combine shape the reference hand-codes

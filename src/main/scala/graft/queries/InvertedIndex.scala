@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.NormalizeWord
+import graft.functions.TokenizeWords
 
 /** Q1 — the reference's entire program as one declarative plan.
   *
@@ -16,46 +16,51 @@ import graft.functions.NormalizeWord
   *  - posting lists ascending (main.cpp:126);
   *  - global order: document-frequency desc, word asc (main.cpp:81-91).
   *
-  * Normalization is [[NormalizeWord]], the reference's byte loop as
-  * a codegen'd expression: no regex engine runs per token.
+  * Tokenizing and normalization are [[TokenizeWords]]: one byte pass
+  * per line with the reference's `filterWord` loop, no regex engine.
   *
-  * Spark-first shape: scan→explode→project→filter→partial-distinct→
-  * shuffle on word→final agg. Catalyst plans the map-side partial
-  * aggregation that the reference hand-codes with per-thread maps and
-  * mutexes (main.cpp:234-258); the shuffle replaces its single-mutex
-  * pairwise merge loop (main.cpp:104-138), which BASELINE.md shows
-  * collapsing beyond 8 threads. At 100 TB: one wide shuffle keyed by
-  * word, no driver-side state, AQE handles stragglers/skew.
+  * Spark-first shape: scan→tokenize into per-task distinct (doc_id,
+  * word) pairs→partial collect_set→shuffle on word→final agg. The
+  * generator's per-task hash set is the reference's per-thread map
+  * (main.cpp:234-258); the shuffle replaces its single-mutex pairwise
+  * merge loop (main.cpp:104-138), which BASELINE.md shows collapsing
+  * beyond 8 threads. At 100 TB: one wide shuffle keyed by word, no
+  * driver-side state, AQE handles stragglers/skew.
   */
 object InvertedIndex extends GraftQuery {
   val name = "q1_inverted_index"
 
   /** (doc_id, word) pairs, normalized + per-document distinct. */
-  def wordDocPairs(docs: DataFrame): DataFrame = words(docs, "doc_id")
+  def wordDocPairs(docs: DataFrame): DataFrame = pairs(docs)
     .dropDuplicates("word", "doc_id")
 
+  /** The distinct (doc_id, word) pairs of each task (R4–R7): the
+    * combiner under Q1 and S6. Distinct per task only, so the consumer
+    * dedups; `bound` is the pairs a task holds before it emits them. */
+  private[graft] def pairs(docs: DataFrame,
+      bound: Int = TokenizeWords.Bound): DataFrame =
+    docs.select(TokenizeWords.pairs(col("doc_id"), col("text"), bound))
+
   /** The reference's tokenize + normalize (R4–R6): one row per
-    * non-empty normalized word of `text`, beside the `keep` columns.
-    * Every word-level query, S6 included, tokenizes through here. */
-  private[graft] def words(docs: DataFrame, keep: String*): DataFrame = {
-    val kept = keep.map(col)
-    docs.select(kept :+ explode(split(col("text"), "\\s+")).as("tok"): _*)
-      .select(kept :+ NormalizeWord.of(col("tok")).as("word"): _*)
-      .filter(col("word") =!= "")
-  }
+    * non-empty normalized word of `text`, in order, beside the `keep`
+    * columns. Every word-level query tokenizes through here or
+    * [[pairs]]. */
+  private[graft] def words(docs: DataFrame, keep: String*): DataFrame =
+    docs.select(keep.map(col) :+ TokenizeWords.words(col("text")): _*)
 
   /** One shuffle, not two: the per-document distinct (R7) is NOT a
-    * separate dropDuplicates exchange — collect_set dedups, and
-    * Catalyst's map-side partial aggregation performs the dedup
-    * before anything hits the wire (exactly the reference's local
-    * wordMap check, main.cpp:247-249). */
+    * separate dropDuplicates exchange. The tokenizer's per-task hash
+    * set drops repeats before any row reaches the aggregate, exactly
+    * the reference's local wordMap check (main.cpp:247-249);
+    * collect_set drops the repeats left between tasks. */
   def index(docs: DataFrame): DataFrame =
     indexWith(docs, sort_array(collect_set(col("doc_id"))))
 
   /** Q1's index with `postings` (ascending, distinct doc ids) as the
-    * posting-list aggregate. */
-  private[queries] def indexWith(docs: DataFrame, postings: Column): DataFrame =
-    words(docs, "doc_id")
+    * posting-list aggregate, over [[pairs]] with the given `bound`. */
+  private[graft] def indexWith(docs: DataFrame, postings: Column,
+      bound: Int = TokenizeWords.Bound): DataFrame =
+    pairs(docs, bound)
       .groupBy(col("word"))
       .agg(postings.as("doc_ids"))
       .select(

@@ -73,10 +73,11 @@ object Streams {
       .dropDuplicatesWithinWatermark("event_id")
 
   /** S6 — the reference's inverted index (Q1), incrementalized: Q1's
-    * own (doc_id, word) pairs, grouped in update mode. The posting list
-    * uses collect_set exactly like batch Q1 (R10/R11). */
+    * own per-task distinct (doc_id, word) pairs, grouped in update
+    * mode. The posting list uses collect_set exactly like batch Q1
+    * (R10/R11), which also drops the pairs two tasks both emit. */
   def incrementalInvertedIndex(docs: DataFrame): DataFrame =
-    graft.queries.InvertedIndex.words(docs, "doc_id")
+    graft.queries.InvertedIndex.pairs(docs)
       .groupBy(col("word"))
       .agg(sort_array(collect_set(col("doc_id"))).as("doc_ids"))
 

@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  equivalent paths;
   *  - bucketed writes go through `plans/Bucketing` alone (a build via
   *  `writeBucketed`, an admission via `appendBucketed`), so no store
-  *  restates its bucket spec. */
+  *  restates its bucket spec;
+  *  - Q1 and S6 tokenize through `TokenizeWords` alone, never a
+  *  whitespace split. */
 class SourceLayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
   private val entryPoints =
@@ -64,5 +66,11 @@ class SourceLayoutSpec extends AnyFunSuite {
   test("main code writes bucketed tables only through plans/Bucketing") {
     val found = offenders(_.contains(".bucketBy("), _ == "graft/plans/Bucketing.scala")
     assert(found.isEmpty, found.mkString("bucketBy outside plans/Bucketing:\n", "\n", ""))
+  }
+
+  test("Q1 and S6 tokenize without a split") {
+    val tokenizers = Set("graft/queries/InvertedIndex.scala", "graft/streaming/Streams.scala")
+    val found = offenders(_.contains("split("), rel => !tokenizers(rel))
+    assert(found.isEmpty, found.mkString("split in the Q1/S6 tokenizer:\n", "\n", ""))
   }
 }
