@@ -20,8 +20,30 @@ object Tables {
     * keeps its own inference setting. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     withConf(spark, Engine.InferNTZ, "false") {
-      spark.read.parquet(s"$dir/$name.parquet")
+      val path = s"$dir/$name.parquet"
+      val state = Seq(graft.plans.Stores.fingerprint(spark, dir, s"$name.parquet"),
+        spark.conf.getOption(Engine.NanosAsLong).getOrElse(""),
+        spark.conf.get(Engine.InferNTZ)).mkString("|")
+      val schema = schemas.get(path) match {
+        case (`state`, known) => known
+        case _ =>
+          val inferred = spark.read.parquet(path).schema
+          schemas.put(path, (state, inferred))
+          inferred
+      }
+      spark.read.schema(schema).parquet(path)
     }
+
+  /** The schema [[load]] inferred per fixture path, with the state it
+    * was inferred from: the file listing's names, lengths and mtimes
+    * (as [[graft.plans.Stores.fingerprint]] keys a store) and the two
+    * inference confs the loaders set (nanosAsLong, inferTimestampNTZ),
+    * each of which changes the inferred types. Inference is a
+    * one-task Spark job per call (120–155 ms of a ~2 s warm q57b serve,
+    * measured), while the schema only changes when the file does; a
+    * rewritten file is inferred again, and each path keeps one entry. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, org.apache.spark.sql.types.StructType)]()
 
   /** Set a conf for the duration of `body`, restoring (or unsetting)
     * after. Fixture loads are session-sequential, so the save/restore

@@ -180,7 +180,7 @@ object Q57bDeltaDedupStore extends GraftQuery {
       .join(baseBands.select(col("bkey"), col("doc_id").as("base_id"),
         col("sig").as("bsig")), "bkey")
       .select(col("doc_id"), col("base_id"),
-        expr(NorthStar.matchCountExpr("dsig", "bsig")).as("matches"))
+        graft.functions.MinHash.matchCount(col("dsig"), col("bsig")).as("matches"))
       .filter(col("matches") >= 16) // est_jaccard >= 0.5
       .select(col("doc_id"), lit(1).as("pri"),
         (lit(32) - col("matches")).as("negest"), col("base_id"))

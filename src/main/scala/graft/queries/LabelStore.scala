@@ -117,7 +117,7 @@ object Q18gDedupLabelsStore extends GraftQuery {
       .join(bstore, "bkey")
       .dropDuplicates("delta_id", "cand")
       .select(col("delta_id"), col("cand"),
-        (expr(NorthStar.matchCountExpr("dsig", "bsig")).cast("double") / 32.0)
+        (graft.functions.MinHash.matchCount(col("dsig"), col("bsig")).cast("double") / 32.0)
           .as("est_jaccard"))
       .filter(col("est_jaccard") >= 0.5)
       .withColumn("rk", row_number().over(Window.partitionBy(col("delta_id"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.functions.NormalizeWord
+import graft.functions.{MinHash, NormalizeWord}
 
 /** Q18–Q24 — the LLM-training-data pipeline surface (north star):
   * deduplication (exact, MinHash+LSH, SimHash, n-gram Jaccard with
@@ -35,29 +35,17 @@ import graft.functions.NormalizeWord
   *    match Spark's int64 (this, not regex dialect, broke q23 in r1).
   */
 object NorthStar {
-  /** MinHash permutation/hash constants, shared by q18b's flat-agg
-    * pipeline, s12's per-row HOF pipeline, and (as literals) the
-    * DuckDB oracle CTEs — ONE definition, so the tiers cannot
-    * silently desynchronize from the oracle they share. Defined
-    * before every use site (vals initialize in declaration order). */
-  private[graft] val MinhashP = 1000000007L
-  private[graft] val MinhashA = 2654435761L
-  private[graft] val MinhashB = 40503L
-  /** md5-based shingle hash over SQL variable `v`. */
-  private[graft] def shingleHashExpr(v: String): String =
-    s"cast(conv(substring(md5($v), 1, 15), 16, 10) as bigint) % $MinhashP"
   /** 8 band keys (4 signature slots each) over signature array `sig` —
-    * the banding GEOMETRY, shared by q18b's flat-agg pipeline and
-    * s12's per-row pipeline like the constants above: band width/count
-    * changed in one place changes every tier or none. */
+    * the banding GEOMETRY over [[graft.functions.MinHash]]'s 32
+    * permutations, shared by every batch and streaming signature site
+    * through [[Q18bDedupMinHash.bandRows]]: band width/count changed in
+    * one place changes every tier or none. The permutation constants
+    * live with the kernel ([[graft.functions.MinHash]]); the DuckDB
+    * oracle CTEs repeat them as literals. */
   private[graft] def bandKeysExpr(sig: String): String =
     s"transform(sequence(0, 7), j_ -> concat_ws(',', cast(j_ as string), " +
       s"element_at($sig, 4*j_+1), element_at($sig, 4*j_+2), " +
       s"element_at($sig, 4*j_+3), element_at($sig, 4*j_+4)))"
-  /** Codegen'd 32-term signature match count between arrays `a`/`b`. */
-  private[graft] def matchCountExpr(a: String, b: String): String = (1 to 32)
-    .map(i => s"IF(element_at($a, $i) = element_at($b, $i), 1, 0)")
-    .mkString(" + ")
   /** Embedding dimension — fixed by the fixture schema (FIXTURES.md:
     * `embedding ARRAY<FLOAT>` dim 64); at scale the dimension is
     * likewise known at plan time, so the per-pair arithmetic can be a
@@ -319,48 +307,50 @@ object Q18DedupExact extends GraftQuery {
   * engines. 8 bands × 4 rows; candidate pairs share a band key;
   * estimated Jaccard = matching-signature fraction.
   *
-  * Scale shape: signatures are computed per-row (no shuffle); the
-  * only shuffles are the band-key self-join and the distinct — both
-  * keyed on band digests, so buckets are tiny unless the docs really
-  * collide (AQE skew-join absorbs pathological clusters). At 100 TB
-  * the corpus passes through md5 exactly once (round 1 did 32×,
-  * 513 s of the 797 s bench). */
+  * Scale shape: signatures are computed per row by the native kernel
+  * ([[graft.functions.MinHash]]) — a projection, no shuffle. The
+  * shuffles are the `doc_id` repartition that materializes the
+  * signatures once for both band-join sides, the band-key self-join
+  * and the distinct — the last two keyed on band digests, so buckets
+  * are tiny unless the docs really collide (AQE skew-join absorbs
+  * pathological clusters). At 100 TB the corpus passes through md5
+  * exactly once (round 1 did 32×, 513 s of the 797 s bench). */
 object Q18bDedupMinHash extends GraftQuery {
   import NorthStar._
   val name = "q18b_dedup_minhash"
   def run(spark: SparkSession, dir: String): DataFrame =
     pairsFrom(shingleSets(spark, dir)).orderBy(col("doc_a"), col("doc_b"))
-  /** Signature stage — (doc_id, sig[32]) — as explode + 32 flat
-    * codegen'd min aggregations (the q18c vote-sum pattern): each
-    * shingle becomes a row, is md5-hashed ONCE via native conv()
-    * (codegen'd — the interpreted 15-step fold was round 1's residual
-    * hot spot), and the 32 arithmetic permutations reduce as min()
-    * columns in ONE whole-stage-codegen'd hash aggregation with
-    * map-side partial combine — round 3 evaluated them as 32
-    * interpreted array_min passes over each doc's hash array. The
-    * DuckDB oracle computes the same VALUES with list folds; method
-    * need not match. Shared by pairsFrom (self-join dedup) and
-    * [[bandRows]] (the dedup stores' rows, and every batch delta
-    * judged against them) so the tiers can never drift. */
-  private[graft] def signatures(shingles: DataFrame): DataFrame = {
-    val shex = shingles.select(col("doc_id"), explode(col("sh")).as("s"))
-      .select(col("doc_id"), expr(NorthStar.shingleHashExpr("s")).as("h"))
-    val permCols = (0 until 32).map { i =>
-      min(expr(s"(((${NorthStar.MinhashA} * ${i + 1}) % ${NorthStar.MinhashP}) * h + " +
-        s"((${NorthStar.MinhashB} * ${i + 1} + 7) % ${NorthStar.MinhashP})) % ${NorthStar.MinhashP}")).as(s"m$i")
-    }
-    shex.groupBy(col("doc_id")).agg(permCols.head, permCols.tail: _*)
-      .select(col("doc_id"),
-        array((0 until 32).map(i => col(s"m$i")): _*).as("sig"))
-  }
+  /** Signature stage — (doc_id, sig[32]) of a (doc_id, sh) shingle
+    * frame — as ONE projection through the native kernel
+    * ([[graft.functions.MinHash.signature]]): md5 once per shingle, 32
+    * permutation minima per row, no explode, no aggregation, no
+    * exchange. Rows with an empty or null shingle array are dropped
+    * (no shingle, no signature). The DuckDB oracle computes the same
+    * VALUES with list folds; method need not match. pairsFrom
+    * (self-join dedup) and [[bandRows]] (the dedup stores' rows, and
+    * every batch or streaming delta judged against them) run the same
+    * projection through [[signed]], so the tiers can never drift. */
+  private[graft] def signatures(shingles: DataFrame): DataFrame =
+    signed(shingles.filter(size(col("sh")) > 0))
 
-  /** (doc_id, sig, bkey) MinHash band rows of a (doc_id, text) frame —
-    * one row per band key of each doc with ≥ 3 tokens. The band-index
+  /** [[signatures]] without the drop, for shingle frames of ≥ 3-token
+    * docs, which are never empty: Catalyst pushes a filter on `sh`
+    * below the shingle projection, so every shingle array would be
+    * built twice (measured on sf0.1 shingle sets: 374 ms with the
+    * filter, 243 ms without, median of 7 noop writes). */
+  private def signed(shingles: DataFrame): DataFrame =
+    shingles.select(col("doc_id"), MinHash.signature(col("sh")).as("sig"))
+
+  /** (doc_id, sig, bkey) MinHash band rows of a (doc_id, text) frame,
+    * batch or streaming — one row per band key of each doc with ≥ 3
+    * tokens, map-only (a per-row signature needs no aggregation, so a
+    * stream can run it before its stateful verdict). The band-index
     * shape of the persisted dedup stores (q57b's signature store,
     * q18g's labels store), shared by their builds and admits, q57's
-    * per-run base and every batch delta judged against them. */
+    * per-run base and every delta judged against them — q57, q57b,
+    * s12 and s12b. */
   private[graft] def bandRows(docs: DataFrame): DataFrame =
-    signatures(
+    signed(
         docs.select(col("doc_id"), expr(NorthStar.toksExpr).as("t"))
           .filter(size(col("t")) >= 3)
           .select(col("doc_id"),
@@ -376,20 +366,17 @@ object Q18bDedupMinHash extends GraftQuery {
     * frame so its two pair pipelines share one computation). */
   private[queries] def pairsFrom(shingles: DataFrame): DataFrame = {
     // The explicit repartition is the materialization barrier (sig is
-    // referenced from both band-join sides + the verify columns). It
-    // is NOT redundant: when the caller hands an already-doc_id-
-    // partitioned shingle frame (q18f's anchor), the groupBy inserts
-    // no exchange of its own, and without any barrier the whole
-    // signature pipeline re-runs per plan branch (measured 8 s → 30 s
-    // for q18f). One tiny shuffle of (doc_id, 32×int64) rows.
-    val sig = signatures(shingles).repartition(col("doc_id"))
+    // referenced from both band-join sides + the verify columns): the
+    // signature projection has no exchange of its own, so without a
+    // barrier the whole signature pipeline re-runs per plan branch
+    // (measured 8 s → 30 s for q18f, when a groupBy computed it). One
+    // tiny shuffle of (doc_id, 32×int64) rows, reused by both sides.
+    val sig = signed(shingles).repartition(col("doc_id"))
     // sig rides along through the band join: Spark does not share DAG
     // subtrees, so separate sa/sb join branches would re-run the whole
     // signature pipeline twice more.
     val bands = sig.select(col("doc_id"), col("sig"),
       explode(expr(let("sg", "sig", NorthStar.bandKeysExpr("sg")))).as("bkey"))
-    // codegen'd 32-term match count (no per-pair interpreted HOF)
-    val matches = NorthStar.matchCountExpr("sa", "sb")
     bands.as("a")
       .join(bands.as("b"),
         col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
@@ -408,7 +395,8 @@ object Q18bDedupMinHash extends GraftQuery {
       // the multiple structure explicitly.
       .observe("q18b_band_stats", count(lit(1)).as("candidate_pairs"))
       .select(col("doc_a"), col("doc_b"),
-        (expr(matches).cast("double") / 32.0).as("est_jaccard"))
+        (MinHash.matchCount(col("sa"), col("sb"))
+          .cast("double") / 32.0).as("est_jaccard"))
       .filter(col("est_jaccard") >= 0.5)
       .observe("q18b_verify_stats", count(lit(1)).as("verified_pairs"))
   }
@@ -2536,7 +2524,7 @@ object Q75dFusionQueryTables extends GraftQuery {
   * drops anchor/positive/near-dup-of-anchor candidates, and takes
   * the candidate with the smallest per-triplet pick hash — a
   * deterministic pseudo-random draw both engines replay bit-for-bit
-  * (the shingleHashExpr md5 technique; no engine-local RNG). B is a
+  * (the MinHash shingle-hash md5 technique; no engine-local RNG). B is a
   * fixture constant here; production sizes B ∝ corpus so the probe
   * join's bucket width (N/B rows per triplet) stays constant.
   *
@@ -2548,7 +2536,7 @@ object Q76ContrastiveTriplets extends GraftQuery {
   val name = "q76_contrastive_triplets"
   private val B = 64
   /** Portable 60-bit hash (Spark side): conv(md5 hex prefix) — the
-    * cross-engine pattern shingleHashExpr established. */
+    * cross-engine pattern q18b's shingle hash established. */
   private def h(x: String) =
     s"cast(conv(substring(md5($x), 1, 15), 16, 10) as bigint)"
   /** Same value in DuckDB: hex-fold of the md5 prefix. */

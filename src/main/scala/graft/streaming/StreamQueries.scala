@@ -592,45 +592,13 @@ object S11StreamCuration extends GraftQuery {
   * .verdictFrame]]: its three branches are stateless stream-static
   * joins and projections, and its one aggregation per doc is the
   * stream's only stateful operator (state bounded by the delta, not
-  * the corpus; RocksDB state store).
-  *
-  * The delta side has its own signature stage, on purpose: a stream
-  * cannot aggregate before its stateful verdict (two chained
-  * stateful operators), so [[bandRows]] computes each signature PER
-  * ROW with higher-order functions (32 array_min folds over the
-  * shingle hashes) where the batch delta keeps q18b's flat
-  * aggregation. Same VALUES — method independence is what the shared
-  * q57 oracle proves. */
+  * the corpus; RocksDB state store). The delta's band rows are the
+  * batch's ([[graft.queries.Q18bDedupMinHash.bandRows]]): a per-row
+  * signature is map-only, so nothing aggregates before the verdict. */
 object S12StreamDeltaDedup extends GraftQuery {
   import StreamQueries._
-  import graft.queries.{NorthStar, Q40TrainTestSplit, Q57bDeltaDedupStore, Q57DeltaDedup}
+  import graft.queries.{Q18bDedupMinHash, Q40TrainTestSplit, Q57bDeltaDedupStore, Q57DeltaDedup}
   val name = "s12_stream_delta_dedup"
-
-  /** Per-row MinHash fold, built from NorthStar's shared constants —
-    * same values as q18b's aggregation. */
-  private val sigExpr =
-    s"transform(sequence(1, 32), i_ -> array_min(transform(hs, h_ -> " +
-      s"(((${NorthStar.MinhashA} * i_) % ${NorthStar.MinhashP}) * h_ + " +
-      s"((${NorthStar.MinhashB} * i_ + 7) % ${NorthStar.MinhashP})) % ${NorthStar.MinhashP})))"
-
-  /** (doc_id, sig, bkey) band rows of a STREAMING (doc_id, text) frame
-    * — the shape of [[graft.queries.Q18bDedupMinHash.bandRows]],
-    * without its aggregation. */
-  private def bandRows(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), expr(NorthStar.toksExpr).as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("doc_id"),
-        expr(NorthStar.let("t", "t", NorthStar.shinglesExpr)).as("sh"))
-      // `hs` is a let-bound LAMBDA variable, not a projection alias:
-      // CollapseProject inlines a single-referenced alias into the
-      // 32-iteration signature fold — md5 per shingle 32x per row,
-      // the exact measured regression q18b/q18c's notes price out —
-      // but it cannot inline through a lambda binding.
-      .select(col("doc_id"), expr(NorthStar.let("hs",
-        s"transform(sh, s_ -> ${NorthStar.shingleHashExpr("s_")})",
-        sigExpr)).as("sig"))
-      .select(col("doc_id"), col("sig"), explode(expr(NorthStar.let("sg", "sig",
-        NorthStar.bandKeysExpr("sg")))).as("bkey"))
 
   /** The stream serve over any base side — s12's checkpointed rows or
     * s12b's store tables, both in the store's row shapes. */
@@ -639,7 +607,8 @@ object S12StreamDeltaDedup extends GraftQuery {
     val delta = docsStream(spark, dir)
       .filter(Q40TrainTestSplit.splitCol === "test")
     val best = Q57bDeltaDedupStore.verdictFrame(
-      Q57bDeltaDedupStore.exactRows(delta), bandRows(delta), baseHash, baseBands)
+      Q57bDeltaDedupStore.exactRows(delta), Q18bDedupMinHash.bandRows(delta),
+      baseHash, baseBands)
     Q57bDeltaDedupStore.formatVerdicts(
       runToBatch(spark, best, "complete", rocksdb = true))
   }

@@ -16,7 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  `writeBucketed`, an admission via `appendBucketed`), so no store
   *  restates its bucket spec;
   *  - Q1 and S6 tokenize through `TokenizeWords` alone, never a
-  *  whitespace split. */
+  *  whitespace split;
+  *  - MinHash signatures and match counts come from the
+  *  `functions/MinHash` kernel alone: no `array_min` signature folds,
+  *  no 32-term match-count chain. */
 class SourceLayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
   private val entryPoints =
@@ -72,5 +75,10 @@ class SourceLayoutSpec extends AnyFunSuite {
     val tokenizers = Set("graft/queries/InvertedIndex.scala", "graft/streaming/Streams.scala")
     val found = offenders(_.contains("split("), rel => !tokenizers(rel))
     assert(found.isEmpty, found.mkString("split in the Q1/S6 tokenizer:\n", "\n", ""))
+  }
+
+  test("MinHash signatures and match counts come from the kernel alone") {
+    val found = offenders(l => l.contains("array_min(transform(") || l.contains("matchCountExpr"))
+    assert(found.isEmpty, found.mkString("MinHash outside functions/MinHash:\n", "\n", ""))
   }
 }

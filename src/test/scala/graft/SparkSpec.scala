@@ -51,6 +51,47 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Run `body` and return the Spark jobs it started and the query
+    * executions it finished (batch actions and stream micro-batches).
+    * Listener events arrive asynchronously but in order, so a marker
+    * query run after `body` bounds the wait: once the marker's job and
+    * execution are seen, everything `body` posted has been too. */
+  def listened(body: => Unit): (Int, Seq[org.apache.spark.sql.execution.QueryExecution]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val marker = s"listened_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = qes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = qes.add(qe)
+    }
+    def isMarker(qe: QueryExecution) = qe.analyzed.output.exists(_.name == marker)
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
+    try {
+      body
+      spark.sparkContext.setJobGroup(marker, marker)
+      try spark.range(1).select(org.apache.spark.sql.functions.lit(1).as(marker)).collect()
+      finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (!(jobs.contains(marker) && qes.stream.anyMatch(isMarker(_))) &&
+          System.nanoTime < deadline) Thread.sleep(20)
+      assert(jobs.contains(marker), "marker job never reached the listener")
+      import scala.jdk.CollectionConverters._
+      (jobs.asScala.takeWhile(_ != marker).size, qes.asScala.takeWhile(!isMarker(_)).toSeq)
+    } finally {
+      spark.sparkContext.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(qeListener)
+    }
+  }
+
   /** Scope session confs to a block, restoring (or unsetting) after —
     * shared by the plan-posture specs that lower AQE/bloom
     * thresholds for fixture-scale data. */
